@@ -170,7 +170,9 @@ class WriteConfig:
     # range) and drives read-side data skipping via HudiTable.read_filtered
     stats_columns: tuple = ()
     # batches up to this many rows broadcast their key set to prune the index
-    # scan (indexing.tag_locations) instead of shuffling/building it
+    # scan (indexing.tag_locations) instead of shuffling/building it; on COW
+    # they also take the broadcast anti-join rewrite instead of the window
+    # merge (HudiTable._write_batch picks the lane)
     index_broadcast_max_rows: int = 1_000_000
     # SIMPLE index: pin the scanned key→file-group index as a persisted
     # DataFrame on the table object across batches (same machinery as
@@ -196,34 +198,6 @@ class WriteConfig:
     # in the new (hoodie.bloom/simple.index.update.partition.path,
     # SparkHoodieGlobalBloomIndex.java:143)
     global_index_update_partition_path: bool = False
-    # COW rewrite strategy: None = auto (broadcast anti-join pass-through when
-    # the batch is broadcastable AND semantically eligible — new-commit-wins
-    # payload, preCombined batch — else the per-file-group window merge).
-    # True forces the broadcast path whenever semantically eligible (skips
-    # the size guard only); False always uses the window merge.
-    cow_broadcast_merge: Optional[bool] = None
-    # COW fast-lane pre-write probe strategy:
-    #   "auto" (default) — per batch: "warm_tag" when the previous batch's
-    #                row count says the batch touches a MINORITY of file
-    #                groups (keys < 0.5 × groups — the point-fix/CDC/GDPR
-    #                shape), else "profile" (the full-spread shape).  First
-    #                batch runs "profile" (no history).  Homogeneous
-    #                workloads are routed correctly from batch 2.
-    #   "warm_tag" — with a warm cached index: bounded limit(cap+1) size
-    #                probe + one tag-profile action over the PINNED index.
-    #                The rewrite set is EXACT, so a point-fix batch on an
-    #                unsorted layout rewrites only the groups that hold
-    #                batch keys (measured 17 vs 210 groups, ~40% faster
-    #                wall at sf0.1 — and the difference between a bounded
-    #                write and a partition rewrite at 120 MB group sizes);
-    #                ~5% slower on full-spread batches (interleaved A/Bs,
-    #                BASELINE.md).  Falls back to "profile" while the
-    #                cache is cold.
-    #   "profile"  — one per-batch workload-profile action over the raw
-    #                keyed batch (count/min/max per partition); tagging
-    #                fuses into the write job; rewrite set = manifest-stats
-    #                superset (+ bloom second stage when a sidecar exists).
-    fast_lane_probe: str = "auto"
     # MOR merged read/compaction: when a dirty slice-set's total log bytes is
     # under this, the base side is split by a broadcast of the log key set —
     # untouched keys pass through in their scan partitions (ZERO shuffle of
@@ -233,22 +207,6 @@ class WriteConfig:
     # write a metadata-table view checkpoint every N data commits
     # (HoodieBackedTableMetadataWriter sync cadence; 0 disables)
     metadata_checkpoint_commits: int = 10
-    # MOR grouped delta files: a small update batch writes ONE (or a few,
-    # AQE-sized) shared delta files per commit instead of one tiny file per
-    # touched file group — the engine's answer to the reference's appendable
-    # per-group avro logs (HoodieAppendHandle rolls blocks into one growing
-    # log; parquet can't append, so grouping bounds the small-file count the
-    # same way).  Rows carry their file group in _hoodie_file_name; the
-    # manifest records exact per-(group, file) membership, reads dedupe the
-    # shared paths and filter to the selected groups, and the cleaner only
-    # deletes a shared file when no retained slice references it.
-    mor_grouped_deltas: bool = True
-
-    def __post_init__(self):
-        if self.fast_lane_probe not in ("auto", "profile", "warm_tag"):
-            raise ValueError(
-                f"fast_lane_probe must be 'auto', 'profile' or 'warm_tag', "
-                f"got {self.fast_lane_probe!r}")
 
     def with_(self, **kw) -> "WriteConfig":
         return replace(self, **kw)

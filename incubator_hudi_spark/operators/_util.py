@@ -14,10 +14,30 @@ def checkpoint(df: DataFrame, checkpoint_dir: Optional[str],
     executor-local — blocks lost to executor failure are unrecoverable), or
     a RELIABLE ``checkpoint`` when ``checkpoint_dir`` is set (survives
     executor loss; pass an HDFS/object-store path on long-lived clusters).
-    Results are identical either way."""
+    Results are identical either way.
+
+    The checkpoint dir is session-global state, so it is set only when the
+    session has none; a session already checkpointing under the same dir
+    keeps it, and one checkpointing elsewhere raises ``ValueError`` rather
+    than being redirected under another writer's feet."""
     if checkpoint_dir is None:
         return df.localCheckpoint(eager=eager)
-    df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    sc = df.sparkSession.sparkContext
+    current = sc.getCheckpointDir()
+    if current is None:
+        sc.setCheckpointDir(checkpoint_dir)
+    else:
+        # Spark checkpoints under a fresh <dir>/<uuid> subdirectory,
+        # stored fully qualified
+        jpath = sc._jvm.org.apache.hadoop.fs.Path
+        want = jpath(checkpoint_dir)
+        want = want.getFileSystem(sc._jsc.hadoopConfiguration()) \
+                   .makeQualified(want)
+        if not jpath(current).getParent().equals(want):
+            raise ValueError(
+                f"checkpoint_dir {checkpoint_dir!r} conflicts with the "
+                f"session's checkpoint dir {current!r}; pass the same dir "
+                "or None")
     return df.checkpoint(eager=eager)
 
 

@@ -161,7 +161,6 @@ def range_split_points(prepared: DataFrame, plan: list[InsertBucket],
                        profile: dict[str, int],
                        partition_col: str, key_col: str,
                        samples_per_bucket: int = SAMPLES_PER_BUCKET,
-                       samples: Optional[dict[str, list[str]]] = None,
                        splits: Optional[dict[str, list[str]]] = None
                        ) -> dict[str, list[str]]:
     """Per-partition key split points for GLOBAL_SORT assignment
@@ -176,11 +175,7 @@ def range_split_points(prepared: DataFrame, plan: list[InsertBucket],
     driver never sees raw sampled keys); NO Spark job runs here and this
     function only subsets to the >1-bucket partitions.
 
-    ``samples``: raw key samples gathered by the caller (the r6 fused
-    shape) — no Spark job runs, split selection happens here on the
-    driver.  Kept for callers that fuse sampling but not selection.
-
-    With neither, one sampling job runs (the pre-r6 shape, kept for
+    Without ``splits``, one sampling job runs (the pre-r6 shape, kept for
     callers that profile a different frame than they assign).  Note the
     ``max(samples_per_bucket·k, 50)`` per-partition sample floor applies
     only to this fallback path; the fused paths use a uniform count-free
@@ -194,29 +189,25 @@ def range_split_points(prepared: DataFrame, plan: list[InsertBucket],
         return {}
     if splits is not None:
         return {p: list(splits.get(p, [])) for p in need}
-    by_p: dict[str, list[str]]
-    if samples is not None:
-        by_p = {p: list(samples.get(p, [])) for p in need}
-    else:
-        fracs = {p: min(1.0, max(samples_per_bucket * k, 50)
-                        / max(1, profile.get(p, 1)))
-                 for p, k in need.items()}
-        frac_map = F.create_map(*[x for p, fr in fracs.items()
-                                  for x in (F.lit(p), F.lit(fr))])
-        sampled = (prepared
-                   .select(F.col(partition_col).alias("_p"),
-                           F.col(key_col).alias("_k"))
-                   .filter(F.col("_p").isin(list(need)))
-                   # null record keys would crash sorted() below (str/None);
-                   # drop them like the fused path's when()→null does —
-                   # assign_insert_buckets_range coalesces nulls into the
-                   # first interval either way
-                   .filter(F.col("_k").isNotNull())
-                   .filter(F.rand(46474747) < frac_map[F.col("_p")])
-                   .collect())
-        by_p = defaultdict(list)
-        for r in sampled:
-            by_p[r[0]].append(r[1])
+    fracs = {p: min(1.0, max(samples_per_bucket * k, 50)
+                    / max(1, profile.get(p, 1)))
+             for p, k in need.items()}
+    frac_map = F.create_map(*[x for p, fr in fracs.items()
+                              for x in (F.lit(p), F.lit(fr))])
+    sampled = (prepared
+               .select(F.col(partition_col).alias("_p"),
+                       F.col(key_col).alias("_k"))
+               .filter(F.col("_p").isin(list(need)))
+               # null record keys would crash sorted() below (str/None);
+               # drop them like the fused path's when()→null does —
+               # assign_insert_buckets_range coalesces nulls into the
+               # first interval either way
+               .filter(F.col("_k").isNotNull())
+               .filter(F.rand(46474747) < frac_map[F.col("_p")])
+               .collect())
+    by_p: dict[str, list[str]] = defaultdict(list)
+    for r in sampled:
+        by_p[r[0]].append(r[1])
     out = {}
     for p, k in need.items():
         ks = sorted(by_p.get(p, []))

@@ -44,7 +44,7 @@ from .keygen import partition_path_col, record_key_col
 from .metaclient import TableMetaClient
 from .plans.buckets import (assign_insert_buckets, avg_record_size,
                             new_fg_id, plan_insert_buckets)
-from .writer import (API_DELETE, FG, MERGE_KEY, NEW_FLAG, collect_write_stats,
+from .writer import (API_DELETE, FG, MERGE_KEY, NEW_FLAG,
                      drop_deleted, merge_latest, ordered_meta_projection,
                      precombine_dedup_in_bucket,
                      precombine_dedup, with_commit_meta, with_key_columns,
@@ -484,13 +484,10 @@ class HudiTable:
                                    self.cfg.record_size_estimate)
         # GLOBAL_SORT all-new-bucket loads (bulk_insert / insert_overwrite*)
         # fold the range-split key sampling AND split-point selection into
-        # the profile aggregation (r6 fused the sampling — 3 input scans →
-        # 2; r7 distributes the selection — the driver collects O(buckets)
-        # split points, never raw sampled keys; see fused_profile_splits).
-        # Requires a keyed profile frame: a keyless profile_df (no current
-        # caller) must NOT silently switch the counted frame to `prepared`
-        # (ADVICE r6) — it falls back to the unfused count + legacy
-        # sampling of `prepared` below.
+        # the profile aggregation: the driver collects O(buckets) split
+        # points, never raw sampled keys (fused_profile_splits).  A keyless
+        # profile frame falls back to the unfused count + sampling of
+        # `prepared` below.
         sample_splits = None
         with _stage("insert.profile"):
             src = profile_df if profile_df is not None else prepared
@@ -554,16 +551,11 @@ class HudiTable:
         sort_cols = self._sort_cols(sort_mode)
         schema = self._commit_schema(assigned)
         # INMEMORY index bootstrap: a write into an EMPTY table IS the whole
-        # table — the batch's (key, partition, fg) columns are exactly what
-        # load_key_index would re-scan from the just-written files.  Persist
-        # the write frame so the index projection comes off the cache instead
-        # of a table-sized parquet re-scan on the next upsert (the reference
-        # similarly feeds write locations back into its index,
-        # HoodieIndex.updateLocation).  Empty-table-only (otherwise stored
-        # rows outside the batch would be missing), and only when the caller
-        # opts in: the persist adds columnar-cache encode cost to the write
-        # job, which pays off on upsert-style ingests (the next op is almost
-        # certainly another upsert) but not on one-shot bulk loads.
+        # table, so the write frame's (key, partition, fg) columns are the
+        # key index (the reference likewise feeds write locations back,
+        # HoodieIndex.updateLocation).  Empty-table-only, and only when the
+        # caller opts in: the persist adds columnar-cache encode cost that
+        # pays off when the next op is another upsert, not on bulk loads.
         seed_index = (seed_key_index
                       and self._index_cache_on
                       and not view.latest_slices())
@@ -663,6 +655,10 @@ class HudiTable:
 
     def _upsert_impl(self, df: DataFrame, operation: str,
                      commit_extras: Optional[dict] = None) -> str:
+        """Upsert and delete as one chain: view → tag → route → write →
+        commit (BaseSparkCommitActionExecutor.java:112-145).  A batch into
+        an empty table is all inserts; every other batch goes through
+        _write_batch."""
         is_delete = operation == DELETE
         action = (tl.DELTA_COMMIT if self.tc.table_type == MERGE_ON_READ
                   else tl.COMMIT)
@@ -678,8 +674,6 @@ class HudiTable:
         # identical partition set, conservative (≥) counts and key ranges —
         # so the preCombine shuffle never materializes just to be counted
         profile_src = with_key_columns(df, self.tc)
-        persisted = False
-        tagged = None
         try:
             # ONE active-timeline listing per batch: the cache-validity
             # token, the pending-compaction set, and the file-system view
@@ -692,65 +686,24 @@ class HudiTable:
             with _stage("upsert.view"):
                 tok0 = (self._data_instants_token(active)
                         if self._index_cache_on else None)
-                # pending compactions from the SAME snapshot as the view:
-                # every compaction is either (a) pending in the snapshot →
-                # logs get bumped to its instant, or (b) completed in it →
-                # the view's latest slice IS its new base.  (A mixed read
-                # order loses writes: stale view base + empty pending →
-                # orphaned log.)
-                pending_compaction: dict[str, str] = {}
-                if self.tc.table_type == MERGE_ON_READ:
-                    for p in tl.pending_from(active):
-                        if p.action != tl.COMPACTION:
-                            continue
-                        # the async compactor may TRANSITION this instant
-                        # between our listing and this read (requested →
-                        # inflight deletes the requested file; completion
-                        # lands as a .commit).  Chase the plan through the
-                        # states; a compaction that completed AFTER the
-                        # snapshot must still bump logs to its instant —
-                        # the snapshot view predates its new base, so (a)
-                        # of the invariant applies, with the fgs taken
-                        # from the completed commit's write stats.
-                        plan = None
-                        for st in (p.state, tl.REQUESTED, tl.INFLIGHT):
-                            try:
-                                plan = self.timeline.read_metadata(
-                                    tl.Instant(p.time, tl.COMPACTION, st))
-                                break
-                            except FileNotFoundError:
-                                continue
-                        if plan is not None:
-                            fgs = [op["file_group"]
-                                   for op in plan.get("operations", [])]
-                        else:
-                            try:
-                                done_md = self.timeline.read_metadata(
-                                    tl.Instant(p.time, tl.COMMIT,
-                                               tl.COMPLETED))
-                            except FileNotFoundError:
-                                continue  # rolled back/unscheduled mid-race
-                            fgs = [s["file_group"] for s in
-                                   done_md.get("write_stats", [])]
-                        for fg in fgs:
-                            pending_compaction[fg] = max(
-                                pending_compaction.get(fg, ""), p.time)
+                pending_compaction = self._pending_compactions(active)
                 # file groups frozen by a scheduled clustering plan:
                 # updates/deletes that touch them are rejected
                 # (SparkRejectUpdateStrategy) — checked exactly against the
-                # tagged batch in each lane below
+                # tagged batch in each lane
                 from .services.clustering import pending_clustering_fgs
                 frozen_fgs = set(pending_clustering_fgs(self, active))
                 view = self.view(active_instants=active)
+                slices = view.latest_slices()
             if self._index_cache_on and self._key_index is not None:
                 if self._token_still_valid(self._key_index_valid_token, tok0):
                     # archival-only shrink keeps the cache; re-stamp so the
-                    # equality checks below (cache_covers, _load_index) and
-                    # the own-commit extension all work from tok0
+                    # equality checks in the lanes and the own-commit
+                    # extension below all work from tok0
                     self._key_index_valid_token = tok0
                 else:
                     self._invalidate_key_index()
-            if not is_delete and not view.latest_slices():
+            if not is_delete and not slices:
                 # first commit into an empty table: every record is an
                 # insert — skip index load, tagging, and the merge window
                 # (tagging against an empty index yields the same routing,
@@ -762,309 +715,30 @@ class HudiTable:
                         and not is_global(self.cfg.index_type))
                 if fuse:
                     prepared = self._prepare(df, instant.time, combine=False)
-                stats, fg_map, schema = self._write_inserts(
+                stats, _, schema = self._write_inserts(
                     prepared, instant.time,
                     pack_small_files=(self.tc.table_type == COPY_ON_WRITE),
                     sort_mode=SORT_PARTITION, action_view=view,
                     profile_df=profile_src, combine_in_write=fuse,
                     seed_key_index=True, frozen_fgs=frozen_fgs)
-                self._complete(instant, operation, stats, schema,
-                               extra=commit_extras)
-                if self._index_cache_on:
-                    if (self._key_index_valid_token
-                            == ("pending", instant.time)):
-                        # the index _write_inserts just seeded from this very
-                        # commit's write frame reflects exactly the pre-write
-                        # timeline plus our own commit — NOT a fresh listing,
-                        # which would absorb concurrent daemon commits the
-                        # cache knows nothing about
-                        self._key_index_valid_token = tok0 | {instant.time}
-                    else:
-                        self._invalidate_key_index()
-                self._post_commit()
-                return instant.time
-            # ---- COW fast-update lane: one pre-write action total --------
-            from .indexing import is_global as _is_global
-            fast_lane = (self.tc.table_type == COPY_ON_WRITE
-                         and not _is_global(self.cfg.index_type)
-                         and self._new_version_wins()
-                         and self.cfg.combine_before_upsert
-                         and self.cfg.cow_broadcast_merge is not False)
-            if fast_lane and any(f.external for sl in view.latest_slices()
-                                 for f in sl.base_files):
-                fast_lane = False       # bootstrap groups need the general lane
-            prof = None
-            probe_bc = None
-            if fast_lane:
-                cap = self.cfg.index_broadcast_max_rows
-                # "warm_tag" probe strategy: with a warm covering cached
-                # index the per-batch workload-profile collect is replaced
-                # by a bounded limit(cap+1) size probe here plus one
-                # tag-profile action over the PINNED index inside
-                # _upsert_cow_fast (exact touched-group set).  Default
-                # "profile" keeps the fused single-write-job shape, which
-                # measures faster on small-file-bound layouts (see
-                # BASELINE.md probe-strategy A/B).
-                probe_mode = self.cfg.fast_lane_probe
-                if probe_mode == "auto":
-                    # carried spread signal: with fewer batch KEYS than
-                    # HALF the file groups, the exact warm_tag rewrite set
-                    # beats the stats superset (point-fix shape); at or
-                    # above it, every group is touched anyway and the
-                    # fused profile shape is cheaper (full-spread shape).
-                    # Skip the group count when warm_tag is impossible.
-                    n_last = getattr(self, "_last_batch_keys", None)
-                    if (n_last is None or not self._index_cache_on
-                            or self._key_index is None):
-                        probe_mode = "profile"
-                    else:
-                        probe_mode = ("warm_tag"
-                                      if n_last < 0.5 * max(1, view.group_count())
-                                      else "profile")
-                # no coverage precondition: the warm lane's _load_index
-                # call requests every view partition and extends the
-                # pinned index incrementally (one catch-up load on the
-                # first warm batch of a partition-sparse workload; full
-                # coverage thereafter — the INMEMORY design point anyway)
-                warm_index = (
-                    probe_mode == "warm_tag"
-                    and self._index_cache_on
-                    and self._key_index is not None
-                    and self._key_index_valid_token == tok0)
-                self._last_probe_mode = ("warm_tag" if warm_index
-                                         else "profile")
-                if warm_index:
-                    prepared = prepared.persist()
-                    persisted = True
-                    with _stage("upsert.bc_probe"):
-                        n_probe = prepared.limit(cap + 1).count()
-                        bc_fast = n_probe <= cap
-                    probe_bc = bc_fast   # reused by the fall-through lanes
-                    # prepared is preCombined in this lane → rows == keys.
-                    # Recorded unconditionally: over the cap it is a lower
-                    # bound (cap+1) that correctly flips big-batch
-                    # workloads back toward profile routing.
-                    self._last_batch_keys = n_probe
-                    if not bc_fast:
-                        self._last_probe_mode = "general"
-                else:
-                    with _stage("upsert.profile"):
-                        prof = profile_src.groupBy(META_PARTITION_PATH).agg(
-                            F.count(F.lit(1)).alias("n"),
-                            F.min(META_RECORD_KEY).alias("mn"),
-                            F.max(META_RECORD_KEY).alias("mx"),
-                            F.approx_count_distinct(
-                                META_RECORD_KEY).alias("nk")).collect()
-                    # spread signal in KEY units (the profile scans the raw
-                    # multi-version batch; per-partition distinct sums are
-                    # exact for non-global keys, approx per partition) —
-                    # raw row count stays the broadcast-size gate
-                    self._last_batch_keys = sum(r[4] for r in prof)
-                    bc_fast = sum(r[1] for r in prof) <= cap
-                if bc_fast:
-                    if not persisted:
-                        prepared = prepared.persist()
-                        persisted = True
-                    with _stage("upsert.write"):
-                        stats, fg_map, schema, wrote_inserts = \
-                            self._upsert_cow_fast(view, instant.time,
-                                                  prepared, prof, is_delete,
-                                                  frozen_fgs=frozen_fgs,
-                                                  token=tok0, active=active)
-                    with _stage("upsert.complete"):
-                        self._complete(instant, operation, stats, schema,
-                                       extra=commit_extras)
-                    if self._index_cache_on:
-                        if (not is_delete and not wrote_inserts
-                                and self._key_index is not None):
-                            # pre-write token + our own commit (see seed lane)
-                            self._key_index_valid_token = \
-                                tok0 | {instant.time}
-                        else:
-                            self._invalidate_key_index()
-                    prepared.unpersist()
-                    persisted = False
-                    with _stage("upsert.post_commit"):
-                        self._post_commit()
-                    return instant.time
-                # batch too large to broadcast — fall through to the general
-                # lanes (the window merge handles table-sized batches)
-            # fast lane: a warm cached index (INMEMORY, or SIMPLE with
-            # cache_simple_index) covering every table partition makes the
-            # pre-tag workload profile redundant — any batch partition is
-            # either covered or brand-new (no stored records → a null-fg tag
-            # is already the correct routing).  Saves the full-scan profile
-            # action per steady-state batch; only the short-circuiting
-            # broadcast-size probe below remains.
-            cache_covers = (
-                self._index_cache_on
-                and self._key_index is not None
-                and self._key_index_valid_token == tok0
-                and set(view.partitions()) <= self._key_index_parts)
-            if cache_covers:
-                # broadcast-size guard (shared with the cold lane): stops
-                # after cap+1 rows, so it never scans a big batch
-                cap = self.cfg.index_broadcast_max_rows
-                index_df = self._key_index
-                if prof is not None:    # fast-lane fall-through: size known
-                    bc = sum(r[1] for r in prof) <= cap
-                elif probe_bc is not None:
-                    bc = probe_bc       # warm fall-through: probe already ran
-                else:
-                    with _stage("upsert.bc_probe"):
-                        bc = prepared.limit(cap + 1).count() <= cap
-            elif self._index_cache_on:
-                # cold cached index: load the whole-table key index in one go —
-                # it gets pinned for every later batch anyway, so the
-                # pre-tag workload-profile action (whose only INMEMORY use
-                # is picking which partitions to load) is pure overhead.
-                # The broadcast-size guard stays: a cold first batch can be
-                # arbitrarily large, and limit(cap+1).count() short-circuits
-                # after cap+1 rows instead of scanning the batch.
-                with _stage("upsert.load_index"):
-                    index_df = self._load_index(
-                        view, sorted(view.partitions()), None, token=tok0)
-                cap = self.cfg.index_broadcast_max_rows
-                if prof is not None:    # fast-lane fall-through: size known
-                    bc = sum(r[1] for r in prof) <= cap
-                elif probe_bc is not None:
-                    bc = probe_bc       # warm fall-through: probe already ran
-                else:
-                    bc = prepared.limit(cap + 1).count() <= cap
+                # the index _write_inserts seeded from this very commit's
+                # write frame holds exactly the pre-write table plus our
+                # own commit
+                keep_index = (self._key_index_valid_token
+                              == ("pending", instant.time))
             else:
-                # workload profile (BaseSparkCommitActionExecutor.java:122-127)
-                # + key range for BLOOM-style pruning — one Spark action over
-                # the raw keyed batch (no dedup shuffle); reused from the
-                # fast-lane gate when that already ran it
-                if prof is None:
-                    with _stage("upsert.profile"):
-                        prof = profile_src.groupBy(META_PARTITION_PATH).agg(
-                            F.count(F.lit(1)).alias("n"),
-                            F.min(META_RECORD_KEY).alias("mn"),
-                            F.max(META_RECORD_KEY).alias("mx")).collect()
-                partitions = [r[0] for r in prof]
-                key_range = (min(r[2] for r in prof), max(r[3] for r in prof)) if prof else None
-
-                with _stage("upsert.load_index"):
-                    index_df = self._load_index(view, partitions, key_range,
-                                                token=tok0)
-                n_rows = sum(r[1] for r in prof)
-                bc = n_rows <= self.cfg.index_broadcast_max_rows
-            # the tagging join consumes prepared twice (broadcast probe +
-            # stream side) and the write again via tagged — cache it now that
-            # the profile no longer forces early materialization
-            prepared = prepared.persist()
-            persisted = True
-            if bc:
-                # broadcast path pre-dedups the pruned index side per file
-                # group — the join can't multiply rows per (input row, fg)
-                tagged = tag_locations(
-                    prepared, index_df, self.cfg.index_type,
-                    broadcast_incoming=True,
-                    update_partition_path=self.cfg.global_index_update_partition_path)
-            else:
-                # shuffle path: the index may map one key to the same file
-                # group several times (MOR base+log, duplicate keys in a
-                # file); collapse the join-induced multiplication per
-                # (input row, file group) — keyed by uid so genuine
-                # duplicate input rows survive when preCombine is off
-                uid = "_hoodie_row_uid"
-                tagged = tag_locations(
-                    prepared.withColumn(uid, F.monotonically_increasing_id()),
-                    index_df, self.cfg.index_type,
-                    broadcast_incoming=False,
-                    update_partition_path=self.cfg.global_index_update_partition_path,
-                ).dropDuplicates([uid, FG_COL]).drop(uid)
-            # MOR fast lane: updates already carry their file-group routing
-            # in the data, and delta appends read nothing — so no pre-write
-            # profile action is needed at all.  The delta write materializes
-            # the tagging cache; inserts are then probed on that cache
-            # (~free).  Not applicable when bootstrap (external) file groups
-            # exist: those updates must re-route through a COW rewrite,
-            # which needs the per-file-group profile.
-            mor_sls = (view.latest_slices()
-                       if self.tc.table_type == MERGE_ON_READ else [])
-            has_ext = any(f.external for sl in mor_sls for f in sl.base_files)
-            mor_fast = self.tc.table_type == MERGE_ON_READ and not has_ext
-
-            # fold the insert-existence probe into the delta-write action:
-            # a CollectMetrics node under the tagging cache counts untagged
-            # rows while the delta write materializes it, so the
-            # steady-state update-only batch (zero inserts) skips the
-            # per-partition insert-probe job entirely.  UNSAFE when a
-            # pending clustering plan exists: _check_frozen's bounded
-            # limit().count() probe is then the FIRST action on the cache
-            # and completes the observation from a PARTIAL scan — the
-            # undercounted metric could claim "no inserts" while inserts
-            # exist, so the fold is disabled and the probe runs as before.
-            tag_obs = None
-            if mor_fast and not is_delete and not frozen_fgs:
-                from pyspark.sql import Observation
-                tag_obs = Observation()
-                tagged = tagged.observe(
-                    tag_obs,
-                    F.count(F.when(F.col(FG_COL).isNull(), True))
-                     .alias("n_inserts"))
-            tagged = tagged.persist()
-
-            updates = tagged.filter(F.col(FG_COL).isNotNull()) \
-                            .withColumn(FG, F.col(FG_COL)).drop(FG_COL)
-            inserts = tagged.filter(F.col(FG_COL).isNull()).drop(FG_COL)
-            if is_delete:
-                inserts = inserts.limit(0)  # deletes of absent keys are no-ops
-
-            if mor_fast:
-                self._check_frozen(updates, FG, frozen_fgs)
-                with _stage("upsert.write"):
-                    stats, fg_map, schema = self._upsert_mor_fast(
-                        mor_sls, instant.time, updates, inserts,
-                        pending_compaction, is_delete, tag_obs=tag_obs)
-                # MOR inserts only ever open NEW file groups, so base files
-                # in the stats ⇔ insert rows landed
-                wrote_inserts = any(not s.log for s in stats)
-            else:
-                # per-file-group update counts + per-partition insert counts
-                with _stage("upsert.tag_profile"):
-                    fg_prof = tagged.groupBy(META_PARTITION_PATH, FG_COL).count().collect()
-                update_fgs = {r[1]: r[0] for r in fg_prof if r[1] is not None}
-                if frozen_fgs & set(update_fgs):
-                    from .services.clustering import ClusteringUpdateConflict
-                    raise ClusteringUpdateConflict(
-                        f"update touches file groups "
-                        f"{sorted(frozen_fgs & set(update_fgs))[:3]} in a "
-                        "pending clustering plan; run_clustering() first or "
-                        "roll the plan back")
-                insert_profile = {} if is_delete else \
-                    {r[0]: r[2] for r in fg_prof if r[1] is None}
-                wrote_inserts = any(v > 0 for v in insert_profile.values())
-
-                with _stage("upsert.write"):
-                    if self.tc.table_type == MERGE_ON_READ:
-                        stats, fg_map, schema = self._upsert_mor(
-                            view, instant.time, updates, inserts,
-                            update_fgs, insert_profile, pending_compaction)
-                    else:
-                        n_new = sum(r[2] for r in fg_prof)
-                        stats, fg_map, schema = self._upsert_cow(
-                            view, instant.time, updates, inserts,
-                            update_fgs, insert_profile, n_new_rows=n_new,
-                            frozen_fgs=frozen_fgs)
+                stats, schema, wrote_inserts = self._write_batch(
+                    view, slices, instant.time, prepared, profile_src,
+                    is_delete, tok0, active, frozen_fgs, pending_compaction)
+                # an update-only commit rewrites/appends WITHIN existing
+                # file groups — every cached location stays correct, so the
+                # cache survives its own commit
+                keep_index = (not is_delete and not wrote_inserts
+                              and self._key_index is not None)
             with _stage("upsert.complete"):
                 self._complete(instant, operation, stats, schema,
                                extra=commit_extras)
-            if self._index_cache_on:
-                update_only = not is_delete and not wrote_inserts
-                if update_only and self._key_index is not None:
-                    # an update-only commit rewrites/appends WITHIN existing
-                    # file groups — every cached location stays correct, so
-                    # the cache survives its own commit.  Pre-write token +
-                    # our own instant: a daemon commit that completed DURING
-                    # the write stays missing from the token, so the next
-                    # batch invalidates instead of trusting a cache that
-                    # never saw it.
-                    self._key_index_valid_token = tok0 | {instant.time}
-                else:
-                    self._invalidate_key_index()
+            self._restamp_key_index(tok0, instant.time, keep_index)
         except _ClusteringConflict:
             # nothing was written — drop the started instant instead of
             # leaving crash debris for rollback-on-open
@@ -1075,31 +749,269 @@ class HudiTable:
                 self._last_started = None    # cleaned up here — not debris
             raise
         finally:
-            if persisted:
+            if prepared.is_cached:
                 prepared.unpersist()
-            if tagged is not None:
-                tagged.unpersist()
         with _stage("upsert.post_commit"):
             self._post_commit()
         return instant.time
 
-    @staticmethod
-    def _check_frozen(tagged_updates: DataFrame, fg_col: str,
-                      frozen_fgs: set) -> None:
-        """Reject updates targeting file groups frozen by a pending
-        clustering plan (SparkRejectUpdateStrategy.java:41-62).  Exact: a
-        bounded probe on the tagged batch, run only when a plan is pending."""
-        if not frozen_fgs:
+    def _restamp_key_index(self, token: Optional[frozenset],
+                           instant_time: str, keep: bool) -> None:
+        """Post-commit key-index bookkeeping.  ``keep``: the commit left
+        every cached location correct.  The cache is then stamped with the
+        PRE-write token plus our own instant, never a fresh listing: a
+        daemon commit that completed DURING the write stays missing from
+        the token, so the next batch invalidates instead of trusting a
+        cache that never saw it."""
+        if not self._index_cache_on:
             return
-        from .services.clustering import ClusteringUpdateConflict
-        hit = (tagged_updates
-               .filter(F.col(fg_col).isin(list(frozen_fgs)))
-               .select(fg_col).limit(1).collect())
+        if keep:
+            self._key_index_valid_token = token | {instant_time}
+        else:
+            self._invalidate_key_index()
+
+    def _pending_compactions(self, active: list) -> dict[str, str]:
+        """file group → newest pending compaction instant, from the SAME
+        snapshot as the view: every compaction is either (a) pending in the
+        snapshot → logs get bumped to its instant, or (b) completed in it →
+        the view's latest slice IS its new base.  (A mixed read order loses
+        writes: stale view base + empty pending → orphaned log.)"""
+        pending: dict[str, str] = {}
+        if self.tc.table_type != MERGE_ON_READ:
+            return pending
+        for p in tl.pending_from(active):
+            if p.action != tl.COMPACTION:
+                continue
+            # the async compactor may TRANSITION this instant between our
+            # listing and this read (requested → inflight deletes the
+            # requested file; completion lands as a .commit).  Chase the
+            # plan through the states; a compaction that completed AFTER
+            # the snapshot must still bump logs to its instant — the
+            # snapshot view predates its new base, so (a) applies, with the
+            # fgs taken from the completed commit's write stats.
+            plan = None
+            for st in (p.state, tl.REQUESTED, tl.INFLIGHT):
+                try:
+                    plan = self.timeline.read_metadata(
+                        tl.Instant(p.time, tl.COMPACTION, st))
+                    break
+                except FileNotFoundError:
+                    continue
+            if plan is not None:
+                fgs = [op["file_group"] for op in plan.get("operations", [])]
+            else:
+                try:
+                    done_md = self.timeline.read_metadata(
+                        tl.Instant(p.time, tl.COMMIT, tl.COMPLETED))
+                except FileNotFoundError:
+                    continue  # rolled back/unscheduled mid-race
+                fgs = [s["file_group"] for s in done_md.get("write_stats", [])]
+            for fg in fgs:
+                pending[fg] = max(pending.get(fg, ""), p.time)
+        return pending
+
+    def _write_batch(self, view: FileSystemView, slices: list,
+                     instant_time: str, prepared: DataFrame,
+                     profile_src: DataFrame, is_delete: bool,
+                     token: Optional[frozenset], active: list,
+                     frozen_fgs: set, pending_compaction: dict[str, str]):
+        """Tag, route and write a batch into a non-empty table.  Returns
+        ``(stats, schema, wrote_inserts)``.
+
+        The COW fast lane (one pre-write action, anti-join rewrite) takes
+        every batch it can broadcast; bootstrap groups, old-vs-new payloads
+        and global indexes need the general lane.  Otherwise the batch is
+        tagged against the key index and handed to the MOR delta append or
+        the COW merge.  Nothing here is a setting: the lane follows from
+        the table, the payload, the batch size against
+        ``index_broadcast_max_rows``, and the previous batch's spread."""
+        from .indexing import is_global
+        cap = self.cfg.index_broadcast_max_rows
+        prof, n_batch = None, None
+        if (self.tc.table_type == COPY_ON_WRITE
+                and not is_global(self.cfg.index_type)
+                and self._new_version_wins()
+                and self.cfg.combine_before_upsert
+                and not any(f.external for sl in slices
+                            for f in sl.base_files)):
+            prof, n_batch = self._probe_fast_lane(view, prepared,
+                                                  profile_src, token)
+            if n_batch <= cap:
+                prepared.persist()
+                with _stage("upsert.write"):
+                    return self._upsert_cow_fast(
+                        view, instant_time, prepared, prof, is_delete,
+                        frozen_fgs=frozen_fgs, token=token, active=active)
+            # batch too large to broadcast — fall through to the general
+            # lane (the window merge handles table-sized batches)
+        if (self._index_cache_on and self._key_index is not None
+                and self._key_index_valid_token == token
+                and set(view.partitions()) <= self._key_index_parts):
+            # a warm cached index (INMEMORY, or SIMPLE with
+            # cache_simple_index) covering every table partition makes the
+            # pre-tag workload profile redundant — any batch partition is
+            # either covered or brand-new (no stored records → a null-fg
+            # tag is already the correct routing)
+            index_df = self._key_index
+        elif self._index_cache_on:
+            # cold cached index: load the whole-table key index in one go —
+            # it gets pinned for every later batch anyway, so the pre-tag
+            # workload profile (whose only use here is picking which
+            # partitions to load) is pure overhead
+            with _stage("upsert.load_index"):
+                index_df = self._load_index(
+                    view, sorted(view.partitions()), None, token=token)
+        else:
+            # workload profile (BaseSparkCommitActionExecutor.java:122-127)
+            # + key range for BLOOM-style pruning; reused from the fast-lane
+            # probe when that already ran it
+            if prof is None:
+                with _stage("upsert.profile"):
+                    prof = self._batch_profile(profile_src)
+            key_range = ((min(r[2] for r in prof), max(r[3] for r in prof))
+                         if prof else None)
+            with _stage("upsert.load_index"):
+                index_df = self._load_index(view, [r[0] for r in prof],
+                                            key_range, token=token)
+            n_batch = sum(r[1] for r in prof)
+        if n_batch is None:
+            # broadcast-size guard: a cold first batch can be arbitrarily
+            # large; limit(cap+1) stops after cap+1 rows instead of
+            # scanning it
+            with _stage("upsert.bc_probe"):
+                n_batch = prepared.limit(cap + 1).count()
+        # the tagging join consumes prepared twice (broadcast probe + stream
+        # side) and the write again via tagged — cache it
+        prepared.persist()
+        upp = self.cfg.global_index_update_partition_path
+        if n_batch <= cap:
+            # broadcast path pre-dedups the pruned index side per file
+            # group — the join can't multiply rows per (input row, fg)
+            tagged = tag_locations(prepared, index_df, self.cfg.index_type,
+                                   broadcast_incoming=True,
+                                   update_partition_path=upp)
+        else:
+            # shuffle path: the index may map one key to the same file
+            # group several times (MOR base+log, duplicate keys in a
+            # file); collapse the join-induced multiplication per
+            # (input row, file group) — keyed by uid so genuine duplicate
+            # input rows survive when preCombine is off
+            uid = "_hoodie_row_uid"
+            tagged = tag_locations(
+                prepared.withColumn(uid, F.monotonically_increasing_id()),
+                index_df, self.cfg.index_type, broadcast_incoming=False,
+                update_partition_path=upp,
+            ).dropDuplicates([uid, FG_COL]).drop(uid)
+        if self.tc.table_type == MERGE_ON_READ:
+            with _stage("upsert.write"):
+                return self._upsert_mor_fast(
+                    view, slices, instant_time, tagged, pending_compaction,
+                    is_delete, frozen_fgs)
+        tagged = tagged.persist()
+        try:
+            # per-file-group update counts + per-partition insert counts
+            with _stage("upsert.tag_profile"):
+                fg_prof = tagged.groupBy(META_PARTITION_PATH,
+                                         FG_COL).count().collect()
+            update_fgs = {r[1]: r[0] for r in fg_prof if r[1] is not None}
+            self._reject_frozen(frozen_fgs & set(update_fgs))
+            insert_profile = {} if is_delete else \
+                {r[0]: r[2] for r in fg_prof if r[1] is None}
+            updates, inserts = self._split_tagged(tagged, is_delete)
+            with _stage("upsert.write"):
+                stats, schema = self._upsert_cow(
+                    view, instant_time, updates, inserts, update_fgs,
+                    insert_profile, n_new_rows=sum(r[2] for r in fg_prof),
+                    frozen_fgs=frozen_fgs)
+            return stats, schema, any(v > 0 for v in insert_profile.values())
+        finally:
+            tagged.unpersist()
+
+    def _probe_fast_lane(self, view: FileSystemView, prepared: DataFrame,
+                         profile_src: DataFrame, token: Optional[frozenset]):
+        """The COW fast lane's pre-write action, chosen per batch from the
+        previous batch's spread.  Returns ``(profile rows or None, batch
+        rows)``; the row count is capped at cap+1 by the warm probe.
+
+        - ``warm_tag``: with fewer batch KEYS than HALF the file groups (the
+          point-fix/CDC/GDPR shape) and a pinned index valid at this
+          batch's token, a bounded limit(cap+1) size probe; the
+          tag-profile action over the PINNED index inside _upsert_cow_fast
+          then gives the EXACT rewrite set (measured 17 vs 210 groups, ~40%
+          faster wall at sf0.1; BASELINE.md).  No coverage precondition:
+          the lane's _load_index call extends the pinned index to every
+          view partition incrementally.
+        - ``profile`` otherwise, and on the first batch (no history): one
+          workload-profile action over the raw keyed batch; tagging fuses
+          into the write job and the rewrite set is the manifest-stats
+          superset, which is cheaper when every group is touched anyway."""
+        cap = self.cfg.index_broadcast_max_rows
+        n_last = getattr(self, "_last_batch_keys", None)
+        warm = (n_last is not None and self._index_cache_on
+                and self._key_index is not None
+                and self._key_index_valid_token == token
+                and n_last < 0.5 * max(1, view.group_count()))
+        self._last_probe_mode = "warm_tag" if warm else "profile"
+        if warm:
+            prepared.persist()
+            with _stage("upsert.bc_probe"):
+                n_probe = prepared.limit(cap + 1).count()
+            # prepared is preCombined in this lane → rows == keys.
+            # Recorded unconditionally: over the cap it is a lower bound
+            # (cap+1) that correctly flips big-batch workloads back toward
+            # profile routing.
+            self._last_batch_keys = n_probe
+            if n_probe > cap:
+                self._last_probe_mode = "general"
+            return None, n_probe
+        with _stage("upsert.profile"):
+            prof = self._batch_profile(profile_src)
+        # spread signal in KEY units (the profile scans the raw
+        # multi-version batch; per-partition distinct sums are exact for
+        # non-global keys, approx per partition) — raw row count stays the
+        # broadcast-size gate
+        self._last_batch_keys = sum(r[4] for r in prof)
+        return prof, sum(r[1] for r in prof)
+
+    @staticmethod
+    def _batch_profile(src: DataFrame) -> list:
+        """Per-partition workload profile of the raw keyed batch, one Spark
+        action: (partition, rows, min key, max key, approx distinct keys)."""
+        return src.groupBy(META_PARTITION_PATH).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min(META_RECORD_KEY).alias("mn"),
+            F.max(META_RECORD_KEY).alias("mx"),
+            F.approx_count_distinct(META_RECORD_KEY).alias("nk")).collect()
+
+    @staticmethod
+    def _split_tagged(tagged: DataFrame, is_delete: bool):
+        """(updates routed to their file group in ``_fg``, inserts).  A
+        delete has no inserts: deletes of absent keys are no-ops."""
+        updates = (tagged.filter(F.col(FG_COL).isNotNull())
+                   .withColumn(FG, F.col(FG_COL)).drop(FG_COL))
+        inserts = tagged.filter(F.col(FG_COL).isNull()).drop(FG_COL)
+        return updates, inserts.limit(0) if is_delete else inserts
+
+    @staticmethod
+    def _reject_frozen(hit: set) -> None:
+        """Reject updates into file groups frozen by a pending clustering
+        plan (SparkRejectUpdateStrategy.java:41-62)."""
         if hit:
+            from .services.clustering import ClusteringUpdateConflict
             raise ClusteringUpdateConflict(
-                f"update touches file group {hit[0][0]} which is in a "
+                f"update touches file groups {sorted(hit)[:3]} in a "
                 "pending clustering plan; run_clustering() first or roll "
                 "the plan back")
+
+    def _check_frozen(self, tagged_updates: DataFrame, fg_col: str,
+                      frozen_fgs: set) -> None:
+        """_reject_frozen for a batch whose touched groups are not known
+        driver-side: a bounded probe on the tagged batch, run only when a
+        plan is pending."""
+        if frozen_fgs:
+            self._reject_frozen({r[0] for r in (
+                tagged_updates.filter(F.col(fg_col).isin(list(frozen_fgs)))
+                .select(fg_col).limit(1).collect())})
 
     def _new_version_wins(self) -> bool:
         """True when the arriving batch's version wins unconditionally per
@@ -1181,125 +1093,63 @@ class HudiTable:
         return stats, schema
 
     def _upsert_cow_fast(self, view: FileSystemView, instant_time: str,
-                         prepared: DataFrame, prof: list, is_delete: bool,
-                         frozen_fgs: Optional[set] = None,
+                         prepared: DataFrame, prof: Optional[list],
+                         is_delete: bool, frozen_fgs: set,
                          token: Optional[frozenset] = None,
                          active: Optional[list] = None):
-        """COW fast-update lane: one pre-write Spark action in the common
-        case; the bloom-prune branch below adds a second, bounded action (a
-        distinct key-collect gated to ≤ ``bloom_prune_max_batch_keys``
-        batch rows).
+        """COW fast-update lane, the steady-state writer shape at 100 TB:
+        scan only the touched slice set, broadcast the batch key set for the
+        anti-join, zero full-table shuffles, one file per touched group.
+        Returns ``(stats, schema, wrote_inserts)``.
 
-        Two entry shapes:
-
-        - ``prof`` given (cold / uncached index): the caller's per-partition
-          batch profile drives driver-side key-range pruning of the manifest
-          stats (the BLOOM index's min/max ranges, fsview.base_key_range — a
-          superset of the touched groups by construction: a stored key is
-          always inside its file's key range).  Exact key→file-group routing
-          still happens through the index join, lazily, fused into the
-          single write job.
-        - ``prof is None`` (WARM covering cached index): no batch profile
-          ran at all.  One tag-profile action over the PINNED index
-          (broadcast batch ⋈ in-memory key index — no table scan, no batch
-          re-scan: ``prepared`` is persisted by the caller) yields the
-          EXACT touched-group set, exact per-partition insert counts, and
-          materializes ``tagged`` for reuse inside the write job.  Strictly
-          tighter than the stats superset, so the bloom second stage is
-          unnecessary.
+        - ``prof`` given: the batch profile prunes the rewrite set to a
+          superset of the touched groups (_stats_rewrite_set); exact
+          routing happens through the index join, fused into the write job.
+        - ``prof is None`` (warm pinned index): one tag-profile action over
+          the PINNED index (no table scan; ``prepared`` is persisted by the
+          caller) yields the EXACT touched-group set and insert counts.
 
         Inserts open new hash-bucketed file groups planned from the
-        per-partition counts (raw counts are an upper bound in the prof
-        shape — over-planned buckets stay empty and write no files);
-        small-file packing is skipped in this lane (clustering restores
-        layout), which keeps the plan free of phantom rewrites.
-
-        At 100 TB this is the steady-state writer shape: scan only the
-        touched slice set, broadcast the (small) batch key set for the
-        anti-join, zero full-table shuffles, one file per touched group.
+        per-partition counts (an upper bound in the prof shape —
+        over-planned buckets stay empty); no small-file packing here
+        (clustering restores layout), so the plan has no phantom rewrites.
         """
-        tagged_pinned = False
+        tagged_pinned = prof is None
         if prof is None:
-            # warm lane: exact routing from the pinned index
             index_df = self._load_index(view, sorted(view.partitions()),
                                         None, token=token)
             tagged = tag_locations(prepared, index_df, self.cfg.index_type,
                                    broadcast_incoming=True).persist()
-            tagged_pinned = True
             with _stage("upsert.tag_profile"):
                 tag_prof = tagged.groupBy(
                     META_PARTITION_PATH, FG_COL).count().collect()
-            rewrite_fgs = {r[1] for r in tag_prof if r[1] is not None}
             fg_map = {r[1]: r[0] for r in tag_prof if r[1] is not None}
-            insert_counts: dict[str, int] = {}
-            for r in tag_prof:
-                if r[1] is None:
-                    insert_counts[r[0]] = insert_counts.get(r[0], 0) + r[2]
+            insert_counts = {r[0]: r[2] for r in tag_prof if r[1] is None}
         else:
-            from .fsview import base_key_range
-            by_part = {r[0]: (r[2], r[3]) for r in prof}
-            rewrite: list[FileSlice] = []
-            for sl in view.latest_slices():
-                rng_b = by_part.get(sl.partition)
-                if rng_b is None:
-                    continue
-                lo, hi = rng_b
-                rng = base_key_range(sl)
-                if rng is None or lo is None \
-                        or not (hi < rng[0] or lo > rng[1]):
-                    rewrite.append(sl)
-            # bloom second stage (write side): for SMALL batches on tables
-            # with a bloom sidecar, collect the batch's keys and drop range-
-            # surviving slices whose bloom proves none present — on hash/
-            # unsorted layouts ranges all overlap and this is what bounds
-            # the rewrite set.  A fresh bloom has no false negatives (stale/
-            # logged slices are kept), so the set stays a superset of the
-            # touched groups.
-            n_batch = sum(r[1] for r in prof)
-            bloom_fgs = None
-            if (len(rewrite) > 8
-                    and n_batch <= self.cfg.bloom_prune_max_batch_keys):
-                from .bloom import load_blooms, prune_slices_by_bloom
-                blooms = load_blooms(self.meta)
-                if blooms:
-                    ks = [r[0] for r in
-                          prepared.select(META_RECORD_KEY).distinct().collect()]
-                    rewrite = prune_slices_by_bloom(rewrite, blooms, ks)
-                    # every stored location of a batch (key, partition) is
-                    # in a bloom-positive slice — the tagging scan can skip
-                    # the rest
-                    bloom_fgs = {sl.file_group for sl in rewrite}
-            rewrite_fgs = {sl.file_group for sl in rewrite}
-            fg_map = {sl.file_group: sl.partition for sl in rewrite}
+            fg_map, bloom_fgs = self._stats_rewrite_set(view, prof, prepared)
             insert_counts = {r[0]: r[1] for r in prof}
-
-            partitions = sorted(by_part)
             mns = [r[2] for r in prof if r[2] is not None]
             mxs = [r[3] for r in prof if r[3] is not None]
             key_range = (min(mns), max(mxs)) if mns else None
-            index_df = self._load_index(view, partitions, key_range,
-                                        only_fgs=bloom_fgs, token=token)
+            index_df = self._load_index(view, sorted(insert_counts),
+                                        key_range, only_fgs=bloom_fgs,
+                                        token=token)
             # tagged stays UNPERSISTED in this shape: the routing below
             # consumes it exactly once (a single coalesce projection), so
             # the whole tag pipeline — broadcast the batch, semi-prune the
             # index scan, broadcast the locations back — fuses into the one
-            # write job instead of paying a separate materialization
-            # round-trip per batch.  Only the paths with a second consumer
-            # (the frozen-group probe, the multi-bucket range-join
-            # assignment) persist it.
+            # write job.  Only the paths with a second consumer (the
+            # frozen-group probe, the multi-bucket range-join assignment)
+            # persist it.
             tagged = tag_locations(prepared, index_df, self.cfg.index_type,
                                    broadcast_incoming=True)
+        rewrite_fgs = set(fg_map)
         try:
-            if frozen_fgs and (frozen_fgs & rewrite_fgs):
+            if frozen_fgs & rewrite_fgs:
                 if prof is None:
-                    # warm lane: rewrite_fgs is EXACT — a batch key provably
-                    # lives in a frozen group (SparkRejectUpdateStrategy)
-                    from .services.clustering import ClusteringUpdateConflict
-                    raise ClusteringUpdateConflict(
-                        f"update touches file groups "
-                        f"{sorted(frozen_fgs & rewrite_fgs)[:3]} in a "
-                        "pending clustering plan; run_clustering() first or "
-                        "roll the plan back")
+                    # rewrite_fgs is EXACT — a batch key provably lives in
+                    # a frozen group
+                    self._reject_frozen(frozen_fgs & rewrite_fgs)
                 # the stats-pruned rewrite superset may overlap a pending
                 # clustering plan spuriously — probe the exact tagged
                 # locations; once the probe proves no batch key lives in a
@@ -1312,18 +1162,11 @@ class HudiTable:
                 rewrite_fgs -= frozen_fgs
                 for fg in frozen_fgs:
                     fg_map.pop(fg, None)
-            if is_delete:
-                plan = []
-                fresh = drop_deleted(
-                    tagged.filter(F.col(FG_COL).isNotNull())
-                          .withColumn(FG, F.col(FG_COL)).drop(FG_COL))
-            elif not insert_counts:
-                # update-only batch, known exactly (warm lane): every row
-                # already carries its tagged group — no bucket planning
-                plan = []
-                fresh = drop_deleted(
-                    tagged.filter(F.col(FG_COL).isNotNull())
-                          .withColumn(FG, F.col(FG_COL)).drop(FG_COL))
+            if is_delete or not insert_counts:
+                # every row already carries its tagged group — no bucket
+                # planning (a delete, or an update-only batch known exactly
+                # in the warm shape)
+                fresh = drop_deleted(self._split_tagged(tagged, True)[0])
             else:
                 rec_size = avg_record_size(self.meta, self.timeline,
                                            self.cfg.record_size_estimate,
@@ -1331,12 +1174,9 @@ class HudiTable:
                 plan = plan_insert_buckets(
                     insert_counts, view, self.cfg, rec_size,
                     pack_small_files=False)
-                for b in plan:
-                    fg_map[b.file_group] = b.partition
-                per_part: dict[str, int] = {}
-                for b in plan:
-                    per_part[b.partition] = per_part.get(b.partition, 0) + 1
-                if per_part and all(n == 1 for n in per_part.values()):
+                fg_map.update({b.file_group: b.partition for b in plan})
+                parts = [b.partition for b in plan]
+                if parts and len(parts) == len(set(parts)):
                     # steady-state shape (one insert bucket per partition):
                     # update-vs-insert routing is ONE projection — tagged fg
                     # if the key exists, else the partition's planned bucket
@@ -1355,9 +1195,7 @@ class HudiTable:
                     if not tagged_pinned:
                         tagged = tagged.persist()
                         tagged_pinned = True
-                    updates = tagged.filter(F.col(FG_COL).isNotNull()) \
-                                    .withColumn(FG, F.col(FG_COL)).drop(FG_COL)
-                    inserts = tagged.filter(F.col(FG_COL).isNull()).drop(FG_COL)
+                    updates, inserts = self._split_tagged(tagged, False)
                     assigned = assign_insert_buckets(
                         self.spark, inserts, plan,
                         META_PARTITION_PATH, META_RECORD_KEY, FG)
@@ -1367,42 +1205,77 @@ class HudiTable:
             # so prepared is already unique per MERGE_KEY — skipping the
             # dedup drops one exchange+aggregate pair from the broadcast
             # build (the hash build collapses duplicates anyway)
-            batch_keys = prepared.select(*MERGE_KEY)
             stats, schema = self._anti_join_rewrite(
-                view, instant_time, fresh, batch_keys, rewrite_fgs, fg_map,
-                active=active)
+                view, instant_time, fresh, prepared.select(*MERGE_KEY),
+                rewrite_fgs, fg_map, active=active)
             wrote_inserts = any(s.file_group not in rewrite_fgs for s in stats)
-            return stats, fg_map, schema, wrote_inserts
+            return stats, schema, wrote_inserts
         finally:
             if tagged_pinned:
                 tagged.unpersist()
 
+    def _stats_rewrite_set(self, view: FileSystemView, prof: list,
+                           prepared: DataFrame):
+        """Rewrite set of the profiled fast lane, pruned driver-side:
+        ``({file group: partition}, bloom-positive groups or None)``.
+
+        Key ranges first: the batch's per-partition key range against the
+        manifest stats (the BLOOM index's min/max ranges,
+        fsview.base_key_range) — a superset of the touched groups by
+        construction, since a stored key is always inside its file's key
+        range.  Then, for SMALL batches on tables with a bloom sidecar,
+        the batch's keys are collected (one bounded action, ≤
+        ``bloom_prune_max_batch_keys`` rows) and range-surviving slices
+        whose bloom proves none present are dropped — on hash/unsorted
+        layouts ranges all overlap and this is what bounds the rewrite
+        set.  A fresh bloom has no false negatives (stale/logged slices are
+        kept), so the set stays a superset."""
+        from .fsview import base_key_range
+        by_part = {r[0]: (r[2], r[3]) for r in prof}
+        rewrite: list[FileSlice] = []
+        for sl in view.latest_slices():
+            rng_b = by_part.get(sl.partition)
+            if rng_b is None:
+                continue
+            lo, hi = rng_b
+            rng = base_key_range(sl)
+            if rng is None or lo is None or not (hi < rng[0] or lo > rng[1]):
+                rewrite.append(sl)
+        bloom_fgs = None
+        if (len(rewrite) > 8 and sum(r[1] for r in prof)
+                <= self.cfg.bloom_prune_max_batch_keys):
+            from .bloom import load_blooms, prune_slices_by_bloom
+            blooms = load_blooms(self.meta)
+            if blooms:
+                ks = [r[0] for r in
+                      prepared.select(META_RECORD_KEY).distinct().collect()]
+                rewrite = prune_slices_by_bloom(rewrite, blooms, ks)
+                # every stored location of a batch (key, partition) is in a
+                # bloom-positive slice — the tagging scan can skip the rest
+                bloom_fgs = {sl.file_group for sl in rewrite}
+        return {sl.file_group: sl.partition for sl in rewrite}, bloom_fgs
+
     def _upsert_cow(self, view: FileSystemView, instant_time: str,
                     updates: DataFrame, inserts: DataFrame,
                     update_fgs: dict[str, str], insert_profile: dict[str, int],
-                    n_new_rows: Optional[int] = None,
-                    frozen_fgs: Optional[set] = None):
-        """COW merge: rewrite exactly the affected file groups.
+                    frozen_fgs: set, n_new_rows: Optional[int] = None):
+        """COW merge: rewrite exactly the affected file groups.  Returns
+        ``(stats, schema)``.
 
         Two physical strategies, same semantics:
 
-        - **broadcast anti-join fast path** (batch ≪ table, OVERWRITE_LATEST
-          payload, batch preCombined): stored rows whose key appears in the
-          batch are dropped by a broadcast LEFT ANTI join; everything else
-          passes through *in its scan partition* — the table-sized side is
-          never shuffled and never sorted.  Only the batch itself (already
-          tiny) is clustered by file group before the write.  At cluster
-          scale this turns a COW rewrite into scan → codegen filter → write,
-          embarrassingly parallel per file, zero exchanges on the big side.
-        - **window merge** (large batches, or DEFAULT payload whose
-          precombine guard needs old-vs-new comparison): old ∪ new →
-          per-file-group latest-wins window → write, one shuffle keyed by
-          file group.
+        - **broadcast anti-join** (the batch broadcasts — ``n_new_rows`` ≤
+          ``index_broadcast_max_rows`` —, OVERWRITE_LATEST payload, batch
+          preCombined): stored rows whose key appears in the batch are
+          dropped by a broadcast LEFT ANTI join; everything else passes
+          through *in its scan partition* — the table-sized side is never
+          shuffled and never sorted.  Only the batch itself (already tiny)
+          is clustered by file group before the write.
+        - **window merge** (larger or unsized batches, or a payload that
+          compares old against new): old ∪ new → per-file-group
+          latest-wins window → write, one shuffle keyed by file group.
         """
         with _stage("cow.plan"):
-            if frozen_fgs is None:
-                from .services.clustering import pending_clustering_fgs
-                frozen_fgs = set(pending_clustering_fgs(self))
             rec_size = avg_record_size(self.meta, self.timeline,
                                        self.cfg.record_size_estimate)
             plan = plan_insert_buckets(insert_profile, view, self.cfg, rec_size,
@@ -1420,16 +1293,10 @@ class HudiTable:
         # without comparing against stored rows (merge_order_columns puts the
         # precombine guard first only for PAYLOAD_DEFAULT; the partial-update
         # payload must read stored values to fill null fields)
-        semantically_ok = (bool(rewrite_fgs) and self._new_version_wins()
-                           and self.cfg.combine_before_upsert)  # 1 row/key
-        if self.cfg.cow_broadcast_merge is None:      # auto: add size guard
-            fast = (semantically_ok and n_new_rows is not None
-                    and n_new_rows <= self.cfg.index_broadcast_max_rows)
-        elif self.cfg.cow_broadcast_merge:            # forced: skip the size
-            fast = semantically_ok                    # guard, never safety
-        else:
-            fast = False
-        if fast:
+        if (rewrite_fgs and self._new_version_wins()
+                and self.cfg.combine_before_upsert             # 1 row/key
+                and n_new_rows is not None
+                and n_new_rows <= self.cfg.index_broadcast_max_rows):
             # every stored version of a batch key dies (incl. duplicate-key
             # twins from insert/bulk_insert) — the preCombined batch row is
             # the slice's single new version; the anti-join kernel also drops
@@ -1439,11 +1306,9 @@ class HudiTable:
             # their insert complement) is already unique per MERGE_KEY; the
             # broadcast hash build collapses any residue, so skip the
             # dedup's exchange+aggregate pair
-            batch_keys = new_raw.select(*MERGE_KEY)
-            stats, schema = self._anti_join_rewrite(
-                view, instant_time, drop_deleted(new_raw), batch_keys,
-                rewrite_fgs, fg_map)
-            return stats, fg_map, schema
+            return self._anti_join_rewrite(
+                view, instant_time, drop_deleted(new_raw),
+                new_raw.select(*MERGE_KEY), rewrite_fgs, fg_map)
 
         new_rows = new_raw.withColumn(NEW_FLAG, F.lit(True))
         if rewrite_fgs:
@@ -1467,82 +1332,13 @@ class HudiTable:
                                     self.cfg, sort_cols=[META_RECORD_KEY],
                                     pre_partitioned=True,
                                     ensure_fgs=rewrite_fgs)
-        return stats, fg_map, schema
-
-    def _upsert_mor(self, view: FileSystemView, instant_time: str,
-                    updates: DataFrame, inserts: DataFrame,
-                    update_fgs: dict[str, str], insert_profile: dict[str, int],
-                    pending_compaction: Optional[dict[str, str]] = None):
-        """MOR: updates/deletes append parquet *delta* files to their file
-        group's latest slice (HoodieAppendHandle.java:71,336-390 — Spark has
-        no appendable row format, so one small columnar delta file per
-        (commit, file group) replaces the avro log block); inserts create new
-        base files."""
-        stats: list[WriteStat] = []
-        fg_map: dict[str, str] = {}
-        schema = None
-
-        # updates hitting METADATA_ONLY-bootstrapped groups rewrite them into
-        # engine-owned base files (the reference likewise falls back to a
-        # merge handle for bootstrap file groups) — logs can't attach to a
-        # file the engine doesn't own the layout of
-        ext_fgs = {sl.file_group for sl in view.latest_slices()
-                   if any(f.external for f in sl.base_files)}
-        ext_updates = {fg: p for fg, p in update_fgs.items() if fg in ext_fgs}
-        if ext_updates:
-            upd_ext = updates.filter(F.col(FG).isin(*ext_updates))
-            updates = updates.filter(~F.col(FG).isin(*ext_updates))
-            update_fgs = {fg: p for fg, p in update_fgs.items()
-                          if fg not in ext_updates}
-            s, m, schema = self._upsert_cow(view, instant_time, upd_ext,
-                                            inserts.limit(0), ext_updates, {})
-            stats += s
-            fg_map.update(m)
-
-        if update_fgs:
-            base_of = {sl.file_group: sl.base_instant
-                       for sl in view.latest_slices()}
-            # a file group with a PENDING compaction gets its new logs tagged
-            # with the compaction instant (the future base) — the compactor's
-            # plan won't cover them, so they survive as logs of the new slice
-            # instead of being orphaned (HoodieAppendHandle's pending-
-            # compaction routing).  the pending map was snapshotted BEFORE
-            # the view in _upsert_impl — see the ordering comment there.
-            for fg, ctime in (pending_compaction or {}).items():
-                if fg in update_fgs:
-                    base_of[fg] = max(base_of.get(fg) or "", ctime)
-            upd = updates.withColumn(META_FILE_NAME, F.col(FG))
-            schema = self._commit_schema(upd)
-            if self.cfg.mor_grouped_deltas:
-                from .writer import write_grouped_log_files
-                stats += write_grouped_log_files(
-                    upd, self.meta, instant_time, dict(update_fgs),
-                    {fg: base_of.get(fg) for fg in update_fgs},
-                    compression=self.cfg.parquet_compression)
-            else:
-                stats += write_instant_files(
-                    upd, self.meta, instant_time, dict(update_fgs), self.cfg,
-                    sort_cols=[META_RECORD_KEY], log=True,
-                    fg_base_instant={fg: base_of.get(fg) for fg in update_fgs},
-                    subdir="log")
-            fg_map.update(update_fgs)
-
-        has_inserts = bool(insert_profile) and any(v > 0 for v in insert_profile.values())
-        if has_inserts:
-            s, m, schema = self._mor_write_new_fgs(inserts, insert_profile,
-                                                   instant_time)
-            stats += s
-            fg_map.update(m)
-
-        if schema is None:
-            schema = self.stored_schema()
-        return stats, fg_map, schema
+        return stats, schema
 
     def _mor_write_new_fgs(self, inserts: DataFrame,
                            insert_profile: dict[str, int], instant_time: str):
         """MOR insert rows → brand-new base file groups (never packed into
         existing groups — logs may only attach to bases the engine owns the
-        full key-set of)."""
+        full key-set of).  Returns ``(stats, schema)``."""
         rec_size = avg_record_size(self.meta, self.timeline,
                                    self.cfg.record_size_estimate)
         plan = plan_insert_buckets(insert_profile, None, self.cfg, rec_size,
@@ -1557,92 +1353,122 @@ class HudiTable:
         stats = write_instant_files(assigned, self.meta, instant_time,
                                     fg_map, self.cfg,
                                     sort_cols=[META_RECORD_KEY])
-        return stats, fg_map, schema
+        return stats, schema
 
-    def _upsert_mor_fast(self, latest_sls: list, instant_time: str,
-                         updates: DataFrame, inserts: DataFrame,
-                         pending_compaction: Optional[dict[str, str]],
-                         is_delete: bool, tag_obs=None):
-        """Profile-free MOR upsert: the delta append needs no pre-write
-        counts — each update row already carries its file group from the
-        tagging join, and appends read nothing.  One Spark job writes the
-        delta files (materializing the tagging cache); the insert side is
-        then probed on that cache for ~free.  Saves one full action per
-        steady-state batch vs the profiled path (the reference pays the same
-        profile job per batch, WorkloadProfile.java:33-50).
+    def _upsert_mor_fast(self, view: FileSystemView, slices: list,
+                         instant_time: str, tagged: DataFrame,
+                         pending_compaction: dict[str, str],
+                         is_delete: bool, frozen_fgs: set):
+        """MOR upsert: updates/deletes append delta rows to their file
+        group's latest slice (HoodieAppendHandle.java:71,336-390 — parquet
+        can't append, so the batch writes a few shared delta files that
+        record per-group membership, writer.write_grouped_log_files);
+        inserts create new base file groups.  Returns ``(stats, schema,
+        wrote_inserts)``.
 
-        ``tag_obs``: Observation attached under the tagging cache counting
-        untagged (insert) rows.  The delta-write action evaluates every
-        cache partition (the observe node sits below the persist, the
-        update filter above it), so by the time the write returns the
-        metric is the EXACT insert count — an update-only batch skips the
-        insert-probe job entirely, folding it into the delta write the way
-        the reference folds sizing into the append handle's observed stats
-        (HoodieAppendHandle.java:336-390)."""
-        # ONE latest_slices materialization per batch, shared with the
-        # caller's has_ext probe (the walk+sort is O(file groups) driver
-        # work — at the 100k-group scale the driver probe targets, paying
-        # it three times per batch was a real cost)
-        base_of = {sl.file_group: sl.base_instant for sl in latest_sls}
-        fg_part = {sl.file_group: sl.partition for sl in latest_sls}
-        # pending-compaction log routing — see _upsert_mor for the contract
-        for fg, ctime in (pending_compaction or {}).items():
-            base_of[fg] = max(base_of.get(fg) or "", ctime)
-        upd = updates.withColumn(META_FILE_NAME, F.col(FG))
-        schema = self._commit_schema(upd)
-        with _stage("mor.delta_write"):
-            if self.cfg.mor_grouped_deltas:
-                from .writer import write_grouped_log_files
-                stats = write_grouped_log_files(
-                    upd, self.meta, instant_time, fg_part, base_of,
-                    compression=self.cfg.parquet_compression)
+        Profile-free in the common case: each update row already carries
+        its file group from the tagging join, and appends read nothing, so
+        one Spark job writes the delta files (materializing the tagging
+        cache) and the insert side is then probed on that cache for ~free
+        — one full action per batch fewer than the reference's
+        WorkloadProfile.java:33-50.
+
+        Updates into METADATA_ONLY bootstrap (external) groups rewrite them
+        copy-on-write into engine-owned base files (the reference likewise
+        falls back to a merge handle for bootstrap file groups) — logs
+        can't attach to a file the engine doesn't own the layout of.  While
+        the table has such groups, one per-(partition, group) tag profile
+        names the hit ones and sizes the inserts."""
+        ext_fgs = {sl.file_group for sl in slices
+                   if any(f.external for f in sl.base_files)}
+        tag_obs = None
+        if not ext_fgs and not is_delete and not frozen_fgs:
+            # fold the insert-existence probe into the delta-write action: a
+            # CollectMetrics node under the tagging cache counts untagged
+            # rows while the delta write materializes it, so the
+            # update-only batch (zero inserts) skips the insert-probe job.
+            # UNSAFE when a pending clustering plan exists: _check_frozen's
+            # bounded limit().count() probe is then the FIRST action on the
+            # cache and completes the observation from a PARTIAL scan.
+            from pyspark.sql import Observation
+            tag_obs = Observation()
+            tagged = tagged.observe(
+                tag_obs, F.count(F.when(F.col(FG_COL).isNull(), True))
+                .alias("n_inserts"))
+        tagged = tagged.persist()
+        try:
+            updates, inserts = self._split_tagged(tagged, is_delete)
+            stats: list[WriteStat] = []
+            schema = None
+            insert_profile = None           # unknown until counted
+            write_deltas = True
+            if ext_fgs:
+                with _stage("upsert.tag_profile"):
+                    fg_prof = tagged.groupBy(META_PARTITION_PATH,
+                                             FG_COL).count().collect()
+                update_fgs = {r[1] for r in fg_prof if r[1] is not None}
+                self._reject_frozen(frozen_fgs & update_fgs)
+                insert_profile = {} if is_delete else \
+                    {r[0]: r[2] for r in fg_prof if r[1] is None}
+                ext_updates = {r[1]: r[0] for r in fg_prof if r[1] in ext_fgs}
+                if ext_updates:
+                    stats, schema = self._upsert_cow(
+                        view, instant_time,
+                        updates.filter(F.col(FG).isin(*ext_updates)),
+                        inserts.limit(0), ext_updates, {},
+                        frozen_fgs=frozen_fgs)
+                    updates = updates.filter(~F.col(FG).isin(*ext_updates))
+                write_deltas = len(update_fgs) > len(ext_updates)
             else:
-                stats = write_instant_files(
-                    upd, self.meta, instant_time, fg_part, self.cfg,
-                    sort_cols=[META_RECORD_KEY], log=True,
-                    fg_base_instant=base_of, subdir="log")
-        fg_map = {s.file_group: s.partition for s in stats}
-
-        if not is_delete:
-            n_ins = None
-            if tag_obs is not None:
-                try:
-                    n_ins = tag_obs.get.get("n_inserts")
-                except Exception:
-                    # When the update side is EMPTY (pure-insert batch), AQE
-                    # empty-relation propagation collapses the delta-write
-                    # plan and the CollectMetrics results vanish — the
-                    # Observation completes with an empty row that the
-                    # py4j row conversion rejects.  Metrics lost ⟺ the
-                    # batch had no updates ⟺ inserts exist, so falling
-                    # back to the probe is exactly the pre-fold behavior.
-                    n_ins = None
-            if n_ins == 0 and stats:
-                # the delta write's observed metrics prove the batch was
-                # update-only — no probe job needed.  The `stats` guard is
-                # a positive invariant, not belt-and-braces: the write
-                # paths return [] exactly when the update side was empty,
-                # and an empty update side means the observation CANNOT
-                # have come from a full scan of the tagging cache (AQE may
-                # collapse the plan) — so a 0 metric is only trusted when
-                # a non-empty delta write proves the full scan happened.
-                insert_profile = {}
-            else:
-                # one action doubles as existence probe and bucket profile
-                # (tagged is already cached by the delta write above)
-                with _stage("mor.insert_probe"):
-                    insert_profile = {r[0]: r[1] for r in
-                                      inserts.groupBy(META_PARTITION_PATH)
-                                             .count().collect()}
-            if insert_profile:
-                with _stage("mor.new_fg_write"):
-                    s, m, schema = self._mor_write_new_fgs(
-                        inserts, insert_profile, instant_time)
-                stats += s
-                fg_map.update(m)
-        if schema is None:
-            schema = self.stored_schema()
-        return stats, fg_map, schema
+                self._check_frozen(updates, FG, frozen_fgs)
+            if write_deltas:
+                # a file group with a PENDING compaction gets its new logs
+                # tagged with the compaction instant (the future base) — the
+                # compactor's plan won't cover them, so they survive as logs
+                # of the new slice instead of being orphaned
+                # (HoodieAppendHandle's pending-compaction routing)
+                base_of = {sl.file_group: sl.base_instant for sl in slices}
+                for fg, ctime in pending_compaction.items():
+                    base_of[fg] = max(base_of.get(fg) or "", ctime)
+                upd = updates.withColumn(META_FILE_NAME, F.col(FG))
+                schema = self._commit_schema(upd)
+                with _stage("mor.delta_write"):
+                    from .writer import write_grouped_log_files
+                    delta = write_grouped_log_files(
+                        upd, self.meta, instant_time,
+                        {sl.file_group: sl.partition for sl in slices},
+                        base_of, compression=self.cfg.parquet_compression)
+                stats += delta
+                if insert_profile is None and tag_obs is not None and delta:
+                    # the delta write evaluated every cache partition (the
+                    # observe node sits below the persist), so the metric
+                    # is the EXACT insert count.  Trusted only after a
+                    # non-empty delta write: with an empty update side, AQE
+                    # may collapse the plan and the metrics vanish or come
+                    # from a partial scan.
+                    try:
+                        if tag_obs.get.get("n_inserts") == 0:
+                            insert_profile = {}
+                    except Exception:
+                        pass    # metrics lost: fall back to the probe
+            if not is_delete:
+                if insert_profile is None:
+                    # one action doubles as existence probe and bucket
+                    # profile (tagged is already cached by the delta write)
+                    with _stage("mor.insert_probe"):
+                        insert_profile = {r[0]: r[1] for r in
+                                          inserts.groupBy(META_PARTITION_PATH)
+                                          .count().collect()}
+                if insert_profile:
+                    with _stage("mor.new_fg_write"):
+                        s, schema = self._mor_write_new_fgs(
+                            inserts, insert_profile, instant_time)
+                    stats += s
+            if schema is None:
+                schema = self.stored_schema()
+            return stats, schema, bool(insert_profile)
+        finally:
+            tagged.unpersist()
 
     # ------------------------------------------------------------------
     def insert_overwrite(self, df: DataFrame,

@@ -1,9 +1,9 @@
 """Env-gated wall-clock probes for write-path stages (HUDI_SPARK_TIMING=1).
 
 When enabled, every ``_stage`` block prints to stderr AND appends
-``(label, seconds)`` to ``records`` so decomposition tools (tools/
-mor_decompose.py, tools/ab_probe.py) can attribute a batch's wall time to
-stages without parsing stderr.  ``records`` is unbounded only while the env
+``(label, seconds)`` to ``records`` so decomposition tools
+(tools/mor_decompose.py) can attribute a batch's wall time to stages
+without parsing stderr.  ``records`` is unbounded only while the env
 var is set — production runs never append.
 """
 

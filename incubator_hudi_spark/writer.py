@@ -22,6 +22,7 @@ from __future__ import annotations
 import os
 from concurrent.futures import ThreadPoolExecutor
 from typing import Optional, Sequence
+from urllib.parse import urlparse
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -39,29 +40,25 @@ from .timing import _stage
 FG = "_fg"                       # transient bucket column, becomes the dir name
 API_DELETE = "_hoodie_api_delete"  # hard delete (EmptyPayload semantics)
 
-#: Engine writes on LOCAL (file://) storage skip the Hadoop client-side
-#: .crc sidecars and _SUCCESS markers (r7, guide §6).  Rationale: the
-#: checksummed LocalFileSystem writes a hidden .<name>.crc next to EVERY
-#: output file and a _SUCCESS/._SUCCESS.crc pair per job, doubling the
-#: small-file create/rename churn of every write lane, while parquet pages
-#: already carry their own CRCs (parquet.page.write-checksum.enabled
-#: defaults to true) — the sidecars add I/O, not integrity.  The switch
-#: rides the write job's Hadoop conf (per-write .options(), merged by
-#: newHadoopConfWithOptions), so the user's session configuration and
-#: already-cached FileSystem instances are untouched, and it only applies
-#: to bare/file:// paths — hdfs://, s3a://, ... keep their native
-#: integrity machinery (the options are file-scheme keys and are not even
-#: emitted for other schemes).
-LOCAL_RAW_FS_WRITES = True
+def local_write_options(path: str, hadoop_conf) -> dict:
+    """Per-write options for engine writes to LOCAL storage: no Hadoop
+    client-side .crc sidecars and no _SUCCESS markers.  The checksummed
+    LocalFileSystem writes a hidden .<name>.crc next to EVERY output file and
+    a _SUCCESS/._SUCCESS.crc pair per job, doubling the small-file churn of
+    every write lane, while parquet pages already carry their own CRCs
+    (parquet.page.write-checksum.enabled defaults to true).  The options
+    ride the write job's Hadoop conf (per-write .options()), so the session
+    configuration and cached FileSystem instances are untouched.
 
-
-def local_write_options(path: str) -> dict:
-    """Per-write options disabling .crc sidecars + _SUCCESS markers for
-    engine writes to local paths (no-op for non-file schemes or when
-    LOCAL_RAW_FS_WRITES is off)."""
-    if not LOCAL_RAW_FS_WRITES:
-        return {}
-    if "://" in path and not path.startswith("file:"):
+    The path's scheme is resolved like Hadoop does: a scheme-less path takes
+    ``fs.defaultFS`` from ``hadoop_conf`` (anything with a ``get(key)``, e.g.
+    the session's ``_jsc.hadoopConfiguration()``), and only ``file`` gets the
+    options — hdfs://, s3a://, ... keep their own integrity machinery and
+    their _SUCCESS markers.  Resolving reads the conf only; it never
+    contacts a file system."""
+    scheme = urlparse(path).scheme or urlparse(
+        hadoop_conf.get("fs.defaultFS") or "file:///").scheme
+    if scheme != "file":
         return {}
     return {"fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
             "fs.file.impl.disable.cache": "true",
@@ -305,7 +302,8 @@ def write_grouped_log_files(
              .sortWithinPartitions(META_FILE_NAME, META_RECORD_KEY))
     with _stage("write.files"):
         (out.write.option("compression", compression)
-            .options(**local_write_options(out_dir))
+            .options(**local_write_options(
+                out_dir, df.sparkSession._jsc.hadoopConfiguration()))
             .mode("append").parquet(out_dir))
     with _stage("write.stats"):
         if not os.path.isdir(out_dir):             # empty batch wrote nothing
@@ -359,9 +357,6 @@ def write_instant_files(
     fg_to_partition: dict[str, str],
     cfg: WriteConfig,
     sort_cols: Optional[Sequence[str]] = None,
-    log: bool = False,
-    fg_base_instant: Optional[dict[str, str]] = None,
-    subdir: Optional[str] = None,
     pre_partitioned: bool = False,
     ensure_fgs: Optional[set[str]] = None,
 ) -> list[WriteStat]:
@@ -395,16 +390,8 @@ def write_instant_files(
         # ordering, so FileFormatWriter skips its own per-task sort
         out = out.sortWithinPartitions(FG, *(sort_cols or []))
     out_dir = meta.instant_data_dir(instant_time)
-    if subdir:
-        out_dir = os.path.join(out_dir, subdir)
-    if os.environ.get("HUDI_SPARK_EXPLAIN") == "1":
-        import sys as _sys
-        print(out._jdf.queryExecution().executedPlan().toString(),
-              file=_sys.stderr)
-    # base files honor the table's base format (HoodieFileFormat.java);
-    # per-group delta files (log=True here) stay parquet — they replace the
-    # reference's format-independent .log blocks
-    fmt = "parquet" if log else getattr(meta.config, "base_format", "parquet")
+    # base files honor the table's base format (HoodieFileFormat.java)
+    fmt = getattr(meta.config, "base_format", "parquet")
     with _stage("write.files"):
         codec = cfg.parquet_compression
         if fmt == "orc":
@@ -421,7 +408,8 @@ def write_instant_files(
                     "equivalent (use gzip/zlib, snappy, zstd, lz4, none)")
         w = (out.write
              .option("compression", codec)
-             .options(**local_write_options(out_dir))
+             .options(**local_write_options(
+                 out_dir, df.sparkSession._jsc.hadoopConfiguration()))
              .partitionBy(FG)
              .mode("append"))    # dir is unique per instant; append avoids pre-listing
         w.orc(out_dir) if fmt == "orc" else w.parquet(out_dir)
@@ -448,9 +436,8 @@ def write_instant_files(
                     pq.write_table(
                         empty, os.path.join(d, "part-empty-00000.parquet"))
     with _stage("write.stats"):
-        return collect_write_stats(meta, out_dir, fg_to_partition, log=log,
-                                   fg_base_instant=fg_base_instant,
-                                   default_base_instant=instant_time,
+        return collect_write_stats(meta, out_dir, fg_to_partition,
+                                   instant_time,
                                    stats_columns=cfg.stats_columns,
                                    fmt=fmt)
 
@@ -477,9 +464,7 @@ def _stat_value(v):
 
 def collect_write_stats(meta: TableMetaClient, out_dir: str,
                         fg_to_partition: dict[str, str],
-                        log: bool,
-                        fg_base_instant: Optional[dict[str, str]],
-                        default_base_instant: str,
+                        instant_time: str,
                         stats_columns: tuple = (),
                         fmt: str = "parquet") -> list[WriteStat]:
     """Build WriteStats from the written files (row count + record-key
@@ -567,8 +552,7 @@ def collect_write_stats(meta: TableMetaClient, out_dir: str,
             num_records=num_rows,
             min_key=min_k, max_key=max_k,
             col_stats=col_stats,
-            log=log,
-            base_instant=(fg_base_instant or {}).get(fg, None if log else default_base_instant),
+            base_instant=instant_time,
         )
 
     with ThreadPoolExecutor(max_workers=16) as ex:

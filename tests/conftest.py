@@ -45,3 +45,22 @@ def orders(spark):
 def events(spark):
     from incubator_hudi_spark.functions.io import load_table
     return load_table(spark, SF_DIR, "events")
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` calls ``fn`` under a fresh job group and returns
+    how many Spark jobs it ran (``statusTracker().getJobIdsForGroup``)."""
+    import uuid
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"job-count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job count")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    return count

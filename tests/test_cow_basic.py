@@ -324,11 +324,11 @@ def test_failed_write_rearms_recovery(spark, tmp_table_path, lineitem):
 
 def test_fused_profile_sampling_no_second_pass(spark, tmp_table_path,
                                                lineitem):
-    """r6: GLOBAL_SORT all-new-bucket loads gather range-split samples inside
-    the profile aggregation, so range_split_points must build splits from
-    the provided samples WITHOUT touching the input frame (the pre-r6 second
-    sampling scan).  Poisoning `prepared` proves no job can run; the
-    end-to-end layout property is pinned by test_bulk_insert_sort_modes."""
+    """GLOBAL_SORT all-new-bucket loads select range split points inside
+    the profile aggregation, so range_split_points must pass the provided
+    splits through WITHOUT touching the input frame (no second sampling
+    scan).  Poisoning `prepared` proves no job can run; the end-to-end
+    layout property is pinned by test_bulk_insert_sort_modes."""
     from incubator_hudi_spark.plans.buckets import (InsertBucket,
                                                     range_split_points)
 
@@ -336,29 +336,13 @@ def test_fused_profile_sampling_no_second_pass(spark, tmp_table_path,
         def __getattr__(self, name):
             raise AssertionError(
                 "range_split_points touched the input frame despite "
-                "caller-provided samples")
+                "caller-provided splits")
 
     plan = [InsertBucket("p1", "fg_a", 0, 100, True),
             InsertBucket("p1", "fg_b", 100, 200, True),
             InsertBucket("p2", "fg_c", 0, 50, True)]
-    samples = {"p1": [f"k{i:03d}" for i in range(0, 100, 7)], "p2": ["k1"]}
-    splits = range_split_points(_Poisoned(), plan, {"p1": 200, "p2": 50},
-                                "_hoodie_partition_path",
-                                "_hoodie_record_key", samples=samples)
-    # only multi-bucket partitions get split points; k buckets → k-1 points,
-    # drawn from the sorted sample
-    assert set(splits) == {"p1"}
-    assert len(splits["p1"]) == 1
-    assert splits["p1"][0] in samples["p1"]
-
-    # a multi-bucket partition with an (improbable) empty sample degrades to
-    # "everything → first bucket", same as the pre-r6 degenerate case
-    empty = range_split_points(_Poisoned(), plan, {"p1": 200, "p2": 50},
-                               "_p", "_k", samples={})
-    assert empty == {"p1": []}
-
-    # r7: caller-selected splits pass through verbatim (subset to the
-    # >1-bucket partitions), again with no job
+    # caller-selected splits pass through verbatim, subset to the
+    # >1-bucket partitions
     pre = range_split_points(_Poisoned(), plan, {"p1": 200, "p2": 50},
                              "_p", "_k",
                              splits={"p1": ["k050"], "p2": ["zzz"]})
@@ -429,7 +413,6 @@ def test_local_writes_skip_crc_sidecars(spark, tmp_table_path, lineitem):
 
     from incubator_hudi_spark import writer as W
 
-    assert W.LOCAL_RAW_FS_WRITES  # default ON
     t = make_lineitem_table(spark, tmp_table_path)
     t.bulk_insert(lineitem)
     t.upsert(lineitem.limit(100).withColumn("l_quantity", F.lit(7.0)))
@@ -437,8 +420,15 @@ def test_local_writes_skip_crc_sidecars(spark, tmp_table_path, lineitem):
     assert not [f for f in names if f.endswith(".crc")], names[:5]
     assert not [f for f in names if "SUCCESS" in f]
     assert t.read().filter("l_quantity = 7.0").count() > 0
-    # non-file schemes never get the options
-    assert W.local_write_options("s3a://bucket/x") == {}
-    assert W.local_write_options("hdfs://nn/x") == {}
-    assert W.local_write_options("/tmp/x") != {}
-    assert W.local_write_options("file:/tmp/x") != {}
+    # only paths that resolve to the file scheme get the options; a
+    # scheme-less path resolves against the Hadoop conf's fs.defaultFS
+    # (reading the conf contacts no file system)
+    conf = spark._jsc.hadoopConfiguration()
+    assert W.local_write_options("s3a://bucket/x", conf) == {}
+    assert W.local_write_options("hdfs://nn/x", conf) == {}
+    assert W.local_write_options("/tmp/x", conf) != {}
+    assert W.local_write_options("file:/tmp/x", conf) != {}
+    remote = spark._jvm.org.apache.hadoop.conf.Configuration(False)
+    remote.set("fs.defaultFS", "hdfs://nn:8020")
+    assert W.local_write_options("/tmp/x", remote) == {}
+    assert W.local_write_options("file:/tmp/x", remote) != {}

@@ -45,10 +45,12 @@ def _rewritten_fgs(t, instant):
 
 @pytest.mark.slow
 def test_fast_lane_matches_general_lane(spark, tmp_table_path, lineitem):
-    """Same batch through both lanes → identical snapshots."""
+    """Same batch through both lanes → identical snapshots.  A broadcast
+    cap below the batch sizes sends every batch of ``slow`` through the
+    tag-profile lane and its window merge."""
     fast = make_table(spark, tmp_table_path + "_fast")
     slow = make_table(spark, tmp_table_path + "_slow",
-                      write_config=WriteConfig(cow_broadcast_merge=False))
+                      write_config=WriteConfig(index_broadcast_max_rows=100))
     upd = (lineitem.filter("l_orderkey % 7 = 3")
            .withColumn("l_quantity", F.col("l_quantity") + 500.0))
     for t in (fast, slow):
@@ -156,14 +158,25 @@ def test_missing_stats_fall_back_to_rewrite(spark, tmp_table_path, lineitem):
     assert snap.count() == n_before
 
 
+def _point_fix(lineitem, q, *tables):
+    """Upsert a point-fix batch (~12 keys, fewer than half the file groups)
+    into each table: the next batch of a table with a pinned index then
+    takes the warm_tag probe."""
+    fix = (lineitem.filter("l_orderkey % 500 = 7")
+           .withColumn("l_quantity", F.lit(q)))
+    for t in tables:
+        t.upsert(fix)
+
+
 def _warm_table(spark, path, lineitem):
     from incubator_hudi_spark.config import INDEX_INMEMORY
     t = make_table(spark, path)
-    t.cfg = t.cfg.with_(index_type=INDEX_INMEMORY, fast_lane_probe="warm_tag")
+    t.cfg = t.cfg.with_(index_type=INDEX_INMEMORY)
     t.bulk_insert(lineitem)
     t.upsert(lineitem.limit(0))            # no-op warms nothing; real warm:
     t.upsert(lineitem.filter("l_orderkey % 97 = 0")
              .withColumn("l_quantity", F.lit(1.0)))   # loads + pins index
+    _point_fix(lineitem, 1.0, t)
     assert t._key_index is not None
     return t
 
@@ -176,12 +189,13 @@ def test_warm_tag_probe_matches_profile_lane(spark, tmp_table_path, lineitem):
     brand-new partition), and delete batches."""
     warm = _warm_table(spark, tmp_table_path + "_wt", lineitem)
     base = make_table(spark, tmp_table_path + "_pf")
-    from incubator_hudi_spark.config import INDEX_INMEMORY
-    base.cfg = base.cfg.with_(index_type=INDEX_INMEMORY)
+    # no session index cache → the warm probe is never possible
+    base.cfg = base.cfg.with_(cache_simple_index=False)
     base.bulk_insert(lineitem)
     base.upsert(lineitem.limit(0))
     base.upsert(lineitem.filter("l_orderkey % 97 = 0")
                 .withColumn("l_quantity", F.lit(1.0)))
+    _point_fix(lineitem, 1.0, base)
 
     # 1. update-only
     upd = (lineitem.filter("l_orderkey % 11 = 4")
@@ -189,6 +203,8 @@ def test_warm_tag_probe_matches_profile_lane(spark, tmp_table_path, lineitem):
     warm.upsert(upd)
     base.upsert(upd)
     # the update-only batch kept the cache + the exact lane ran
+    assert warm._last_probe_mode == "warm_tag"
+    assert base._last_probe_mode == "profile"
     assert warm._key_index is not None
 
     # 2. mixed: updates + inserts into existing AND brand-new partitions
@@ -196,13 +212,17 @@ def test_warm_tag_probe_matches_profile_lane(spark, tmp_table_path, lineitem):
                .withColumn("l_orderkey", F.col("l_orderkey") + 9_000_000)
                .withColumn("l_shipdate", F.expr("l_shipdate + INTERVAL 40 YEARS")))
     mixed = upd.withColumn("l_quantity", F.lit(78.0)).unionByName(ins_new)
+    _point_fix(lineitem, 2.0, warm, base)
     warm.upsert(mixed)
     base.upsert(mixed)
+    assert warm._last_probe_mode == "warm_tag"
 
     # 3. delete a slice of keys
     dels = lineitem.filter("l_orderkey % 19 = 6")
+    _point_fix(lineitem, 3.0, warm, base)
     warm.delete(dels.select("l_orderkey", "l_linenumber", "l_shipdate"))
     base.delete(dels.select("l_orderkey", "l_linenumber", "l_shipdate"))
+    assert warm._last_probe_mode == "warm_tag"
 
     a = warm.read().drop("_hoodie_commit_time", "_hoodie_file_name",
                          "_hoodie_commit_seqno")
@@ -221,6 +241,7 @@ def test_warm_tag_exact_rewrite_set(spark, tmp_table_path, lineitem):
     loc = (lineitem.filter(F.date_format("l_shipdate", "yyyy-MM") == part)
            .withColumn("l_quantity", F.lit(55.0)))
     c = warm.upsert(loc)
+    assert warm._last_probe_mode == "warm_tag"
     touched_parts = {s.partition for s in warm.view().latest_slices()
                      if s.base_instant == c}
     assert touched_parts == {part}, touched_parts
@@ -243,27 +264,27 @@ def test_warm_tag_frozen_group_conflict(spark, tmp_table_path, lineitem):
         precombine_field="l_shipdate")
     # tiny target size → several groups per partition → clusterable plan
     warm.cfg = warm.cfg.with_(index_type=INDEX_INMEMORY,
-                              fast_lane_probe="warm_tag",
                               target_file_size_bytes=64 * 1024)
     warm.bulk_insert(lineitem)
     warm.upsert(lineitem.filter("l_orderkey % 97 = 0")
                 .withColumn("l_quantity", F.lit(1.0)))
+    _point_fix(lineitem, 2.0, warm)
     assert warm._key_index is not None
     st = schedule_clustering(warm, sort_columns=["l_orderkey"])
     assert st is not None
     with pytest.raises(ClusteringUpdateConflict):
         warm.upsert(lineitem.withColumn("l_quantity", F.lit(9.0)))
+    assert warm._last_probe_mode == "warm_tag"
 
 
 def test_auto_probe_routes_by_spread(spark, tmp_table_path, lineitem):
-    """fast_lane_probe='auto' routes per batch on the carried spread
+    """The fast lane routes its probe per batch on the carried spread
     signal: point-fix batches (keys ≪ groups) take the exact warm_tag
     lane; full-spread batches (keys ≥ groups) take the fused profile
     lane.  First batch has no history → profile."""
     from incubator_hudi_spark.config import INDEX_INMEMORY
     t = make_table(spark, tmp_table_path)
-    t.cfg = t.cfg.with_(index_type=INDEX_INMEMORY)    # default probe: auto
-    assert t.cfg.fast_lane_probe == "auto"
+    t.cfg = t.cfg.with_(index_type=INDEX_INMEMORY)
     t.bulk_insert(lineitem)
     tiny = (lineitem.filter("l_orderkey % 500 = 7")
             .withColumn("l_quantity", F.lit(5.0)))
@@ -277,3 +298,48 @@ def test_auto_probe_routes_by_spread(spark, tmp_table_path, lineitem):
     assert t._last_probe_mode == "profile"           # spread history
     # values all landed regardless of lane routing
     assert t.read().filter("l_quantity = 8.0").count() == t.read().count()
+
+
+# ---- Spark jobs per commit, one case per COW lane ----------------------
+# Pinned so a refactor of the upsert path cannot add (or silently drop) a
+# Spark action.  A first upsert into a table seeds the routing history and
+# the key index, so the steady-state commit is the one after it.
+
+def _cow_table(spark, path, lineitem, **cfg):
+    from incubator_hudi_spark.config import INDEX_INMEMORY
+    t = make_table(spark, path)
+    t.cfg = t.cfg.with_(**{"index_type": INDEX_INMEMORY, **cfg})
+    t.bulk_insert(lineitem)
+    return t
+
+
+def _updates(lineitem, where, q):
+    return lineitem.filter(where).withColumn("l_quantity", F.lit(q))
+
+
+def test_jobs_per_commit_cow_profile_lane(spark, tmp_table_path, lineitem,
+                                          spark_jobs):
+    t = _cow_table(spark, tmp_table_path, lineitem)
+    counts = [spark_jobs(lambda q=q: t.upsert(
+        _updates(lineitem, "l_orderkey % 5 = 1", q))) for q in (1.0, 2.0, 3.0)]
+    assert t._last_probe_mode == "profile"
+    assert counts == [15, 12, 12]
+
+
+def test_jobs_per_commit_cow_warm_tag_lane(spark, tmp_table_path, lineitem,
+                                           spark_jobs):
+    t = _cow_table(spark, tmp_table_path, lineitem)
+    counts = [spark_jobs(lambda q=q: t.upsert(
+        _updates(lineitem, "l_orderkey % 500 = 7", q))) for q in (1.0, 2.0, 3.0)]
+    assert t._last_probe_mode == "warm_tag"
+    assert counts == [15, 16, 13]
+
+
+def test_jobs_per_commit_cow_window_merge(spark, tmp_table_path, lineitem,
+                                          spark_jobs):
+    from incubator_hudi_spark.config import INDEX_SIMPLE
+    t = _cow_table(spark, tmp_table_path, lineitem, index_type=INDEX_SIMPLE,
+                   index_broadcast_max_rows=100)
+    counts = [spark_jobs(lambda q=q: t.upsert(
+        _updates(lineitem, "l_orderkey % 5 = 1", q))) for q in (1.0, 2.0, 3.0)]
+    assert counts == [15, 12, 12]

@@ -17,18 +17,18 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from incubator_hudi_spark import HudiTable, MERGE_ON_READ
+from incubator_hudi_spark import COPY_ON_WRITE, HudiTable, MERGE_ON_READ
 from incubator_hudi_spark.fsview import FileSystemView
 from incubator_hudi_spark.services import compaction as C
 
 
-def _mor(spark, path, li, grouped=True):
+def _mor(spark, path, li, table_type=MERGE_ON_READ):
     t = HudiTable.create(
         spark, str(path), "t",
         recordkey_fields=["l_orderkey", "l_linenumber"],
         partition_expr="date_format(l_shipdate, 'yyyy-MM')",
-        precombine_field="l_shipdate", table_type=MERGE_ON_READ)
-    t.cfg = t.cfg.with_(inline_compaction=False, mor_grouped_deltas=grouped)
+        precombine_field="l_shipdate", table_type=table_type)
+    t.cfg = t.cfg.with_(inline_compaction=False)
     return t
 
 
@@ -38,7 +38,7 @@ def _delta_files(t):
                                  recursive=True)]
 
 
-def test_grouped_write_bounds_file_count_and_matches_ungrouped(
+def test_grouped_write_bounds_file_count_and_matches_cow_twin(
         spark, tmp_table_path, lineitem):
     t = _mor(spark, tmp_table_path, lineitem)
     t.upsert(lineitem)
@@ -59,8 +59,9 @@ def test_grouped_write_bounds_file_count_and_matches_ungrouped(
                         for sl in t.view().latest_slices())
     assert total_entries == len(touched_fgs)     # one entry per touched group
 
-    # ungrouped twin produces the same snapshot
-    t2 = _mor(spark, tmp_table_path + "_u", lineitem, grouped=False)
+    # a COW twin fed the same batches produces the same snapshot
+    t2 = _mor(spark, tmp_table_path + "_cow", lineitem,
+              table_type=COPY_ON_WRITE)
     t2.upsert(lineitem)
     t2.upsert(upd)
     a = snap.select(*[c for c in snap.columns if not c.startswith("_hoodie")])
@@ -133,3 +134,36 @@ def test_cleaning_refcounts_shared_delta_files(spark, tmp_table_path,
     assert snap.groupBy("l_orderkey", "l_linenumber",
                         "_hoodie_partition_path").count() \
                .filter("count > 1").count() == 0
+
+
+# ---- Spark jobs per commit, one case per MOR lane ----------------------
+
+def test_jobs_per_commit_mor_update_only(spark, tmp_table_path, lineitem,
+                                         spark_jobs):
+    t = _mor(spark, tmp_table_path, lineitem)
+    t.upsert(lineitem)
+    counts = [spark_jobs(lambda q=q: t.upsert(
+        lineitem.filter("l_orderkey % 5 = 1").withColumn("l_quantity",
+                                                         F.lit(q))))
+              for q in (1.0, 2.0, 3.0)]
+    assert counts == [11, 11, 11]
+
+
+def test_jobs_per_commit_mor_bootstrap_group(spark, tmp_path, lineitem,
+                                             spark_jobs):
+    """Updates into a metadata_only bootstrap group rewrite it copy-on-
+    write; the rest of the batch appends deltas."""
+    src = str(tmp_path / "legacy")
+    (lineitem.withColumn("month", F.date_format("l_shipdate", "yyyy-MM"))
+     .repartition(4).write.partitionBy("month").parquet(src))
+    t = _mor(spark, tmp_path / "t", lineitem)
+    t.bootstrap(src, mode="metadata_only")
+    batches = [lineitem.filter(w).withColumn("l_quantity", F.lit(q))
+               for w, q in (("l_orderkey % 50 = 1", 1.0),
+                            ("l_orderkey % 5 = 1", 2.0),
+                            ("l_orderkey % 5 = 1", 3.0))]
+    counts = [spark_jobs(lambda b=b: t.upsert(b)) for b in batches]
+    ext = [sl for sl in t.view().latest_slices()
+           if any(f.external for f in sl.base_files)]
+    assert ext, "test premise: bootstrap groups remain"
+    assert counts == [19, 17, 14]

@@ -97,10 +97,27 @@ def test_dedup_exact_substrings_intra_doc_repeat(spark):
     assert out[2] == "lead in words"       # cross-doc copy still removed
 
 
-def test_reliable_checkpoint_option(spark, documents, tmp_path):
+@pytest.fixture()
+def no_checkpoint_dir(spark):
+    """The session's checkpoint dir unset before and after the test: an
+    operator sets it at most once per session, so tests that set it must
+    not leak it into each other."""
+    sc = spark.sparkContext
+
+    def unset():
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            sc._jvm.scala.Option.apply(None))
+    unset()
+    yield
+    unset()
+
+
+def test_reliable_checkpoint_option(spark, documents, tmp_path,
+                                    no_checkpoint_dir):
     """checkpoint_dir switches localCheckpoint -> reliable checkpoint in
     the lineage-truncating operators; results are identical and the
     checkpoint actually lands in the given directory."""
+    import os
     planted = (documents.limit(3)
                .withColumn("doc_id", F.col("doc_id") + 600_000))
     corpus = documents.limit(60).unionByName(planted)
@@ -112,18 +129,54 @@ def test_reliable_checkpoint_option(spark, documents, tmp_path):
     a = sorted(map(tuple, base.collect()))
     b = sorted(map(tuple, rel.collect()))
     assert a == b
-    import os
-    assert any(os.scandir(ckpt_dir)), "reliable checkpoint wrote nothing"
+
+    def n_checkpoints():
+        return sum(len(fs) for _, _, fs in os.walk(ckpt_dir))
+    n_text = n_checkpoints()
+    assert n_text, "reliable checkpoint wrote nothing"
 
     pairs = dedup.minhash_lsh_pairs(corpus, k=16, bands=8,
                                     verify_threshold=0.5)
     c1 = sorted(map(tuple, dedup.dup_clusters(pairs).collect()))
-    ckpt2 = str(tmp_path / "ckpt2")
     c2 = sorted(map(tuple,
-                    dedup.dup_clusters(pairs, checkpoint_dir=ckpt2)
+                    dedup.dup_clusters(pairs, checkpoint_dir=ckpt_dir)
                     .collect()))
     assert c1 == c2
-    assert any(os.scandir(ckpt2))
+    assert n_checkpoints() > n_text
+
+
+def test_checkpoint_dir_conflict_raises(spark, documents, tmp_path,
+                                        no_checkpoint_dir):
+    """Two operators passing different checkpoint_dirs: the first sets the
+    session's dir, the second raises instead of redirecting it."""
+    corpus = documents.limit(60)
+    first = str(tmp_path / "first")
+    text.dedup_exact_substrings(corpus, min_words=8,
+                                checkpoint_dir=first).collect()
+    current = spark.sparkContext.getCheckpointDir()
+    assert current.rstrip("/").rsplit("/", 2)[-2] == "first"
+    pairs = dedup.minhash_lsh_pairs(corpus, k=16, bands=8,
+                                    verify_threshold=0.5)
+    with pytest.raises(ValueError, match="checkpoint dir"):
+        dedup.dup_clusters(pairs, checkpoint_dir=str(tmp_path / "second"))
+    assert spark.sparkContext.getCheckpointDir() == current
+
+
+def test_checkpoint_keeps_user_checkpoint_dir(spark, documents, tmp_path,
+                                              no_checkpoint_dir):
+    """A checkpoint dir the user set beforehand is kept: an operator given
+    the same dir checkpoints under it, one given None checkpoints locally."""
+    import os
+    sc = spark.sparkContext
+    user_dir = str(tmp_path / "user")
+    sc.setCheckpointDir(user_dir)
+    current = sc.getCheckpointDir()
+    corpus = documents.limit(60)
+    text.dedup_exact_substrings(corpus, min_words=8,
+                                checkpoint_dir=user_dir).collect()
+    text.dedup_exact_substrings(corpus, min_words=8).collect()
+    assert sc.getCheckpointDir() == current
+    assert any(fs for _, _, fs in os.walk(user_dir))
 
 
 def test_simhash_near_dups(spark, documents):
