@@ -188,22 +188,12 @@ class WriteConfig:
     # an older layout (hoodie.auto.upgrade / UpgradeDowngrade default true);
     # False → raise TableVersionError instead
     auto_upgrade: bool = True
-    # batches up to this many rows may collect their key set driver-side to
-    # bloom-prune the COW rewrite set (bloom.py sidecar; the reference BLOOM
-    # index's second pruning stage after min/max ranges)
-    bloom_prune_max_batch_keys: int = 5_000
     # global indexes: when an update's partition expression maps to a new
     # partition, False (reference default) routes it to the record's EXISTING
     # partition; True MOVES the record — delete in the old partition + insert
     # in the new (hoodie.bloom/simple.index.update.partition.path,
     # SparkHoodieGlobalBloomIndex.java:143)
     global_index_update_partition_path: bool = False
-    # MOR merged read/compaction: when a dirty slice-set's total log bytes is
-    # under this, the base side is split by a broadcast of the log key set —
-    # untouched keys pass through in their scan partitions (ZERO shuffle of
-    # the base table) and only touched keys enter the latest-wins window.
-    # Above it, the global union+window path runs (logs too big to broadcast).
-    mor_merge_broadcast_max_log_bytes: int = 64 * 1024 * 1024
     # write a metadata-table view checkpoint every N data commits
     # (HoodieBackedTableMetadataWriter sync cadence; 0 disables)
     metadata_checkpoint_commits: int = 10

@@ -89,6 +89,18 @@ def base_key_range(sl: "FileSlice") -> Optional[tuple[str, str]]:
     return min(mins), max(maxs)
 
 
+def may_hold_keys(sl: "FileSlice", lo: Optional[str],
+                  hi: Optional[str]) -> bool:
+    """False only when the slice's base stats prove it holds no record key
+    in [lo, hi] (BLOOM-style min/max range pruning,
+    SparkHoodieBloomIndex.java:119-140); unknown bounds or incomplete stats
+    cannot prune."""
+    rng = base_key_range(sl)
+    if rng is None or lo is None or hi is None:
+        return True
+    return not (hi < rng[0] or lo > rng[1])
+
+
 @dataclass
 class FileSlice:
     partition: str
@@ -228,11 +240,8 @@ class FileSystemView:
             self._part_idx = idx
         return self._part_idx
 
-    def latest_slices(
-        self,
-        partitions: Optional[Iterable[str]] = None,
-        include_pending_compaction: bool = True,
-    ) -> list[FileSlice]:
+    def latest_slices(self, partitions: Optional[Iterable[str]] = None
+                      ) -> list[FileSlice]:
         """Latest live slice per file group (partition-pruned if asked)."""
         if partitions is not None:
             pidx = self._partition_index()
@@ -308,18 +317,6 @@ class FileSystemView:
             sl for sl in self.latest_slices([partition])
             if sl.base_size < limit_bytes and not sl.log_files
         ]
-
-    def key_stats(self) -> list[tuple[str, str, str, str, str]]:
-        """(partition, fg, min_key, max_key, base_instant) of latest slices —
-        the BLOOM-style pruning stats (SparkHoodieBloomIndex.java:119-140,
-        min/max ranges; ours live in commit metadata instead of footers)."""
-        out = []
-        for sl in self.latest_slices():
-            rng = base_key_range(sl)
-            if rng is not None:
-                out.append((sl.partition, sl.file_group, rng[0], rng[1],
-                            sl.base_instant))
-        return out
 
 
 def incremental_window(timeline, begin, end):

@@ -8,8 +8,9 @@ Reference parity (hudi-client/.../index/):
     prunes candidate files with per-file min/max key ranges + bloom filters
     from parquet footers before verifying against actual keys.  PySpark can't
     read footer blooms, so our commit manifest stores per-file min/max record
-    keys (fsview.key_stats) and we prune the *file list* before the key scan —
-    same correctness (pruning is only an accelerator), one fewer pass.
+    keys (fsview.base_key_range) and we prune the *file list* before the key
+    scan (fsview.may_hold_keys) — same correctness (pruning is only an
+    accelerator), one fewer pass.
 
 Scale notes: the key scan is column-pruned to the 3 meta columns (parquet
 columnar → reads ~nothing else), restricted to partitions present in the
@@ -28,8 +29,8 @@ from pyspark.sql.types import StringType, StructField, StructType
 from .config import (INDEX_BLOOM, INDEX_GLOBAL_BLOOM, INDEX_GLOBAL_SIMPLE,
                      INDEX_SIMPLE, META_FILE_NAME, META_PARTITION_PATH,
                      META_RECORD_KEY)
-from .fsview import FileSystemView
-from .scan import scan_parquet
+from .fsview import FileSystemView, may_hold_keys
+from .scan import bootstrap_skeleton, scan_parquet
 from .metaclient import TableMetaClient
 
 FG_COL = "_hoodie_index_fg"
@@ -52,16 +53,7 @@ def _candidate_slices(view: FileSystemView, index_type: str,
     parts = None if is_global(index_type) else partitions
     slices = view.latest_slices(parts)
     if index_type in (INDEX_BLOOM, INDEX_GLOBAL_BLOOM) and key_range is not None:
-        from .fsview import base_key_range
-        lo, hi = key_range
-        pruned = []
-        for sl in slices:
-            rng = base_key_range(sl)
-            if rng is None:
-                pruned.append(sl)  # incomplete stats → cannot prune
-            elif not (hi < rng[0] or lo > rng[1]):
-                pruned.append(sl)
-        slices = pruned
+        slices = [sl for sl in slices if may_hold_keys(sl, *key_range)]
     return slices
 
 
@@ -87,11 +79,12 @@ def load_key_index(spark: SparkSession, meta: TableMetaClient, view: FileSystemV
         # caller proved (bloom second stage) batch keys live only here
         slices = [sl for sl in slices if sl.file_group in only_fgs]
     base_paths, log_paths = [], []
-    ext: list[tuple[str, str]] = []   # (abs path, fg)
+    ext: list[tuple[str, str, str]] = []   # (abs path, fg, bootstrap instant)
     for sl in slices:
         for f in sl.base_files:
             if f.external:
-                ext.append((meta.abs_path(f.path), sl.file_group))
+                ext.append((meta.abs_path(f.path), sl.file_group,
+                            sl.base_instant))
             else:
                 base_paths.append(meta.abs_path(f.path))
         log_paths.extend(meta.abs_path(l.path) for l in sl.log_files)
@@ -114,15 +107,11 @@ def load_key_index(spark: SparkSession, meta: TableMetaClient, view: FileSystemV
         if tc is None:
             raise ValueError("external base files need the table config for "
                              "key derivation")
-        from .keygen import partition_path_col, record_key_col
-        src = scan_parquet(spark, [p for p, _ in ext])
-        norm = F.regexp_replace(F.input_file_name(), "^file:/*", "/")
-        fg_map = F.create_map(*[x for p, fg in ext
-                                for x in (F.lit(p), F.lit(fg))])
-        dfs.append(src.select(
-            record_key_col(tc.recordkey_fields).alias(META_RECORD_KEY),
-            partition_path_col(tc.partition_expr).alias(META_PARTITION_PATH),
-            fg_map[norm].alias(META_FILE_NAME)))
+        skel = bootstrap_skeleton(ext, tc)
+        src = scan_parquet(spark, [p for p, _, _ in ext])
+        dfs.append(src.select(*[skel[c].alias(c) for c in
+                                (META_RECORD_KEY, META_PARTITION_PATH,
+                                 META_FILE_NAME)]))
     if not dfs:
         return spark.createDataFrame([], _KEY_SCAN_SCHEMA) \
             .select(F.col(META_RECORD_KEY),

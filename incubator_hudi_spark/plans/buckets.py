@@ -41,8 +41,8 @@ def new_fg_id() -> str:
 
 
 #: target number of sampled keys per planned bucket for GLOBAL_SORT range
-#: split points.  Also used to derive the count-free sample fraction of the
-#: fused profile pass (see range_split_points / table._write_inserts):
+#: split points.  The count-free sample fraction of the fused profile pass
+#: (see fused_profile_splits / table._write_inserts) derives from it:
 #: f = SAMPLES_PER_BUCKET * rec_size / target_file_size — since a partition
 #: is planned k ≈ n·rec_size/target buckets, a uniform f yields ≈ this many
 #: samples per bucket regardless of n, so ONE aggregation can collect counts
@@ -134,8 +134,8 @@ def fused_profile_splits(src: DataFrame, partition_col: str, key_col: str,
     plan's positive takes at exactly that k).  The driver therefore
     collects O(total buckets) keys, not O(total samples) — at the 100 TB
     bulk-load shape ~875k buckets × 100 samples of raw keys would be a
-    multi-GB driver payload.  The selection expression mirrors the
-    driver-side fallback in range_split_points index for index:
+    multi-GB driver payload.  The selection expression is the classic
+    driver-side quantile pick, index for index:
     idx = min(len(ks)-1, floor(len(ks)·i/k)), ks sorted (sort_array's
     UTF8 binary order = Python's code-point order, a UTF-8 property)."""
     frac = min(1.0, (samples_per_bucket * rec_size)
@@ -157,66 +157,22 @@ def fused_profile_splits(src: DataFrame, partition_col: str, key_col: str,
                 "ELSE array() END").alias("_splits")))
 
 
-def range_split_points(prepared: DataFrame, plan: list[InsertBucket],
-                       profile: dict[str, int],
-                       partition_col: str, key_col: str,
-                       samples_per_bucket: int = SAMPLES_PER_BUCKET,
-                       splits: Optional[dict[str, list[str]]] = None
-                       ) -> dict[str, list[str]]:
+def range_split_points(plan: list[InsertBucket],
+                       splits: dict[str, list[str]]) -> dict[str, list[str]]:
     """Per-partition key split points for GLOBAL_SORT assignment
     (GlobalSortPartitioner.java:34-45 — ``records.sortBy``; Spark's own
-    RangePartitioner uses the same sample-then-split technique).  Only
-    partitions planned with >1 bucket are sampled — steady-state writes
-    (one bucket per partition) pay nothing.
+    RangePartitioner uses the same sample-then-split technique).
 
-    ``splits``: split points already SELECTED distributed (r7 — the fused
-    profile aggregation in table._write_inserts reduces each partition's
-    sorted key sample to its k-1 quantile points executor-side, so the
-    driver never sees raw sampled keys); NO Spark job runs here and this
-    function only subsets to the >1-bucket partitions.
-
-    Without ``splits``, one sampling job runs (the pre-r6 shape, kept for
-    callers that profile a different frame than they assign).  Note the
-    ``max(samples_per_bucket·k, 50)`` per-partition sample floor applies
-    only to this fallback path; the fused paths use a uniform count-free
-    fraction (see SAMPLES_PER_BUCKET above)."""
-    from collections import defaultdict
-    k_of: dict[str, int] = defaultdict(int)
-    for b in plan:
-        k_of[b.partition] += 1
-    need = {p: k for p, k in k_of.items() if k > 1}
-    if not need:
-        return {}
-    if splits is not None:
-        return {p: list(splits.get(p, [])) for p in need}
-    fracs = {p: min(1.0, max(samples_per_bucket * k, 50)
-                    / max(1, profile.get(p, 1)))
-             for p, k in need.items()}
-    frac_map = F.create_map(*[x for p, fr in fracs.items()
-                              for x in (F.lit(p), F.lit(fr))])
-    sampled = (prepared
-               .select(F.col(partition_col).alias("_p"),
-                       F.col(key_col).alias("_k"))
-               .filter(F.col("_p").isin(list(need)))
-               # null record keys would crash sorted() below (str/None);
-               # drop them like the fused path's when()→null does —
-               # assign_insert_buckets_range coalesces nulls into the
-               # first interval either way
-               .filter(F.col("_k").isNotNull())
-               .filter(F.rand(46474747) < frac_map[F.col("_p")])
-               .collect())
-    by_p: dict[str, list[str]] = defaultdict(list)
-    for r in sampled:
-        by_p[r[0]].append(r[1])
-    out = {}
-    for p, k in need.items():
-        ks = sorted(by_p.get(p, []))
-        if not ks:
-            out[p] = []             # degenerate: everything → first bucket
-            continue
-        out[p] = [ks[min(len(ks) - 1, int(len(ks) * i / k))]
-                  for i in range(1, k)]
-    return out
+    ``splits``: split points already SELECTED distributed — the fused
+    profile aggregation (fused_profile_splits, run by
+    table._write_inserts) reduces each partition's sorted key sample to
+    its k-1 quantile points executor-side, so the driver never sees raw
+    sampled keys.  NO Spark job runs here: this only subsets to the
+    partitions planned with >1 bucket (steady-state one-bucket writes
+    need no split)."""
+    from collections import Counter
+    k_of = Counter(b.partition for b in plan)
+    return {p: list(splits.get(p, [])) for p, k in k_of.items() if k > 1}
 
 
 def assign_insert_buckets_range(spark: SparkSession, inserts: DataFrame,

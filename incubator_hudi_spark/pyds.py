@@ -340,7 +340,7 @@ def _read_slice(part: SlicePartition, read_schema: StructType,
     if part.external:
         # METADATA_ONLY-bootstrapped slice: the adopted source file stores no
         # meta columns — derive the virtual skeleton here, mirroring the
-        # DataFrame path's _scan_external (table.py) and the reference's
+        # DataFrame path's scan.bootstrap_skeleton and the reference's
         # skeleton stitch (HoodieBootstrapRDD.scala).  Keygen parity with the
         # engine comes from sharing pyds_write's pandas keygen.
         import pandas as pd
@@ -397,7 +397,7 @@ def _read_slice(part: SlicePartition, read_schema: StructType,
         for p in part.base_paths:
             tbl = _read_file(p, filters)
             # snapshot semantics drop soft-deleted winners table-wide when
-            # the marker is part of the schema (table._read_slices tail);
+            # the marker is part of the schema (HudiTable._read_slices' tail);
             # read-optimized serves raw bases and keeps them
             if part.drop_deletes and DELETE_MARKER in tbl.column_names:
                 keep = pc.invert(pc.coalesce(
@@ -421,7 +421,7 @@ def _read_slice(part: SlicePartition, read_schema: StructType,
     for p in dict.fromkeys(part.log_paths):   # dedupe shared grouped files
         t = _read_file(p)
         # grouped delta files hold rows of MANY file groups — keep this
-        # slice's rows only (table._read_slices' (file, group) pair filter;
+        # slice's rows only (HudiTable._scan_logs' (file, group) pair filter;
         # every row carries its group in _hoodie_file_name)
         t = t.filter(pc.equal(t.column(META_FILE_NAME), part.file_group))
         logs.append(_align(t, dschema))

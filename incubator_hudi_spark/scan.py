@@ -22,7 +22,12 @@ from __future__ import annotations
 import threading
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from .config import (META_COMMIT_SEQNO, META_COMMIT_TIME, META_FILE_NAME,
+                     META_PARTITION_PATH, META_RECORD_KEY)
+from .keygen import partition_path_col, record_key_col
 
 _CONF_LOCK = threading.Lock()
 
@@ -68,3 +73,29 @@ def scan_parquet(spark: SparkSession, paths: Sequence[str],
                 spark.conf.unset(_CONF)
             else:
                 spark.conf.set(_CONF, prev)
+
+
+def bootstrap_skeleton(files: Sequence[tuple[str, str, str]],
+                       tc) -> dict[str, Column]:
+    """Virtual skeleton of METADATA_ONLY-bootstrapped source files: the meta
+    columns the reference stitches from skeleton files
+    (HoodieBootstrapRelation.scala / HoodieBootstrapRDD.scala) as pure
+    expressions over a scan of ``files`` — (abs path, file group, bootstrap
+    instant) triples.  Key/partition come from the keygen, commit time from
+    the bootstrap instant and file name from a path → file-group map keyed
+    on the scanned row's input file.  Callers scan the files themselves and
+    select the columns they need."""
+    norm = F.regexp_replace(F.input_file_name(), "^file:/*", "/")
+    fg_map = F.create_map(*[x for p, fg, _ in files
+                            for x in (F.lit(p), F.lit(fg))])
+    it_map = F.create_map(*[x for p, _, it in files
+                            for x in (F.lit(p), F.lit(it))])
+    return {
+        META_RECORD_KEY: record_key_col(tc.recordkey_fields),
+        META_PARTITION_PATH: partition_path_col(tc.partition_expr),
+        META_COMMIT_TIME: it_map[norm],
+        META_COMMIT_SEQNO: F.concat_ws(
+            "_", it_map[norm],
+            F.monotonically_increasing_id().cast("string")),
+        META_FILE_NAME: fg_map[norm],
+    }

@@ -32,15 +32,16 @@ from .config import (BULK_INSERT, COPY_ON_WRITE, DELETE, DELETE_MARKER,
                      DELETE_PARTITION, INDEX_INMEMORY, INDEX_SIMPLE, INSERT,
                      INSERT_OVERWRITE,
                      INSERT_OVERWRITE_TABLE, MERGE_ON_READ, META_COLUMNS,
-                     META_COMMIT_SEQNO, META_COMMIT_TIME, META_FILE_NAME,
+                     META_COMMIT_TIME, META_FILE_NAME,
                      META_PARTITION_PATH,
-                     META_RECORD_KEY, PAYLOAD_DEFAULT, QUERY_INCREMENTAL,
+                     META_RECORD_KEY, PAYLOAD_DEFAULT,
+                     PAYLOAD_OVERWRITE_LATEST, QUERY_INCREMENTAL,
                      QUERY_READ_OPTIMIZED,
                      QUERY_SNAPSHOT, SORT_GLOBAL, SORT_PARTITION, UPSERT,
                      TableConfig, WriteConfig)
-from .fsview import FileSlice, FileSystemView, WriteStat
+from .fsview import FileSlice, FileSystemView, WriteStat, may_hold_keys
 from .indexing import FG_COL, load_key_index, tag_locations
-from .keygen import partition_path_col, record_key_col
+from .keygen import partition_path_col
 from .metaclient import TableMetaClient
 from .plans.buckets import (assign_insert_buckets, avg_record_size,
                             new_fg_id, plan_insert_buckets)
@@ -50,9 +51,18 @@ from .writer import (API_DELETE, FG, MERGE_KEY, NEW_FLAG,
                      precombine_dedup, with_commit_meta, with_key_columns,
                      write_instant_files)
 
-from .scan import scan_parquet
+from .scan import bootstrap_skeleton, scan_parquet
 from .services.clustering import ClusteringUpdateConflict as _ClusteringConflict
 from .timing import _stage
+
+# MOR merged read/compaction: dirty slice-sets whose log files total at most
+# this many bytes take the broadcast-split merge (HudiTable._merge_logs);
+# larger log sets take the union + window merge (logs too big to broadcast)
+MOR_MERGE_BROADCAST_MAX_LOG_BYTES = 64 * 1024 * 1024
+# batches up to this many rows may collect their key set driver-side to
+# bloom-prune the COW rewrite set (HudiTable._stats_rewrite_set; the
+# reference BLOOM index's second pruning stage after min/max ranges)
+BLOOM_PRUNE_MAX_BATCH_KEYS = 5_000
 
 
 class HudiTable:
@@ -99,7 +109,6 @@ class HudiTable:
                write_config: Optional[WriteConfig] = None,
                base_format: str = "parquet") -> "HudiTable":
         """CREATE TABLE (CreateHoodieTableCommand.scala equivalent)."""
-        from .config import PAYLOAD_OVERWRITE_LATEST
         if base_format not in ("parquet", "orc"):
             raise ValueError(f"unsupported base file format {base_format!r} "
                              "(parquet, orc; reference HoodieFileFormat.java)")
@@ -485,9 +494,7 @@ class HudiTable:
         # GLOBAL_SORT all-new-bucket loads (bulk_insert / insert_overwrite*)
         # fold the range-split key sampling AND split-point selection into
         # the profile aggregation: the driver collects O(buckets) split
-        # points, never raw sampled keys (fused_profile_splits).  A keyless
-        # profile frame falls back to the unfused count + sampling of
-        # `prepared` below.
+        # points, never raw sampled keys (fused_profile_splits).
         sample_splits = None
         with _stage("insert.profile"):
             src = profile_df if profile_df is not None else prepared
@@ -515,13 +522,11 @@ class HudiTable:
         # owns a disjoint key interval, so manifest min/max stats make the
         # BLOOM-style write index and read_keys point lookups maximally
         # selective.  Steady one-bucket-per-partition plans skip the sample.
-        if (sort_mode == SORT_GLOBAL
+        if (sample_splits is not None
                 and plan and all(b.is_new_fg for b in plan)):
             from .plans.buckets import (assign_insert_buckets_range,
                                         range_split_points)
-            splits = range_split_points(prepared, plan, profile,
-                                        META_PARTITION_PATH, META_RECORD_KEY,
-                                        splits=sample_splits)
+            splits = range_split_points(plan, sample_splits)
             assigned = assign_insert_buckets_range(
                 self.spark, prepared, plan,
                 META_PARTITION_PATH, META_RECORD_KEY, FG, splits)
@@ -1221,29 +1226,22 @@ class HudiTable:
 
         Key ranges first: the batch's per-partition key range against the
         manifest stats (the BLOOM index's min/max ranges,
-        fsview.base_key_range) — a superset of the touched groups by
+        fsview.may_hold_keys) — a superset of the touched groups by
         construction, since a stored key is always inside its file's key
         range.  Then, for SMALL batches on tables with a bloom sidecar,
         the batch's keys are collected (one bounded action, ≤
-        ``bloom_prune_max_batch_keys`` rows) and range-surviving slices
+        BLOOM_PRUNE_MAX_BATCH_KEYS rows) and range-surviving slices
         whose bloom proves none present are dropped — on hash/unsorted
         layouts ranges all overlap and this is what bounds the rewrite
         set.  A fresh bloom has no false negatives (stale/logged slices are
         kept), so the set stays a superset."""
-        from .fsview import base_key_range
         by_part = {r[0]: (r[2], r[3]) for r in prof}
-        rewrite: list[FileSlice] = []
-        for sl in view.latest_slices():
-            rng_b = by_part.get(sl.partition)
-            if rng_b is None:
-                continue
-            lo, hi = rng_b
-            rng = base_key_range(sl)
-            if rng is None or lo is None or not (hi < rng[0] or lo > rng[1]):
-                rewrite.append(sl)
+        rewrite = [sl for sl in view.latest_slices()
+                   if sl.partition in by_part
+                   and may_hold_keys(sl, *by_part[sl.partition])]
         bloom_fgs = None
         if (len(rewrite) > 8 and sum(r[1] for r in prof)
-                <= self.cfg.bloom_prune_max_batch_keys):
+                <= BLOOM_PRUNE_MAX_BATCH_KEYS):
             from .bloom import load_blooms, prune_slices_by_bloom
             blooms = load_blooms(self.meta)
             if blooms:
@@ -1794,243 +1792,176 @@ class HudiTable:
                      raw: bool = False, skip_merge: bool = False,
                      cluster_by_fg: bool = False, view=None,
                      active: Optional[list] = None) -> DataFrame:
-        """Clean slices (no logs) → plain parquet scan; dirty slices →
-        base ∪ deltas → latest-wins window → drop deletes
+        """Clean slices (no logs) → plain base scan; dirty slices → base ∪
+        deltas → latest-wins merge → drop deletes
         (MergeOnReadSnapshotRelation.scala:94-138 / HoodieMergeOnReadRDD.scala
         merged iterator, vectorized).  Only dirty file groups pay the merge
-        shuffle — at scale that's the set compaction hasn't reached yet.
+        — at scale that's the set compaction hasn't reached yet.
 
-        ``cluster_by_fg`` (compaction): keep the output clustered by file
-        group so the caller can write with ``pre_partitioned=True`` — in the
-        broadcast-split path only the small merged side is shuffled (the base
-        passes through in scan partitions, zero full-table exchange, like the
-        reference compactor's one-task-per-file-group merge); in the window
-        fallback the merge window partitions by file group so the window
-        shuffle doubles as the write clustering."""
+        ``raw`` (compaction/clustering) keeps delete rows and the API_DELETE
+        column and adds the FG column; ``cluster_by_fg`` (compaction) keeps
+        the output clustered by file group so the caller can write with
+        ``pre_partitioned=True`` (see _merge_logs)."""
         schema = self._read_schema(active=active)
-        out_cols = [f.name for f in schema.fields]
-
-        def is_ext(sl):
-            return any(f.external for f in sl.base_files)
-
-        clean = [sl for sl in slices if not sl.log_files or read_optimized]
         dirty = [] if read_optimized else [sl for sl in slices if sl.log_files]
-        parts = []
-        int_clean = [sl for sl in clean if not is_ext(sl)]
-        ext_clean = [sl for sl in clean if is_ext(sl)]
-        if int_clean:
-            paths = [self.meta.abs_path(f.path) for sl in int_clean
-                     for f in sl.base_files]
-            parts.append(scan_parquet(self.spark, paths, schema,
-                                      fmt=self.tc.base_format))
-        if ext_clean:
-            parts.append(self._scan_external(ext_clean, schema))
+        clean = [sl for sl in slices if read_optimized or not sl.log_files]
+        parts = [self._scan_bases(clean, schema)] if clean else []
         if dirty:
-            dschema = self._read_schema(extra_bool_cols=[API_DELETE, DELETE_MARKER],
-                                        active=active)
-            int_dirty = [sl for sl in dirty if not is_ext(sl)]
-            ext_dirty = [sl for sl in dirty if is_ext(sl)]
-            bases = []
-            if int_dirty:
-                base_paths = [self.meta.abs_path(f.path) for sl in int_dirty
-                              for f in sl.base_files]
-                bases.append(scan_parquet(self.spark, base_paths, dschema,
-                                          fmt=self.tc.base_format))
-            if ext_dirty:
-                bases.append(self._scan_external(ext_dirty, dschema))
-            b = bases[0]
-            for x in bases[1:]:
-                b = b.unionByName(x)
-            log_entries = [(l.path, sl.file_group)
-                           for sl in dirty for l in sl.log_files]
-            # grouped delta files are shared across file groups: scan each
-            # path once, and when sharing is present restrict rows to the
-            # selected groups — a shared file may also hold rows of groups
-            # NOT being read (another partition, or a since-replaced group
-            # whose rows must not resurrect)
-            log_rel = list(dict.fromkeys(p for p, _ in log_entries))
-            log_paths = [self.meta.abs_path(p) for p in log_rel]
-            logs = scan_parquet(self.spark, log_paths, dschema) \
-                       .withColumn(NEW_FLAG, F.lit(True))
-            # validity filter: a grouped (shared) delta file may hold rows of
-            # groups that are not part of this read — a group that was since
-            # compacted or replaced, or simply not selected.  The valid unit
-            # is the (file, group) PAIR exactly as the slices reference it: a
-            # group-set filter alone would keep stale rows of a still-dirty
-            # group sitting in an old shared file.  Skipped — keeping the
-            # plan join-free — when ownership is PROVEN covered: per-group
-            # dir layout, or the view's fold-complete owner map shows every
-            # scanned file's groups are all selected.
-            uniq_pairs = sorted({(self.meta.abs_path(p), fg)
-                                 for p, fg in log_entries})
-            sel_by_path: dict[str, set] = {}
-            for p, fg in log_entries:
-                sel_by_path.setdefault(p, set()).add(fg)
-            if all(f"/{FG}=" in p for p in log_rel):
-                covered = True      # per-group files hold only their own rows
-            elif view is not None:
-                owners = [view.log_path_owners(p) for p in log_rel]
-                covered = all(o is not None and o <= sel_by_path[p]
-                              for p, o in zip(log_rel, owners))
-            else:
-                covered = False
-            if not covered:
-                pair_df = self.spark.createDataFrame(
-                    uniq_pairs, schema=f"_hoodie_log_path string, "
-                                       f"{META_FILE_NAME} string")
-                norm = F.regexp_replace(F.input_file_name(), "^file:/*", "/")
-                logs = (logs.withColumn("_hoodie_log_path", norm)
-                        .join(F.broadcast(pair_df),
-                              ["_hoodie_log_path", META_FILE_NAME],
-                              "left_semi")
-                        .drop("_hoodie_log_path"))
-            log_bytes = sum(l.size for sl in dirty for l in sl.log_files)
-            if log_bytes <= self.cfg.mor_merge_broadcast_max_log_bytes \
-                    and not skip_merge:
-                # the broadcast-split branch consumes the log side three
-                # times (key set in two joins + the merged union); delta
-                # files are many and tiny (one per file group per commit),
-                # so re-opening them dominates the merged read.  Persist —
-                # bounded by the branch's own ≤ max_log_bytes gate — so one
-                # scan feeds all three subtrees; a one-slot table-level
-                # cache unpersists the previous read's log block.
-                logs = logs.persist()
-                prev = getattr(self, "_mor_log_persist", None)
-                if prev is not None and prev is not logs:
-                    try:
-                        prev.unpersist()
-                    except Exception:
-                        pass
-                self._mor_log_persist = logs
-            if skip_merge:
-                # REALTIME_SKIP_MERGE: plain concatenation, no key merge —
-                # the window shuffle disappears entirely
-                d = b.unionByName(logs.drop(NEW_FLAG))
-            elif log_bytes <= self.cfg.mor_merge_broadcast_max_log_bytes:
-                # broadcast-split merge: logs are (by design) small deltas, so
-                # broadcast their key set and split the base — keys without a
-                # log row pass through IN THEIR SCAN PARTITIONS (the 100 TB
-                # base side is never shuffled, mirroring the COW anti-join
-                # rewrite), and only touched keys pay the latest-wins window,
-                # over base-twin ∪ log rows a few MB in size.
-                # no dedup on the key set: semi/anti hash builds collapse
-                # duplicate keys anyway, and a dropDuplicates here would cost
-                # an extra (small-side) exchange
-                from .config import PAYLOAD_OVERWRITE_LATEST
-                split_key = [META_FILE_NAME, *MERGE_KEY]
-                if self.tc.payload == PAYLOAD_OVERWRITE_LATEST:
-                    # single-base-scan split (OVERWRITE_LATEST only): a log
-                    # row is always newer than its slice's base (log instants
-                    # > base_instant, and base rows' commit times never
-                    # exceed it), so the per-(group, key) log winner beats
-                    # any base twin unconditionally.  Resolve winners on the
-                    # log side alone (small window), then ONE pass over the
-                    # base drops superseded rows via broadcast anti-join —
-                    # the semi-join subtree of the general split re-scanned
-                    # the whole dirty base a second time, doubling base read
-                    # amplification; at 100 TB that second scan IS the cost.
-                    # The join keys include the file group: a duplicate-key
-                    # twin in another group is untouched by this group's
-                    # logs (reference merges per split,
-                    # RealtimeCompactedRecordReader).
-                    winners = merge_latest(logs, self.tc,
-                                           bucket_col=META_FILE_NAME)
-                    if cluster_by_fg:
-                        n = max(1, min(len(dirty),
-                                       self.spark.sparkContext
-                                       .defaultParallelism))
-                        winners = winners.repartition(n,
-                                                      F.col(META_FILE_NAME))
-                    # anti-join on the RAW log key set, not the winners: a
-                    # winner exists exactly when any log row does, and the
-                    # raw projection keeps the window subtree out of the
-                    # broadcast build (one log-side exchange total; the
-                    # broadcast hash build collapses duplicate keys free)
-                    lk = logs.select(*split_key)
-                    d = (b.join(F.broadcast(lk), split_key, "left_anti")
-                          .unionByName(winners, allowMissingColumns=True))
-                else:
-                    lk = logs.select(*MERGE_KEY)
-                    untouched = b.join(F.broadcast(lk), MERGE_KEY,
-                                       "left_anti")
-                    touched = (b.join(F.broadcast(lk), MERGE_KEY,
-                                      "left_semi")
-                                .withColumn(NEW_FLAG, F.lit(False)))
-                    small = touched.unionByName(logs)
-                    if cluster_by_fg:
-                        # every row carries its file group in
-                        # _hoodie_file_name; cluster just the small side so
-                        # the whole output can be written pre-partitioned
-                        # (one new file per group from this side,
-                        # scan-partition passthrough from the other).
-                        # bucket_col makes the merge window's required
-                        # distribution start with the file group, so the
-                        # window reuses this exchange instead of adding a
-                        # key shuffle.
-                        n = max(1, min(len(dirty),
-                                       self.spark.sparkContext
-                                       .defaultParallelism))
-                        small = small.repartition(n, F.col(META_FILE_NAME))
-                    # per-file-group window — the reference merges per split
-                    # (RealtimeCompactedRecordReader), so a duplicate-key
-                    # twin in another file group is untouched by this
-                    # group's logs
-                    merged_small = merge_latest(small, self.tc,
-                                                bucket_col=META_FILE_NAME)
-                    d = untouched.unionByName(merged_small)
-            else:
-                bl = b.withColumn(NEW_FLAG, F.lit(False)).unionByName(logs)
-                if cluster_by_fg:
-                    n = max(1, min(len(dirty),
-                                   self.spark.sparkContext.defaultParallelism))
-                    bl = bl.repartition(n, F.col(META_FILE_NAME))
-                d = merge_latest(bl, self.tc, bucket_col=META_FILE_NAME)
+            dschema = self._read_schema(
+                extra_bool_cols=[API_DELETE, DELETE_MARKER], active=active)
+            d = self._merge_logs(self._scan_bases(dirty, dschema),
+                                 self._scan_logs(dirty, dschema, view),
+                                 dirty, skip_merge, cluster_by_fg)
             if not raw and not skip_merge:
                 d = drop_deleted(d)
-            parts.append(d.select(*[c for c in dschema.names
-                                    if c in out_cols or (raw and c == API_DELETE)]))
+            keep = set(schema.names) | ({API_DELETE} if raw else set())
+            parts.append(d.select(*[c for c in dschema.names if c in keep]))
         if not parts:
             return self.spark.createDataFrame([], schema)
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p, allowMissingColumns=True)
         if raw:
-            df = df.withColumn(FG, F.col(META_FILE_NAME))
-        elif not read_optimized:
-            df = drop_deleted(df)
+            return df.withColumn(FG, F.col(META_FILE_NAME))
+        return df if read_optimized else drop_deleted(df)
+
+    def _scan_bases(self, slices: list[FileSlice],
+                    schema: StructType) -> DataFrame:
+        """Base files of ``slices`` projected to ``schema``: engine-owned
+        files in one scan; METADATA_ONLY-bootstrapped source files in a
+        second scan whose meta columns are the virtual skeleton
+        (scan.bootstrap_skeleton — the reference stitches them from skeleton
+        files, HoodieBootstrapRelation.scala / HoodieBootstrapRDD.scala)."""
+        own, ext = [], []
+        for sl in slices:
+            (ext if any(f.external for f in sl.base_files) else own).append(sl)
+        dfs = []
+        if own:
+            paths = [self.meta.abs_path(f.path) for sl in own
+                     for f in sl.base_files]
+            dfs.append(scan_parquet(self.spark, paths, schema,
+                                    fmt=self.tc.base_format))
+        if ext:
+            files = [(self.meta.abs_path(f.path), sl.file_group,
+                      sl.base_instant) for sl in ext for f in sl.base_files]
+            src = scan_parquet(self.spark, [p for p, _, _ in files])
+            cols = {c: F.col(c) for c in src.columns}
+            cols.update(bootstrap_skeleton(files, self.tc))
+            dfs.append(src.select(*[
+                cols.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name)
+                for f in schema.fields]))
+        df = dfs[0]
+        for x in dfs[1:]:
+            df = df.unionByName(x)
         return df
 
-    def _scan_external(self, slices: list[FileSlice],
-                       schema: StructType) -> DataFrame:
-        """Scan METADATA_ONLY-bootstrapped source files, deriving the virtual
-        skeleton — the meta columns the reference stitches from skeleton
-        files (HoodieBootstrapRelation.scala / HoodieBootstrapRDD.scala) are
-        pure expressions here: key/partition via the keygen, commit time from
-        the bootstrap instant, file name from a path→file-group map."""
-        files = [(f.path, sl.file_group, sl.base_instant)
-                 for sl in slices for f in sl.base_files]
-        src = scan_parquet(self.spark, [p for p, _, _ in files])
+    def _scan_logs(self, dirty: list[FileSlice], schema: StructType,
+                   view) -> DataFrame:
+        """Delta rows of ``dirty``, flagged NEW_FLAG.  Grouped delta files
+        are shared across file groups, so each path is scanned once; a shared
+        file may also hold rows of groups NOT being read — another
+        partition, or a group since compacted or replaced, whose rows must
+        not resurrect.  The valid unit is the (file, group) PAIR exactly as
+        the slices reference it (a group-set filter alone would keep stale
+        rows of a still-dirty group sitting in an old shared file).  The
+        pair filter is skipped — keeping the plan join-free — when ownership
+        is PROVEN covered: per-group dir layout, or the view's fold-complete
+        owner map shows every scanned file's groups are all selected."""
+        entries = [(l.path, sl.file_group) for sl in dirty for l in sl.log_files]
+        rel = list(dict.fromkeys(p for p, _ in entries))
+        logs = scan_parquet(self.spark, [self.meta.abs_path(p) for p in rel],
+                            schema).withColumn(NEW_FLAG, F.lit(True))
+        if all(f"/{FG}=" in p for p in rel):
+            return logs         # per-group files hold only their own rows
+        sel: dict[str, set] = {}
+        for p, fg in entries:
+            sel.setdefault(p, set()).add(fg)
+        if view is not None and all(
+                (o := view.log_path_owners(p)) is not None and o <= sel[p]
+                for p in rel):
+            return logs
+        pairs = self.spark.createDataFrame(
+            sorted({(self.meta.abs_path(p), fg) for p, fg in entries}),
+            schema=f"_hoodie_log_path string, {META_FILE_NAME} string")
         norm = F.regexp_replace(F.input_file_name(), "^file:/*", "/")
-        fg_map = F.create_map(*[x for p, fg, _ in files
-                                for x in (F.lit(p), F.lit(fg))])
-        it_map = F.create_map(*[x for p, _, it in files
-                                for x in (F.lit(p), F.lit(it))])
-        out = (src
-               .withColumn(META_RECORD_KEY,
-                           record_key_col(self.tc.recordkey_fields))
-               .withColumn(META_PARTITION_PATH,
-                           partition_path_col(self.tc.partition_expr))
-               .withColumn(META_COMMIT_TIME, it_map[norm])
-               .withColumn(META_COMMIT_SEQNO,
-                           F.concat_ws("_", it_map[norm],
-                                       F.monotonically_increasing_id()
-                                       .cast("string")))
-               .withColumn(META_FILE_NAME, fg_map[norm]))
-        cols = [F.col(f.name).cast(f.dataType).alias(f.name)
-                if f.name in out.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields]
-        return out.select(*cols)
+        return (logs.withColumn("_hoodie_log_path", norm)
+                .join(F.broadcast(pairs), ["_hoodie_log_path", META_FILE_NAME],
+                      "left_semi")
+                .drop("_hoodie_log_path"))
+
+    def _merge_logs(self, base: DataFrame, logs: DataFrame,
+                    dirty: list[FileSlice], skip_merge: bool,
+                    cluster_by_fg: bool) -> DataFrame:
+        """Latest-wins merge of dirty slices' base and log rows, per file
+        group — the reference merges per split (RealtimeCompactedRecordReader),
+        so a duplicate-key twin in another group is untouched by this
+        group's logs.  ``skip_merge`` (REALTIME_SKIP_MERGE) concatenates.
+        Log sets up to MOR_MERGE_BROADCAST_MAX_LOG_BYTES take the broadcast
+        split: the log key set is broadcast and untouched base keys pass
+        through IN THEIR SCAN PARTITIONS (the 100 TB base side is never
+        shuffled, mirroring the COW anti-join rewrite); only touched keys pay
+        the window.  Larger log sets take union + window over everything.
+
+        ``cluster_by_fg``: the shuffled side is repartitioned by file group
+        (every row carries it in _hoodie_file_name), so the whole output can
+        be written pre-partitioned — one new file per group from the merged
+        side, scan-partition passthrough from the untouched side; merge
+        windows on bucket_col reuse that exchange instead of adding a key
+        shuffle."""
+        if skip_merge:
+            return base.unionByName(logs.drop(NEW_FLAG))
+
+        def by_fg(df: DataFrame) -> DataFrame:
+            if not cluster_by_fg:
+                return df
+            n = max(1, min(len(dirty),
+                           self.spark.sparkContext.defaultParallelism))
+            return df.repartition(n, F.col(META_FILE_NAME))
+
+        log_bytes = sum(l.size for sl in dirty for l in sl.log_files)
+        if log_bytes > MOR_MERGE_BROADCAST_MAX_LOG_BYTES:
+            return merge_latest(
+                by_fg(base.withColumn(NEW_FLAG, F.lit(False))
+                      .unionByName(logs)),
+                self.tc, bucket_col=META_FILE_NAME)
+        # the split consumes the log side several times (key set in the
+        # joins + the merged union); delta files are many and tiny (one per
+        # file group per commit), so re-opening them dominates the merged
+        # read.  Persist — bounded by the gate above — so one scan feeds
+        # every subtree; a one-slot cache unpersists the previous read's.
+        logs = logs.persist()
+        prev = getattr(self, "_mor_log_persist", None)
+        if prev is not None and prev is not logs:
+            try:
+                prev.unpersist()
+            except Exception:
+                pass
+        self._mor_log_persist = logs
+        # no dedup on the key sets: semi/anti hash builds collapse duplicate
+        # keys anyway, and a dropDuplicates would cost an extra exchange
+        if self.tc.payload == PAYLOAD_OVERWRITE_LATEST:
+            # single-base-scan split: a log row is always newer than its
+            # slice's base (log instants > base_instant), so the per-(group,
+            # key) log winner beats any base twin unconditionally.  Resolve
+            # winners on the log side alone, then ONE pass over the base
+            # drops superseded rows — the semi-join subtree of the general
+            # split would scan the whole dirty base a second time.  The
+            # anti-join uses the RAW log key set: a winner exists exactly
+            # when a log row does, and the raw projection keeps the window
+            # subtree out of the broadcast build.
+            split_key = [META_FILE_NAME, *MERGE_KEY]
+            winners = by_fg(merge_latest(logs, self.tc,
+                                         bucket_col=META_FILE_NAME))
+            return (base.join(F.broadcast(logs.select(*split_key)),
+                              split_key, "left_anti")
+                    .unionByName(winners, allowMissingColumns=True))
+        lk = F.broadcast(logs.select(*MERGE_KEY))
+        untouched = base.join(lk, MERGE_KEY, "left_anti")
+        touched = (base.join(lk, MERGE_KEY, "left_semi")
+                   .withColumn(NEW_FLAG, F.lit(False)))
+        return untouched.unionByName(merge_latest(
+            by_fg(touched.unionByName(logs)), self.tc,
+            bucket_col=META_FILE_NAME))
 
     def _read_incremental(self, begin: Optional[str], end: Optional[str],
                           partitions: Optional[Sequence[str]],

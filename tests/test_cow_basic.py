@@ -325,27 +325,19 @@ def test_failed_write_rearms_recovery(spark, tmp_table_path, lineitem):
 def test_fused_profile_sampling_no_second_pass(spark, tmp_table_path,
                                                lineitem):
     """GLOBAL_SORT all-new-bucket loads select range split points inside
-    the profile aggregation, so range_split_points must pass the provided
-    splits through WITHOUT touching the input frame (no second sampling
-    scan).  Poisoning `prepared` proves no job can run; the end-to-end
-    layout property is pinned by test_bulk_insert_sort_modes."""
+    the profile aggregation, so range_split_points takes no input frame at
+    all (no second sampling scan can run): it only passes the provided
+    splits through.  The end-to-end layout property is pinned by
+    test_bulk_insert_sort_modes."""
     from incubator_hudi_spark.plans.buckets import (InsertBucket,
                                                     range_split_points)
-
-    class _Poisoned:
-        def __getattr__(self, name):
-            raise AssertionError(
-                "range_split_points touched the input frame despite "
-                "caller-provided splits")
 
     plan = [InsertBucket("p1", "fg_a", 0, 100, True),
             InsertBucket("p1", "fg_b", 100, 200, True),
             InsertBucket("p2", "fg_c", 0, 50, True)]
     # caller-selected splits pass through verbatim, subset to the
     # >1-bucket partitions
-    pre = range_split_points(_Poisoned(), plan, {"p1": 200, "p2": 50},
-                             "_p", "_k",
-                             splits={"p1": ["k050"], "p2": ["zzz"]})
+    pre = range_split_points(plan, {"p1": ["k050"], "p2": ["zzz"]})
     assert pre == {"p1": ["k050"]}
 
 

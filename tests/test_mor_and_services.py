@@ -365,3 +365,51 @@ def test_mor_insert_probe_fold_batch_shapes(spark, tmp_table_path, lineitem):
     assert snap.filter("l_linenumber = 2 AND l_orderkey < 5000000 "
                        "AND l_quantity != 88.0").count() == 0
     assert snap.filter("l_orderkey >= 6000000").count() > 0
+
+
+@pytest.mark.parametrize("payload", ["overwrite_latest", "default",
+                                     "overwrite_non_defaults"])
+def test_mor_merge_branches_agree(spark, tmp_table_path, lineitem,
+                                  monkeypatch, payload):
+    """Both MOR merges give the same snapshot, per payload: the broadcast
+    split (log sets up to MOR_MERGE_BROADCAST_MAX_LOG_BYTES) and the
+    union + window merge above it — on a merged read and through a
+    compaction run under the window merge."""
+    from incubator_hudi_spark import HudiTable, table as table_mod
+    t = HudiTable.create(
+        spark, tmp_table_path, name="mor_branches",
+        recordkey_fields=["l_orderkey", "l_linenumber"],
+        partition_expr="date_format(l_shipdate,'yyyy-MM')",
+        precombine_field="l_extendedprice", table_type=MERGE_ON_READ,
+        payload=payload)
+    t.cfg = t.cfg.with_(inline_compaction=False)
+    t.upsert(lineitem)
+    # half the updates carry an older ordering value (the stored row wins
+    # under "default"), and all a null l_returnflag (the stored value is
+    # kept under "overwrite_non_defaults")
+    t.upsert(lineitem.filter("l_orderkey % 5 = 1")
+             .withColumn("l_quantity", F.lit(777.0))
+             .withColumn("l_extendedprice", F.col("l_extendedprice")
+                         + F.when(F.col("l_linenumber") % 2 == 0, 1.0)
+                         .otherwise(-1.0))
+             .withColumn("l_returnflag", F.lit(None).cast("string")))
+    t.delete(lineitem.filter("l_orderkey % 7 = 3"))
+    t.upsert(lineitem.filter("l_orderkey % 5 = 2")
+             .withColumn("l_quantity", F.lit(555.0)))
+    slices = t.view().latest_slices()
+    assert sum(l.size for sl in slices for l in sl.log_files) > 0
+
+    def snapshot():
+        df = t.read()
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return sorted(tuple(r) for r in df.collect()), "LeftAnti" in plan
+
+    split, split_anti = snapshot()
+    monkeypatch.setattr(table_mod, "MOR_MERGE_BROADCAST_MAX_LOG_BYTES", 0)
+    window, window_anti = snapshot()
+    assert split_anti and not window_anti, "each read took its own merge"
+    assert window == split
+    assert len(split) < lineitem.count()          # the deletes applied
+    assert t.run_compaction() is not None
+    assert all(not sl.log_files for sl in t.view().latest_slices())
+    assert snapshot()[0] == split

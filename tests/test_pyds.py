@@ -182,7 +182,7 @@ def test_native_read_of_metadata_only_bootstrap(spark, tmp_path):
     derives the virtual skeleton (key via the shared pandas keygen,
     partition/commit-time/file-name literals) instead of raising — parity
     with HoodieBootstrapRelation.scala's skeleton stitch and with our own
-    DataFrame path (_scan_external)."""
+    DataFrame path (scan.bootstrap_skeleton)."""
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     legacy = str(tmp_path / "legacy")
     (li.withColumn("month", F.date_format("l_shipdate", "yyyy-MM"))

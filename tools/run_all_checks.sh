@@ -1,12 +1,16 @@
 #!/usr/bin/env bash
-# Full local validation: unit/property/DAG tests, DuckDB-oracle correctness
+# Full local validation: unit/property/DAG tests (slow tier included),
+# the benchmark harness's helper tests, DuckDB-oracle correctness
 # at two scale factors, physical-plan audit, scaling probe, and the bench.
 # Artifacts refreshed: PLANS.md, SCALE.md; bench prints its one JSON line.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== pytest =="
-python -m pytest tests/ -q
+echo "== pytest (all tiers) =="
+python -m pytest tests/ -q -m ""
+
+echo "== perfbench helper tests =="
+python -m pytest perfbench/tests -q
 
 echo "== oracle correctness sf0.01 =="
 python tools/check_correctness.py /root/testdata/sf0.01
