@@ -169,21 +169,6 @@ class WriteConfig:
     # into the commit manifest at write time (beyond the always-on record-key
     # range) and drives read-side data skipping via HudiTable.read_filtered
     stats_columns: tuple = ()
-    # batches up to this many rows broadcast their key set to prune the index
-    # scan (indexing.tag_locations) instead of shuffling/building it; on COW
-    # they also take the broadcast anti-join rewrite instead of the window
-    # merge (HudiTable._write_batch picks the lane)
-    index_broadcast_max_rows: int = 1_000_000
-    # SIMPLE index: pin the scanned key→file-group index as a persisted
-    # DataFrame on the table object across batches (same machinery as
-    # INMEMORY), invalidated whenever the last completed data instant
-    # differs from the one the cache was built at — multi-writer safe, any
-    # out-of-band commit bumps the timeline and drops the cache.  The
-    # reference's SparkSimpleIndex re-scans base files per batch
-    # (HoodieSimpleIndex.java fetchRecordLocations); caching trades executor
-    # memory (key+partition+fg columns, spilled to disk past memory) for
-    # skipping that table-sized scan on every steady-state batch.
-    cache_simple_index: bool = True
     # auto-run table-version upgrade at write start when the table is from
     # an older layout (hoodie.auto.upgrade / UpgradeDowngrade default true);
     # False → raise TableVersionError instead

@@ -513,7 +513,7 @@ def dedup_exact_substrings(df: DataFrame, min_words: int = 20,
     executor loss.  Results are identical either way.
     """
     words = F.split(F.col(text_col), r"\s+")
-    # Window-hash kernel (measured, tools/ab_window_hash.py — 6.6× the
+    # Window-hash kernel (measured, OPTIMIZATION_r06.md §3 — 6.6× the
     # md5-of-joined-string kernel at sf0.1): hash each WORD once
     # (xxhash64), explode the window start positions, then hash the
     # 20-long slice of word-hashes twice with different salts — 128

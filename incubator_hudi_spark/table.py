@@ -53,7 +53,6 @@ from .writer import (API_DELETE, FG, MERGE_KEY, NEW_FLAG,
 
 from .scan import bootstrap_skeleton, scan_parquet
 from .services.clustering import ClusteringUpdateConflict as _ClusteringConflict
-from .timing import _stage
 
 # MOR merged read/compaction: dirty slice-sets whose log files total at most
 # this many bytes take the broadcast-split merge (HudiTable._merge_logs);
@@ -63,6 +62,11 @@ MOR_MERGE_BROADCAST_MAX_LOG_BYTES = 64 * 1024 * 1024
 # bloom-prune the COW rewrite set (HudiTable._stats_rewrite_set; the
 # reference BLOOM index's second pruning stage after min/max ranges)
 BLOOM_PRUNE_MAX_BATCH_KEYS = 5_000
+# batches up to this many rows broadcast their key set to prune the index
+# scan (indexing.tag_locations) instead of shuffling/building it; on COW
+# they also take the broadcast anti-join rewrite instead of the window
+# merge (HudiTable._write_batch picks the lane)
+INDEX_BROADCAST_MAX_ROWS = 1_000_000
 
 
 class HudiTable:
@@ -199,25 +203,29 @@ class HudiTable:
 
     @property
     def _index_cache_on(self) -> bool:
-        """Session key-index cache applies to INMEMORY (always — that IS the
-        index) and to SIMPLE when cfg.cache_simple_index (an optimization
-        over the reference's per-batch re-scan; timeline-validated, so
-        semantics are identical)."""
-        return (self.cfg.index_type == INDEX_INMEMORY
-                or (self.cfg.index_type == INDEX_SIMPLE
-                    and self.cfg.cache_simple_index))
+        """Session key-index cache applies to INMEMORY (that IS the index)
+        and to SIMPLE.  For SIMPLE it is an optimization over the
+        reference's per-batch re-scan (SparkSimpleIndex,
+        HoodieSimpleIndex.java fetchRecordLocations): the persisted
+        key→file-group frame trades executor memory (key, partition and
+        file-group columns, spilled to disk past memory) for skipping that
+        table-sized scan on every steady-state batch.  It is invalidated
+        whenever the completed data instants differ from the ones it was
+        built at, so any out-of-band commit drops it and semantics are
+        identical."""
+        return self.cfg.index_type in (INDEX_INMEMORY, INDEX_SIMPLE)
 
     def _load_index(self, view: FileSystemView,
                     partitions: Optional[list],
                     key_range: Optional[tuple],
                     only_fgs: Optional[set] = None,
                     token: Optional[frozenset] = None) -> DataFrame:
-        """Key→location index for tagging.  INMEMORY (and SIMPLE with
-        cache_simple_index) keeps the scan result persisted across batches
-        (valid while no commit has changed any key→file-group mapping;
-        update-only upserts extend validity), loading only partitions not
-        yet covered — repeated upserts into hot partitions skip the
-        table-sized key-column scan entirely."""
+        """Key→location index for tagging.  INMEMORY and SIMPLE keep the
+        scan result persisted across batches (valid while no commit has
+        changed any key→file-group mapping; update-only upserts extend
+        validity), loading only partitions not yet covered — repeated
+        upserts into hot partitions skip the table-sized key-column scan
+        entirely."""
         it = self.cfg.index_type
         if not self._index_cache_on:
             return load_key_index(self.spark, self.meta, view, it,
@@ -496,19 +504,18 @@ class HudiTable:
         # the profile aggregation: the driver collects O(buckets) split
         # points, never raw sampled keys (fused_profile_splits).
         sample_splits = None
-        with _stage("insert.profile"):
-            src = profile_df if profile_df is not None else prepared
-            if (sort_mode == SORT_GLOBAL and not pack_small_files
-                    and META_RECORD_KEY in src.columns):
-                from .plans.buckets import fused_profile_splits
-                rows = fused_profile_splits(
-                    src, META_PARTITION_PATH, META_RECORD_KEY, rec_size,
-                    self.cfg.target_file_size_bytes).collect()
-                profile = {r[0]: r[1] for r in rows}
-                sample_splits = {r[0]: r[2] for r in rows}
-            else:
-                profile = {r[0]: r[1] for r in
-                           src.groupBy(META_PARTITION_PATH).count().collect()}
+        src = profile_df if profile_df is not None else prepared
+        if (sort_mode == SORT_GLOBAL and not pack_small_files
+                and META_RECORD_KEY in src.columns):
+            from .plans.buckets import fused_profile_splits
+            rows = fused_profile_splits(
+                src, META_PARTITION_PATH, META_RECORD_KEY, rec_size,
+                self.cfg.target_file_size_bytes).collect()
+            profile = {r[0]: r[1] for r in rows}
+            sample_splits = {r[0]: r[2] for r in rows}
+        else:
+            profile = {r[0]: r[1] for r in
+                       src.groupBy(META_PARTITION_PATH).count().collect()}
         if frozen_fgs is None and pack_small_files:
             from .services.clustering import pending_clustering_fgs
             frozen_fgs = set(pending_clustering_fgs(self))
@@ -566,15 +573,14 @@ class HudiTable:
                       and not view.latest_slices())
         if seed_index:
             assigned = assigned.persist()
-        with _stage("insert.write"):
-            if combine_in_write and not packed:
-                stats = write_instant_files(
-                    assigned, self.meta, instant_time, fg_map, self.cfg,
-                    sort_cols=[FG] + (sort_cols or []), pre_partitioned=True)
-            else:
-                stats = write_instant_files(assigned, self.meta, instant_time,
-                                            fg_map, self.cfg,
-                                            sort_cols=sort_cols)
+        if combine_in_write and not packed:
+            stats = write_instant_files(
+                assigned, self.meta, instant_time, fg_map, self.cfg,
+                sort_cols=[FG] + (sort_cols or []), pre_partitioned=True)
+        else:
+            stats = write_instant_files(assigned, self.meta, instant_time,
+                                        fg_map, self.cfg,
+                                        sort_cols=sort_cols)
         if seed_index:
             from .indexing import CUR_PART_COL
             self._invalidate_key_index()
@@ -688,18 +694,17 @@ class HudiTable:
             # after this listing is invisible to ALL THREE consistently;
             # the next batch's fresh listing sees it and over-invalidates
             # the cache (safe direction).
-            with _stage("upsert.view"):
-                tok0 = (self._data_instants_token(active)
-                        if self._index_cache_on else None)
-                pending_compaction = self._pending_compactions(active)
-                # file groups frozen by a scheduled clustering plan:
-                # updates/deletes that touch them are rejected
-                # (SparkRejectUpdateStrategy) — checked exactly against the
-                # tagged batch in each lane
-                from .services.clustering import pending_clustering_fgs
-                frozen_fgs = set(pending_clustering_fgs(self, active))
-                view = self.view(active_instants=active)
-                slices = view.latest_slices()
+            tok0 = (self._data_instants_token(active)
+                    if self._index_cache_on else None)
+            pending_compaction = self._pending_compactions(active)
+            # file groups frozen by a scheduled clustering plan:
+            # updates/deletes that touch them are rejected
+            # (SparkRejectUpdateStrategy) — checked exactly against the
+            # tagged batch in each lane
+            from .services.clustering import pending_clustering_fgs
+            frozen_fgs = set(pending_clustering_fgs(self, active))
+            view = self.view(active_instants=active)
+            slices = view.latest_slices()
             if self._index_cache_on and self._key_index is not None:
                 if self._token_still_valid(self._key_index_valid_token, tok0):
                     # archival-only shrink keeps the cache; re-stamp so the
@@ -740,9 +745,8 @@ class HudiTable:
                 # cache survives its own commit
                 keep_index = (not is_delete and not wrote_inserts
                               and self._key_index is not None)
-            with _stage("upsert.complete"):
-                self._complete(instant, operation, stats, schema,
-                               extra=commit_extras)
+            self._complete(instant, operation, stats, schema,
+                           extra=commit_extras)
             self._restamp_key_index(tok0, instant.time, keep_index)
         except _ClusteringConflict:
             # nothing was written — drop the started instant instead of
@@ -756,8 +760,7 @@ class HudiTable:
         finally:
             if prepared.is_cached:
                 prepared.unpersist()
-        with _stage("upsert.post_commit"):
-            self._post_commit()
+        self._post_commit()
         return instant.time
 
     def _restamp_key_index(self, token: Optional[frozenset],
@@ -829,9 +832,9 @@ class HudiTable:
         tagged against the key index and handed to the MOR delta append or
         the COW merge.  Nothing here is a setting: the lane follows from
         the table, the payload, the batch size against
-        ``index_broadcast_max_rows``, and the previous batch's spread."""
+        ``INDEX_BROADCAST_MAX_ROWS``, and the previous batch's spread."""
         from .indexing import is_global
-        cap = self.cfg.index_broadcast_max_rows
+        cap = INDEX_BROADCAST_MAX_ROWS
         prof, n_batch = None, None
         if (self.tc.table_type == COPY_ON_WRITE
                 and not is_global(self.cfg.index_type)
@@ -843,48 +846,43 @@ class HudiTable:
                                                   profile_src, token)
             if n_batch <= cap:
                 prepared.persist()
-                with _stage("upsert.write"):
-                    return self._upsert_cow_fast(
-                        view, instant_time, prepared, prof, is_delete,
-                        frozen_fgs=frozen_fgs, token=token, active=active)
+                return self._upsert_cow_fast(
+                    view, instant_time, prepared, prof, is_delete,
+                    frozen_fgs=frozen_fgs, token=token, active=active)
             # batch too large to broadcast — fall through to the general
             # lane (the window merge handles table-sized batches)
         if (self._index_cache_on and self._key_index is not None
                 and self._key_index_valid_token == token
                 and set(view.partitions()) <= self._key_index_parts):
-            # a warm cached index (INMEMORY, or SIMPLE with
-            # cache_simple_index) covering every table partition makes the
-            # pre-tag workload profile redundant — any batch partition is
-            # either covered or brand-new (no stored records → a null-fg
-            # tag is already the correct routing)
+            # a warm cached index (INMEMORY or SIMPLE) covering every
+            # table partition makes the pre-tag workload profile
+            # redundant — any batch partition is either covered or
+            # brand-new (no stored records → a null-fg tag is already the
+            # correct routing)
             index_df = self._key_index
         elif self._index_cache_on:
             # cold cached index: load the whole-table key index in one go —
             # it gets pinned for every later batch anyway, so the pre-tag
             # workload profile (whose only use here is picking which
             # partitions to load) is pure overhead
-            with _stage("upsert.load_index"):
-                index_df = self._load_index(
-                    view, sorted(view.partitions()), None, token=token)
+            index_df = self._load_index(
+                view, sorted(view.partitions()), None, token=token)
         else:
             # workload profile (BaseSparkCommitActionExecutor.java:122-127)
             # + key range for BLOOM-style pruning; reused from the fast-lane
             # probe when that already ran it
             if prof is None:
-                with _stage("upsert.profile"):
-                    prof = self._batch_profile(profile_src)
+                prof = self._batch_profile(profile_src)
             key_range = ((min(r[2] for r in prof), max(r[3] for r in prof))
                          if prof else None)
-            with _stage("upsert.load_index"):
-                index_df = self._load_index(view, [r[0] for r in prof],
-                                            key_range, token=token)
+            index_df = self._load_index(view, [r[0] for r in prof],
+                                        key_range, token=token)
             n_batch = sum(r[1] for r in prof)
         if n_batch is None:
             # broadcast-size guard: a cold first batch can be arbitrarily
             # large; limit(cap+1) stops after cap+1 rows instead of
             # scanning it
-            with _stage("upsert.bc_probe"):
-                n_batch = prepared.limit(cap + 1).count()
+            n_batch = prepared.limit(cap + 1).count()
         # the tagging join consumes prepared twice (broadcast probe + stream
         # side) and the write again via tagged — cache it
         prepared.persist()
@@ -908,26 +906,23 @@ class HudiTable:
                 update_partition_path=upp,
             ).dropDuplicates([uid, FG_COL]).drop(uid)
         if self.tc.table_type == MERGE_ON_READ:
-            with _stage("upsert.write"):
-                return self._upsert_mor_fast(
-                    view, slices, instant_time, tagged, pending_compaction,
-                    is_delete, frozen_fgs)
+            return self._upsert_mor_fast(
+                view, slices, instant_time, tagged, pending_compaction,
+                is_delete, frozen_fgs)
         tagged = tagged.persist()
         try:
             # per-file-group update counts + per-partition insert counts
-            with _stage("upsert.tag_profile"):
-                fg_prof = tagged.groupBy(META_PARTITION_PATH,
-                                         FG_COL).count().collect()
+            fg_prof = tagged.groupBy(META_PARTITION_PATH,
+                                     FG_COL).count().collect()
             update_fgs = {r[1]: r[0] for r in fg_prof if r[1] is not None}
             self._reject_frozen(frozen_fgs & set(update_fgs))
             insert_profile = {} if is_delete else \
                 {r[0]: r[2] for r in fg_prof if r[1] is None}
             updates, inserts = self._split_tagged(tagged, is_delete)
-            with _stage("upsert.write"):
-                stats, schema = self._upsert_cow(
-                    view, instant_time, updates, inserts, update_fgs,
-                    insert_profile, n_new_rows=sum(r[2] for r in fg_prof),
-                    frozen_fgs=frozen_fgs)
+            stats, schema = self._upsert_cow(
+                view, instant_time, updates, inserts, update_fgs,
+                insert_profile, n_new_rows=sum(r[2] for r in fg_prof),
+                frozen_fgs=frozen_fgs)
             return stats, schema, any(v > 0 for v in insert_profile.values())
         finally:
             tagged.unpersist()
@@ -950,7 +945,7 @@ class HudiTable:
           workload-profile action over the raw keyed batch; tagging fuses
           into the write job and the rewrite set is the manifest-stats
           superset, which is cheaper when every group is touched anyway."""
-        cap = self.cfg.index_broadcast_max_rows
+        cap = INDEX_BROADCAST_MAX_ROWS
         n_last = getattr(self, "_last_batch_keys", None)
         warm = (n_last is not None and self._index_cache_on
                 and self._key_index is not None
@@ -959,8 +954,7 @@ class HudiTable:
         self._last_probe_mode = "warm_tag" if warm else "profile"
         if warm:
             prepared.persist()
-            with _stage("upsert.bc_probe"):
-                n_probe = prepared.limit(cap + 1).count()
+            n_probe = prepared.limit(cap + 1).count()
             # prepared is preCombined in this lane → rows == keys.
             # Recorded unconditionally: over the cap it is a lower bound
             # (cap+1) that correctly flips big-batch workloads back toward
@@ -969,8 +963,7 @@ class HudiTable:
             if n_probe > cap:
                 self._last_probe_mode = "general"
             return None, n_probe
-        with _stage("upsert.profile"):
-            prof = self._batch_profile(profile_src)
+        prof = self._batch_profile(profile_src)
         # spread signal in KEY units (the profile scans the raw
         # multi-version batch; per-partition distinct sums are exact for
         # non-global keys, approx per partition) — raw row count stays the
@@ -1125,9 +1118,8 @@ class HudiTable:
                                         None, token=token)
             tagged = tag_locations(prepared, index_df, self.cfg.index_type,
                                    broadcast_incoming=True).persist()
-            with _stage("upsert.tag_profile"):
-                tag_prof = tagged.groupBy(
-                    META_PARTITION_PATH, FG_COL).count().collect()
+            tag_prof = tagged.groupBy(
+                META_PARTITION_PATH, FG_COL).count().collect()
             fg_map = {r[1]: r[0] for r in tag_prof if r[1] is not None}
             insert_counts = {r[0]: r[2] for r in tag_prof if r[1] is None}
         else:
@@ -1263,7 +1255,7 @@ class HudiTable:
         Two physical strategies, same semantics:
 
         - **broadcast anti-join** (the batch broadcasts — ``n_new_rows`` ≤
-          ``index_broadcast_max_rows`` —, OVERWRITE_LATEST payload, batch
+          ``INDEX_BROADCAST_MAX_ROWS`` —, OVERWRITE_LATEST payload, batch
           preCombined): stored rows whose key appears in the batch are
           dropped by a broadcast LEFT ANTI join; everything else passes
           through *in its scan partition* — the table-sized side is never
@@ -1273,12 +1265,11 @@ class HudiTable:
           compares old against new): old ∪ new → per-file-group
           latest-wins window → write, one shuffle keyed by file group.
         """
-        with _stage("cow.plan"):
-            rec_size = avg_record_size(self.meta, self.timeline,
-                                       self.cfg.record_size_estimate)
-            plan = plan_insert_buckets(insert_profile, view, self.cfg, rec_size,
-                                       pack_small_files=True,
-                                       exclude_fgs=frozen_fgs)
+        rec_size = avg_record_size(self.meta, self.timeline,
+                                   self.cfg.record_size_estimate)
+        plan = plan_insert_buckets(insert_profile, view, self.cfg, rec_size,
+                                   pack_small_files=True,
+                                   exclude_fgs=frozen_fgs)
         assigned = assign_insert_buckets(self.spark, inserts, plan,
                                          META_PARTITION_PATH, META_RECORD_KEY, FG)
         new_raw = updates.unionByName(assigned, allowMissingColumns=True)
@@ -1294,7 +1285,7 @@ class HudiTable:
         if (rewrite_fgs and self._new_version_wins()
                 and self.cfg.combine_before_upsert             # 1 row/key
                 and n_new_rows is not None
-                and n_new_rows <= self.cfg.index_broadcast_max_rows):
+                and n_new_rows <= INDEX_BROADCAST_MAX_ROWS):
             # every stored version of a batch key dies (incl. duplicate-key
             # twins from insert/bulk_insert) — the preCombined batch row is
             # the slice's single new version; the anti-join kernel also drops
@@ -1401,9 +1392,8 @@ class HudiTable:
             insert_profile = None           # unknown until counted
             write_deltas = True
             if ext_fgs:
-                with _stage("upsert.tag_profile"):
-                    fg_prof = tagged.groupBy(META_PARTITION_PATH,
-                                             FG_COL).count().collect()
+                fg_prof = tagged.groupBy(META_PARTITION_PATH,
+                                         FG_COL).count().collect()
                 update_fgs = {r[1] for r in fg_prof if r[1] is not None}
                 self._reject_frozen(frozen_fgs & update_fgs)
                 insert_profile = {} if is_delete else \
@@ -1430,12 +1420,11 @@ class HudiTable:
                     base_of[fg] = max(base_of.get(fg) or "", ctime)
                 upd = updates.withColumn(META_FILE_NAME, F.col(FG))
                 schema = self._commit_schema(upd)
-                with _stage("mor.delta_write"):
-                    from .writer import write_grouped_log_files
-                    delta = write_grouped_log_files(
-                        upd, self.meta, instant_time,
-                        {sl.file_group: sl.partition for sl in slices},
-                        base_of, compression=self.cfg.parquet_compression)
+                from .writer import write_grouped_log_files
+                delta = write_grouped_log_files(
+                    upd, self.meta, instant_time,
+                    {sl.file_group: sl.partition for sl in slices},
+                    base_of, compression=self.cfg.parquet_compression)
                 stats += delta
                 if insert_profile is None and tag_obs is not None and delta:
                     # the delta write evaluated every cache partition (the
@@ -1453,14 +1442,12 @@ class HudiTable:
                 if insert_profile is None:
                     # one action doubles as existence probe and bucket
                     # profile (tagged is already cached by the delta write)
-                    with _stage("mor.insert_probe"):
-                        insert_profile = {r[0]: r[1] for r in
-                                          inserts.groupBy(META_PARTITION_PATH)
-                                          .count().collect()}
+                    insert_profile = {r[0]: r[1] for r in
+                                      inserts.groupBy(META_PARTITION_PATH)
+                                      .count().collect()}
                 if insert_profile:
-                    with _stage("mor.new_fg_write"):
-                        s, schema = self._mor_write_new_fgs(
-                            inserts, insert_profile, instant_time)
+                    s, schema = self._mor_write_new_fgs(
+                        inserts, insert_profile, instant_time)
                     stats += s
             if schema is None:
                 schema = self.stored_schema()

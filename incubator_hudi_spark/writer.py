@@ -35,7 +35,6 @@ from .config import (DELETE_MARKER, META_COLUMNS, META_COMMIT_SEQNO,
 from .fsview import WriteStat
 from .keygen import add_key_columns
 from .metaclient import TableMetaClient
-from .timing import _stage
 
 FG = "_fg"                       # transient bucket column, becomes the dir name
 API_DELETE = "_hoodie_api_delete"  # hard delete (EmptyPayload semantics)
@@ -97,6 +96,16 @@ MERGE_KEY = [META_RECORD_KEY, META_PARTITION_PATH]
 # merge, so (key, partition) windows are correct for both modes.
 
 
+def _tie_columns(df: DataFrame, tc: TableConfig) -> list[str]:
+    """preCombine tie-break columns, shared by ``precombine_dedup`` and
+    ``precombine_dedup_in_bucket`` so both pick the same survivor: every
+    orderable data column (maps cannot be compared), alphabetical."""
+    return sorted(f.name for f in df.schema.fields
+                  if not f.name.startswith("_hoodie")
+                  and f.name != tc.precombine_field
+                  and f.dataType.typeName() != "map")
+
+
 def precombine_dedup(df: DataFrame, tc: TableConfig,
                      global_index: bool = False) -> DataFrame:
     """Within-batch dedup: exactly one survivor per HoodieKey, max precombine
@@ -116,12 +125,7 @@ def precombine_dedup(df: DataFrame, tc: TableConfig,
     """
     keys = [META_RECORD_KEY] if global_index else MERGE_KEY
     if tc.precombine_field and tc.precombine_field in df.columns:
-        unorderable = {f.name for f in df.schema.fields
-                       if f.dataType.typeName() in ("map",)}
-        tie_cols = sorted(c for c in df.columns
-                          if not c.startswith("_hoodie")
-                          and c != tc.precombine_field
-                          and c not in unorderable)
+        tie_cols = _tie_columns(df, tc)
         payload_cols = [c for c in df.columns if c not in keys]
         ord_struct = F.struct(tc.precombine_field, *tie_cols)
         return (df.groupBy(*keys)
@@ -143,14 +147,8 @@ def precombine_dedup_in_bucket(df: DataFrame, tc: TableConfig,
     hashes the record key, so cross-bucket twins cannot exist."""
     if not (tc.precombine_field and tc.precombine_field in df.columns):
         return df.dropDuplicates([bucket_col] + MERGE_KEY)
-    unorderable = {f.name for f in df.schema.fields
-                   if f.dataType.typeName() in ("map",)}
-    tie_cols = sorted(c for c in df.columns
-                      if not c.startswith("_hoodie")
-                      and c != tc.precombine_field
-                      and c not in unorderable)
     order = [F.desc_nulls_last(tc.precombine_field)]
-    order += [F.desc_nulls_last(c) for c in tie_cols]
+    order += [F.desc_nulls_last(c) for c in _tie_columns(df, tc)]
     w = Window.partitionBy(bucket_col, *MERGE_KEY).orderBy(*order)
     return (df.withColumn("_hoodie_rn", F.row_number().over(w))
               .filter(F.col("_hoodie_rn") == 1).drop("_hoodie_rn"))
@@ -300,54 +298,52 @@ def write_grouped_log_files(
     out = (df.drop(FG)
              .repartition(F.col(META_FILE_NAME))   # AQE coalesces small batches
              .sortWithinPartitions(META_FILE_NAME, META_RECORD_KEY))
-    with _stage("write.files"):
-        (out.write.option("compression", compression)
-            .options(**local_write_options(
-                out_dir, df.sparkSession._jsc.hadoopConfiguration()))
-            .mode("append").parquet(out_dir))
-    with _stage("write.stats"):
-        if not os.path.isdir(out_dir):             # empty batch wrote nothing
-            return []
-        files = [os.path.join(out_dir, fn) for fn in sorted(os.listdir(out_dir))
-                 if fn.endswith(".parquet")]
-        if not files:
-            return []
-        sizes = {p: os.path.getsize(p) for p in files}
-        # exact (file, group) membership + per-group row counts — one narrow
-        # pass over the single freshly-written column.  Small delta sets
-        # (the common steady-state batch) are counted driver-side via Arrow
-        # (no job launch); big ones via a column-pruned Spark scan.
-        pairs: list[tuple[str, str, int]] = []   # (abs_path, fg, rows)
-        if sum(sizes.values()) <= 64 * 1024 * 1024:
-            import pyarrow.parquet as pq
-            for p in files:
-                col = pq.read_table(p, columns=[META_FILE_NAME])[0]
-                vc = col.value_counts()
-                for item in vc:
-                    pairs.append((p, item["values"].as_py(),
-                                  item["counts"].as_py()))
-        else:
-            spark = df.sparkSession
-            rows = (spark.read.parquet(*files)
-                    .groupBy(F.input_file_name().alias("_f"),
-                             F.col(META_FILE_NAME).alias("_fg"))
-                    .count().collect())
-            import re as _re
-            pairs = [(_re.sub("^file:/*", "/", r["_f"]), r["_fg"], r["count"])
-                     for r in rows]
-        total_rows: dict[str, int] = {}
-        for p, _, n in pairs:
-            total_rows[p] = total_rows.get(p, 0) + n
-        stats = []
-        for p, fg, n in pairs:
-            share = n / max(1, total_rows[p])
-            stats.append(WriteStat(
-                partition=fg_to_partition.get(fg, ""), file_group=fg,
-                path=meta.rel_path(p),
-                size=int(sizes.get(p, 0) * share),       # apportioned
-                num_records=n, log=True,
-                base_instant=fg_base_instant.get(fg)))
-        return stats
+    (out.write.option("compression", compression)
+        .options(**local_write_options(
+            out_dir, df.sparkSession._jsc.hadoopConfiguration()))
+        .mode("append").parquet(out_dir))
+    if not os.path.isdir(out_dir):             # empty batch wrote nothing
+        return []
+    files = [os.path.join(out_dir, fn) for fn in sorted(os.listdir(out_dir))
+             if fn.endswith(".parquet")]
+    if not files:
+        return []
+    sizes = {p: os.path.getsize(p) for p in files}
+    # exact (file, group) membership + per-group row counts — one narrow
+    # pass over the single freshly-written column.  Small delta sets
+    # (the common steady-state batch) are counted driver-side via Arrow
+    # (no job launch); big ones via a column-pruned Spark scan.
+    pairs: list[tuple[str, str, int]] = []   # (abs_path, fg, rows)
+    if sum(sizes.values()) <= 64 * 1024 * 1024:
+        import pyarrow.parquet as pq
+        for p in files:
+            col = pq.read_table(p, columns=[META_FILE_NAME])[0]
+            vc = col.value_counts()
+            for item in vc:
+                pairs.append((p, item["values"].as_py(),
+                              item["counts"].as_py()))
+    else:
+        spark = df.sparkSession
+        rows = (spark.read.parquet(*files)
+                .groupBy(F.input_file_name().alias("_f"),
+                         F.col(META_FILE_NAME).alias("_fg"))
+                .count().collect())
+        import re as _re
+        pairs = [(_re.sub("^file:/*", "/", r["_f"]), r["_fg"], r["count"])
+                 for r in rows]
+    total_rows: dict[str, int] = {}
+    for p, _, n in pairs:
+        total_rows[p] = total_rows.get(p, 0) + n
+    stats = []
+    for p, fg, n in pairs:
+        share = n / max(1, total_rows[p])
+        stats.append(WriteStat(
+            partition=fg_to_partition.get(fg, ""), file_group=fg,
+            path=meta.rel_path(p),
+            size=int(sizes.get(p, 0) * share),       # apportioned
+            num_records=n, log=True,
+            base_instant=fg_base_instant.get(fg)))
+    return stats
 
 
 def write_instant_files(
@@ -392,27 +388,26 @@ def write_instant_files(
     out_dir = meta.instant_data_dir(instant_time)
     # base files honor the table's base format (HoodieFileFormat.java)
     fmt = getattr(meta.config, "base_format", "parquet")
-    with _stage("write.files"):
-        codec = cfg.parquet_compression
-        if fmt == "orc":
-            # parquet codec names are the config surface; translate to ORC's
-            # (gzip's ORC spelling is zlib; unknown names fail loudly here
-            # instead of mid-job inside the DataFrameWriter)
-            orc_codecs = {"gzip": "zlib", "zlib": "zlib", "snappy": "snappy",
-                          "zstd": "zstd", "lz4": "lz4", "none": "none",
-                          "uncompressed": "none"}
-            codec = orc_codecs.get(str(codec).lower())
-            if codec is None:
-                raise ValueError(
-                    f"compression {cfg.parquet_compression!r} has no ORC "
-                    "equivalent (use gzip/zlib, snappy, zstd, lz4, none)")
-        w = (out.write
-             .option("compression", codec)
-             .options(**local_write_options(
-                 out_dir, df.sparkSession._jsc.hadoopConfiguration()))
-             .partitionBy(FG)
-             .mode("append"))    # dir is unique per instant; append avoids pre-listing
-        w.orc(out_dir) if fmt == "orc" else w.parquet(out_dir)
+    codec = cfg.parquet_compression
+    if fmt == "orc":
+        # parquet codec names are the config surface; translate to ORC's
+        # (gzip's ORC spelling is zlib; unknown names fail loudly here
+        # instead of mid-job inside the DataFrameWriter)
+        orc_codecs = {"gzip": "zlib", "zlib": "zlib", "snappy": "snappy",
+                      "zstd": "zstd", "lz4": "lz4", "none": "none",
+                      "uncompressed": "none"}
+        codec = orc_codecs.get(str(codec).lower())
+        if codec is None:
+            raise ValueError(
+                f"compression {cfg.parquet_compression!r} has no ORC "
+                "equivalent (use gzip/zlib, snappy, zstd, lz4, none)")
+    w = (out.write
+         .option("compression", codec)
+         .options(**local_write_options(
+             out_dir, df.sparkSession._jsc.hadoopConfiguration()))
+         .partitionBy(FG)
+         .mode("append"))    # dir is unique per instant; append avoids pre-listing
+    w.orc(out_dir) if fmt == "orc" else w.parquet(out_dir)
     if ensure_fgs:
         written = {d.split("=", 1)[1] for d in os.listdir(out_dir)
                    if d.startswith(f"{FG}=")}
@@ -435,11 +430,10 @@ def write_instant_files(
                 else:
                     pq.write_table(
                         empty, os.path.join(d, "part-empty-00000.parquet"))
-    with _stage("write.stats"):
-        return collect_write_stats(meta, out_dir, fg_to_partition,
-                                   instant_time,
-                                   stats_columns=cfg.stats_columns,
-                                   fmt=fmt)
+    return collect_write_stats(meta, out_dir, fg_to_partition,
+                               instant_time,
+                               stats_columns=cfg.stats_columns,
+                               fmt=fmt)
 
 
 def _stat_value(v):

@@ -106,6 +106,38 @@ def test_precombine_in_batch_dedup(spark, tmp_table_path, lineitem):
     assert snap.filter(F.col("l_quantity") < 0).count() == crossers
 
 
+def test_precombine_tie_break_same_in_both_dedups(spark, lineitem):
+    """Twins with EQUAL precombine values, differing only in data columns:
+    the aggregate dedup (every later-commit lane) and the in-bucket window
+    dedup (first-commit lane) keep the same survivor — the row ranking
+    highest on the data columns taken alphabetically, descending."""
+    from incubator_hudi_spark.config import TableConfig
+    from incubator_hudi_spark.writer import (
+        FG, precombine_dedup, precombine_dedup_in_bucket, with_key_columns)
+    tc = TableConfig(name="li", recordkey_fields=("l_orderkey", "l_linenumber"),
+                     partition_expr="date_format(l_shipdate,'yyyy-MM')",
+                     precombine_field="l_shipdate")
+    one = (lineitem.limit(200)
+           .withColumn("m", F.create_map(F.lit("q"), F.col("l_quantity"))))
+    # loses on l_quantity to the original (same l_discount)
+    low_qty = one.withColumn("l_quantity", F.lit(-1.0))
+    # wins on l_quantity but loses on l_discount, which sorts first
+    low_discount = (one.withColumn("l_discount", F.lit(-1.0))
+                    .withColumn("l_quantity", F.lit(1e9)))
+    batch = with_key_columns(
+        one.unionByName(low_qty).unionByName(low_discount), tc)
+    by_agg = precombine_dedup(batch, tc)
+    by_window = precombine_dedup_in_bucket(
+        batch.withColumn(FG, F.abs(F.hash("_hoodie_record_key")) % 4)
+             .repartition(4, FG), tc, FG).drop(FG)
+    cols = [c for c in batch.columns if c != "m"]
+    a, b = by_agg.select(cols), by_window.select(cols)
+    assert a.count() == b.count() == batch.select(
+        "_hoodie_record_key", "_hoodie_partition_path").distinct().count()
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    assert a.filter("l_quantity < 0 or l_quantity > 1e8").count() == 0
+
+
 def test_delete_keys(spark, tmp_table_path, lineitem):
     t = make_lineitem_table(spark, tmp_table_path)
     t.upsert(lineitem)  # unique keys

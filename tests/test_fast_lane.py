@@ -19,7 +19,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+import incubator_hudi_spark.table as table_mod
 from incubator_hudi_spark import HudiTable, WriteConfig
+from incubator_hudi_spark.config import (INDEX_BLOOM, INDEX_GLOBAL_BLOOM,
+                                         INDEX_GLOBAL_SIMPLE)
 
 
 def make_table(spark, path, **kw):
@@ -44,19 +47,23 @@ def _rewritten_fgs(t, instant):
 
 
 @pytest.mark.slow
-def test_fast_lane_matches_general_lane(spark, tmp_table_path, lineitem):
+def test_fast_lane_matches_general_lane(spark, tmp_table_path, lineitem,
+                                        monkeypatch):
     """Same batch through both lanes → identical snapshots.  A broadcast
     cap below the batch sizes sends every batch of ``slow`` through the
     tag-profile lane and its window merge."""
     fast = make_table(spark, tmp_table_path + "_fast")
-    slow = make_table(spark, tmp_table_path + "_slow",
-                      write_config=WriteConfig(index_broadcast_max_rows=100))
+    slow = make_table(spark, tmp_table_path + "_slow")
     upd = (lineitem.filter("l_orderkey % 7 = 3")
            .withColumn("l_quantity", F.col("l_quantity") + 500.0))
-    for t in (fast, slow):
+
+    def write(t):
         t.upsert(lineitem)
         t.upsert(upd)
         t.delete(lineitem.filter("l_orderkey % 11 = 5"))
+    write(fast)
+    monkeypatch.setattr(table_mod, "INDEX_BROADCAST_MAX_ROWS", 100)
+    write(slow)
     a, b = fast.read(), slow.read()
     cols = [c for c in a.columns if not c.startswith("_hoodie")]
     assert a.select(cols).exceptAll(b.select(cols)).count() == 0
@@ -189,8 +196,8 @@ def test_warm_tag_probe_matches_profile_lane(spark, tmp_table_path, lineitem):
     brand-new partition), and delete batches."""
     warm = _warm_table(spark, tmp_table_path + "_wt", lineitem)
     base = make_table(spark, tmp_table_path + "_pf")
-    # no session index cache → the warm probe is never possible
-    base.cfg = base.cfg.with_(cache_simple_index=False)
+    # BLOOM has no session index cache → the warm probe is never possible
+    base.cfg = base.cfg.with_(index_type=INDEX_BLOOM)
     base.bulk_insert(lineitem)
     base.upsert(lineitem.limit(0))
     base.upsert(lineitem.filter("l_orderkey % 97 = 0")
@@ -336,10 +343,22 @@ def test_jobs_per_commit_cow_warm_tag_lane(spark, tmp_table_path, lineitem,
 
 
 def test_jobs_per_commit_cow_window_merge(spark, tmp_table_path, lineitem,
-                                          spark_jobs):
+                                          spark_jobs, monkeypatch):
     from incubator_hudi_spark.config import INDEX_SIMPLE
-    t = _cow_table(spark, tmp_table_path, lineitem, index_type=INDEX_SIMPLE,
-                   index_broadcast_max_rows=100)
+    monkeypatch.setattr(table_mod, "INDEX_BROADCAST_MAX_ROWS", 100)
+    t = _cow_table(spark, tmp_table_path, lineitem, index_type=INDEX_SIMPLE)
     counts = [spark_jobs(lambda q=q: t.upsert(
         _updates(lineitem, "l_orderkey % 5 = 1", q))) for q in (1.0, 2.0, 3.0)]
     assert counts == [15, 12, 12]
+
+
+@pytest.mark.parametrize("index_type",
+                         [INDEX_GLOBAL_SIMPLE, INDEX_GLOBAL_BLOOM])
+def test_jobs_per_commit_cow_global_index(spark, tmp_table_path, lineitem,
+                                          spark_jobs, index_type):
+    """Global indexes skip the fast lane: the general lane tags against the
+    whole-table key index and rewrites through the broadcast anti-join."""
+    t = _cow_table(spark, tmp_table_path, lineitem, index_type=index_type)
+    counts = [spark_jobs(lambda q=q: t.upsert(
+        _updates(lineitem, "l_orderkey % 5 = 1", q))) for q in (1.0, 2.0, 3.0)]
+    assert counts == [16, 16, 16]

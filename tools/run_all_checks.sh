@@ -5,6 +5,10 @@
 # Artifacts refreshed: PLANS.md, SCALE.md; bench prints its one JSON line.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+# size every Spark session to this host's cores (bench.py and
+# check_correctness.py otherwise default to 32 and 8), as the Tier-1 run does
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
+export SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}"
 
 echo "== pytest (all tiers) =="
 python -m pytest tests/ -q -m ""
