@@ -3479,48 +3479,49 @@ def aws_dms_cdc(spark, sf_dir):
 
 
 # The driver's correctness gate samples a prefix of queries() in dict order
-# (50 queries per round).  Round 7 rotation (continuing the standing
-# VERDICT r5 "no row >2 rounds old" policy; the r6 window's own comment
-# promised its past-slot-50 tail rolls to r7's front): first the 13
-# r4-earned pure-corpus rows the r6 window could not fit (the oldest
-# unsampled rows in the registry), then the rows whose code paths ROUND 7
-# rewrote (ExactSubstr owners prefilter, pyds arrow write kernel,
-# distributed GLOBAL_SORT split selection, reliable-checkpoint operators,
-# bounded-LSH dedup module), then r5-sampled rows now two rounds old —
-# write/service lanes first (every one of them exercises the r7 rawfs
-# write option).  Queries absent from this list keep their relative
-# registration order after the priority block; the eight remaining
-# two-round-old pure-corpus rows (cap_per_source_100, chunk_documents_512,
-# filter_exists, gopher_rule_filter, pipeline_training_corpus,
-# quality_filter_counts, sequence_packing, token_budget_mix) are the
-# front of round 8's window.
+# (50 queries per round).  Round 8 rotation (the standing "no row >2 rounds
+# old" policy): first the eight pure-corpus rows sampled in neither round 6
+# nor round 7 (named as round 8's front by the round 7 verdict), then the
+# rows whose code paths round 8 rewrites — key generation and the write
+# plan (_prepare, preCombine, tagging, routing and the anti-join rewrite)
+# and the GLOBAL_SORT sample cap in fused_profile_splits — then pii_scrub
+# (also unsampled in rounds 6-7), then rows last sampled in round 6, in
+# registration order.  Queries absent from this list keep their relative
+# registration order after the priority block; the round 6 rows past slot
+# 50 lead round 9's window.
 _PRIORITY = [
-    # oldest unsampled rows: r4-earned pure-corpus tail deferred from r6
-    "snapshot_export", "embedding_neardup_pairs", "embedding_cosine_pairs",
-    "ann_ivf_topk", "semantic_dedup_survivors", "multimodal_features",
-    "dedup_exact", "ngram_jaccard", "contamination_13gram",
-    "text_token_counts", "text_quality", "lang_id_counts",
-    "doc_fingerprint",
-    # REWRITTEN in r7 — re-earn on current code (owners count>=2
-    # prefilter; arrow write kernel; executor-side split selection;
-    # checkpoint_dir plumbing; max_bucket_size mode in dedup.py)
-    "exact_substring_dedup", "dup_clusters", "span_dedup_corpus",
-    "corpus_dedup_keep_one", "pyds_native_write_roundtrip",
-    "pyds_native_stream", "bulk_insert_roundtrip", "zorder_clustering_scan",
-    "point_lookup_bloom", "point_lookup_pruned", "insert_overwrite_table",
-    "data_skipping_column_stats",
-    # r5-sampled, now two rounds old — write/service/join lanes
-    "cow_upsert_snapshot", "cow_delete", "cow_incremental_pull",
-    "cow_point_in_time", "cow_snapshot_agg_q1", "truncate_reinsert",
-    "upgrade_downgrade_roundtrip", "orc_base_cow_snapshot",
-    "payload_partial_update", "keygen_complex", "timestamp_keygen_daily",
-    "timestamp_keygen_epoch", "global_index_partition_move",
-    "scheduled_clustering_execute", "schema_provider_ingest",
-    "ingest_checkpointed", "hudi_incr_pipeline",
-    "catalog_sync_external_read", "prepped_write_variants",
-    "sessionization", "join_q3_on_hudi", "join_q5_on_hudi",
-    "asof_join_attribution", "range_join_click_context",
-    "flatten_json_transform",
+    # two rounds unsampled: pure-corpus rows
+    "cap_per_source_100", "chunk_documents_512", "filter_exists",
+    "gopher_rule_filter", "pipeline_training_corpus",
+    "quality_filter_counts", "sequence_packing", "token_budget_mix",
+    # REWRITTEN in r8 — re-earn on current code (SQL-expression keygen,
+    # _prepare and COW routing; pin-time key-index dedup; capped sample)
+    "cow_upsert_snapshot", "cow_delete", "keygen_complex",
+    "timestamp_keygen_daily", "timestamp_keygen_epoch",
+    "payload_partial_update", "prepped_write_variants",
+    "global_index_partition_move", "bulk_insert_roundtrip",
+    # unsampled in r6 and r7
+    "pii_scrub",
+    # last sampled in r6
+    "incremental_glob", "incremental_glob_braces", "mor_snapshot",
+    "pyds_native_mor_snapshot", "mor_read_optimized", "mor_incremental",
+    "mor_compaction", "insert_overwrite_and_drop_partition", "merge_into",
+    "sql_dml", "update_delete_where", "streaming_sink_events",
+    "streaming_incremental_batch", "rollback", "savepoint_restore",
+    "clustering_cleaning_archival", "async_clustering_ingest",
+    "async_compaction_ingest", "schema_evolution", "bootstrap_full_record",
+    "bootstrap_metadata_only", "pyds_native_bootstrap",
+    "global_bloom_upsert", "inmemory_index_lifecycle",
+    "partition_sort_layout", "bulk_insert_none_mode",
+    "occ_conflict_detection", "multi_table_ingest",
+    "metadata_table_listing", "show_partitions_commits",
+    "ann_brute_force_topk", "ann_lsh_topk", "minhash_lsh_pairs",
+    "simhash_pairs", "payload_default_event_time_guard",
+    "global_index_partition_stickiness", "bloom_index_upsert",
+    "insert_duplicate_semantics", "mor_delete", "keygen_nonpartitioned",
+    "schema_widening", "stratified_sample", "vocab_top100",
+    "windowed_agg_10min", "mor_skip_merge", "gopher_repetition_rules",
+    "tfidf_top_terms", "repetition_bigram", "aws_dms_cdc",
 ]
 
 

@@ -30,6 +30,7 @@ from .config import (INDEX_BLOOM, INDEX_GLOBAL_BLOOM, INDEX_GLOBAL_SIMPLE,
                      INDEX_SIMPLE, META_FILE_NAME, META_PARTITION_PATH,
                      META_RECORD_KEY)
 from .fsview import FileSystemView, may_hold_keys
+from .keygen import sql_ident
 from .scan import bootstrap_skeleton, scan_parquet
 from .metaclient import TableMetaClient
 
@@ -62,7 +63,9 @@ def load_key_index(spark: SparkSession, meta: TableMetaClient, view: FileSystemV
                    partitions: Optional[list[str]] = None,
                    key_range: Optional[tuple[str, str]] = None,
                    tc=None, only_fgs: Optional[set] = None) -> DataFrame:
-    """DataFrame(key, partition, fg) of all live records in candidate slices.
+    """DataFrame(key, partition, fg) of all live records in candidate
+    slices: ``_hoodie_record_key``, ``_hoodie_partition_path`` (where the
+    record is stored) and ``FG_COL``.
 
     MOR: records first inserted into log files don't exist in base files; we
     also scan the key columns of log (delta parquet) files so tagging sees
@@ -113,10 +116,7 @@ def load_key_index(spark: SparkSession, meta: TableMetaClient, view: FileSystemV
                                 (META_RECORD_KEY, META_PARTITION_PATH,
                                  META_FILE_NAME)]))
     if not dfs:
-        return spark.createDataFrame([], _KEY_SCAN_SCHEMA) \
-            .select(F.col(META_RECORD_KEY),
-                    F.col(META_PARTITION_PATH).alias(CUR_PART_COL),
-                    F.col(META_FILE_NAME).alias(FG_COL))
+        dfs = [spark.createDataFrame([], _KEY_SCAN_SCHEMA)]
     df = dfs[0]
     for x in dfs[1:]:
         df = df.unionByName(x)
@@ -125,17 +125,17 @@ def load_key_index(spark: SparkSession, meta: TableMetaClient, view: FileSystemV
     # that would shuffle the table-sized key scan on every upsert.  Duplicate
     # tagged rows are benign: the per-file-group latest-wins merge collapses
     # them deterministically (the reference's SIMPLE index likewise emits one
-    # row per stored location, SparkHoodieSimpleIndex.java:112).
-    return df.select(F.col(META_RECORD_KEY),
-                     F.col(META_PARTITION_PATH).alias(CUR_PART_COL),
-                     F.col(META_FILE_NAME).alias(FG_COL))
+    # row per stored location, SparkHoodieSimpleIndex.java:112).  The pinned
+    # key index (table._load_index) pays that shuffle once, when pinned.
+    return df.withColumnRenamed(META_FILE_NAME, FG_COL)
 
 
 def tag_locations(incoming: DataFrame, index_df: DataFrame, index_type: str,
                   key_col: str = META_RECORD_KEY,
                   partition_col: str = META_PARTITION_PATH,
                   broadcast_incoming: bool = False,
-                  update_partition_path: bool = False) -> DataFrame:
+                  update_partition_path: bool = False,
+                  index_unique: bool = False) -> DataFrame:
     """Attach (fg, current partition) to incoming rows; null fg → insert.
 
     Non-global: key unique within partition → join on (key, partition).
@@ -153,20 +153,26 @@ def tag_locations(incoming: DataFrame, index_df: DataFrame, index_type: str,
     scale this is the only plan that works: the key scan is table-sized and
     must stream; the reference gets the same effect from its bucketized bloom
     check (BucketizedBloomCheckPartitioner.java).
+
+    ``index_unique``: ``index_df`` holds each (key, partition, file group)
+    once (the pinned key index is deduplicated when it is pinned), so the
+    pruned side needs no per-batch dedup shuffle.
     """
     on = [key_col] if is_global(index_type) else [key_col, partition_col]
-    idx = (index_df if is_global(index_type)
-           else index_df.withColumnRenamed(CUR_PART_COL, partition_col))
+    # global tagging keeps the stored partition apart from the incoming one
+    stored = CUR_PART_COL if is_global(index_type) else partition_col
+    idx = (index_df if stored == META_PARTITION_PATH
+           else index_df.withColumnRenamed(META_PARTITION_PATH, stored))
     if broadcast_incoming:
-        probe = incoming.select(*on).dropDuplicates(on)
+        probe = incoming.selectExpr(*map(sql_ident, on)).dropDuplicates(on)
         idx = idx.join(F.broadcast(probe), on=on, how="left_semi")
-        # collapse multi-row locations (MOR base+log, duplicate keys within
-        # one file) on the pruned ≤batch-sized side so the tagging join can
-        # only multiply per distinct file group — callers then need no
-        # batch-wide dedup shuffle
-        dedup_cols = on + ([CUR_PART_COL] if is_global(index_type) else []) \
-            + [FG_COL]
-        idx = F.broadcast(idx.dropDuplicates(dedup_cols))
+        if not index_unique:
+            # collapse multi-row locations (MOR base+log, duplicate keys
+            # within one file) on the pruned ≤batch-sized side so the
+            # tagging join can only multiply per distinct file group —
+            # callers then need no batch-wide dedup shuffle
+            idx = idx.dropDuplicates()
+        idx = F.broadcast(idx)
     tagged = incoming.join(idx, on=on, how="left")
     if is_global(index_type):
         if update_partition_path:
@@ -193,8 +199,9 @@ def tag_locations(incoming: DataFrame, index_df: DataFrame, index_type: str,
                 rest = rest.withColumn(API_DELETE, F.lit(False))
                 mv_ins = mv_ins.withColumn(API_DELETE, F.lit(False))
             return rest.unionByName(mv_ins).unionByName(mv_del)
-        tagged = tagged.withColumn(
-            partition_col,
-            F.coalesce(F.col(CUR_PART_COL), F.col(partition_col)))
-        tagged = tagged.drop(CUR_PART_COL)
+        part = (f"coalesce({sql_ident(CUR_PART_COL)}, "
+                f"{sql_ident(partition_col)}) AS {sql_ident(partition_col)}")
+        tagged = tagged.selectExpr(*[part if c == partition_col
+                                     else sql_ident(c) for c in tagged.columns
+                                     if c != CUR_PART_COL])
     return tagged

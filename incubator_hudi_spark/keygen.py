@@ -1,4 +1,4 @@
-"""Key generators — derive (record key, partition path) as pure Column
+"""Key generators — derive (record key, partition path) as pure SQL
 expressions; no per-row Python ever runs.
 
 Reference parity (hudi-client/hudi-spark-client/.../keygen/):
@@ -10,41 +10,64 @@ Reference parity (hudi-client/hudi-spark-client/.../keygen/):
   - CustomKeyGenerator.java:46         — per-field mix (field:simple / field:timestamp)
 
 A key-gen spec in our engine is just ``(recordkey_fields, partition_expr)``
-stored in TableConfig; this module turns the spec into columns.
+stored in TableConfig; this module turns the spec into SQL expression
+strings (``record_key_sql``/``partition_path_sql``), the one definition of
+each key.  Write plans splice the strings into ``selectExpr`` projections:
+one py4j call per projection instead of a round trip per Column helper.
 """
 
 from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 NON_PARTITIONED = "__HIVE_DEFAULT_PARTITION__"
 
 
-def record_key_col(fields: Sequence[str]) -> Column:
+def sql_ident(name: str) -> str:
+    """A top-level column name as a SQL identifier (any characters)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(s: str) -> str:
+    """A Python string as a SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _field_ref(field: str) -> str:
+    """A key field as ``F.col`` reads it: dots reach into structs, and a
+    name that already carries backticks is taken as written."""
+    if "`" in field:
+        return field
+    return ".".join(sql_ident(p) for p in field.split("."))
+
+
+def record_key_sql(fields: Sequence[str]) -> str:
     """Simple (1 field, raw value) or Complex (``f1:v1,f2:v2``) record key."""
     if len(fields) == 1:
-        return F.col(fields[0]).cast("string")
-    parts = [F.concat_ws(":", F.lit(f), F.col(f).cast("string")) for f in fields]
-    return F.concat_ws(",", *parts)
+        return f"CAST({_field_ref(fields[0])} AS STRING)"
+    parts = [f"concat_ws(':', {sql_str(f)}, CAST({_field_ref(f)} AS STRING))"
+             for f in fields]
+    return f"concat_ws(',', {', '.join(parts)})"
 
 
-def partition_path_col(partition_expr: Optional[str]) -> Column:
+def partition_path_sql(partition_expr: Optional[str]) -> str:
     """Partition path from a SQL expression (Timestamp-based keygen becomes
     ``date_format(ts,'yyyy-MM')``; field-list keygen ``concat_ws('/',a,b)``;
     NonPartitioned → constant)."""
     if not partition_expr:
-        return F.lit(NON_PARTITIONED)
-    return F.expr(partition_expr).cast("string")
+        return sql_str(NON_PARTITIONED)
+    return f"CAST(({partition_expr}) AS STRING)"
 
 
-def add_key_columns(df: DataFrame, recordkey_fields: Sequence[str],
-                    partition_expr: Optional[str],
-                    key_col: str, partition_col: str) -> DataFrame:
-    return df.withColumn(key_col, record_key_col(recordkey_fields)) \
-             .withColumn(partition_col, partition_path_col(partition_expr))
+def record_key_col(fields: Sequence[str]) -> Column:
+    return F.expr(record_key_sql(fields))
+
+
+def partition_path_col(partition_expr: Optional[str]) -> Column:
+    return F.expr(partition_path_sql(partition_expr))
 
 
 # -- TimestampBasedKeyGenerator typed input modes ---------------------------

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..config import WriteConfig
 from ..fsview import FileSystemView
+from ..keygen import sql_ident, sql_str
 
 
 @dataclass
@@ -48,6 +49,13 @@ def new_fg_id() -> str:
 #: samples per bucket regardless of n, so ONE aggregation can collect counts
 #: and split samples together without knowing the counts first.
 SAMPLES_PER_BUCKET = 100
+#: at most about this many sampled keys of one partition are collected into
+#: one aggregation row (a partition past ~1000 target-size buckets would
+#: otherwise hold its whole sample there); bigger samples are thinned
+MAX_SAMPLES_PER_PARTITION = 100_000
+#: second-level hash cut: a partition's sample is first collected in this
+#: many hash sub-groups, each thinned to its share of the cap
+SAMPLE_SUBGROUPS = 16
 
 
 def avg_record_size(meta, timeline, default: int, active=None) -> int:
@@ -116,8 +124,9 @@ def fused_profile_splits(src: DataFrame, partition_col: str, key_col: str,
                          rec_size: int, target_file_size_bytes: int,
                          samples_per_bucket: int = SAMPLES_PER_BUCKET
                          ) -> DataFrame:
-    """ONE aggregation yielding, per partition: row count AND the GLOBAL_SORT
-    range split points — (partition, _n, _splits).
+    """ONE aggregation pass yielding, per partition: row count AND the
+    GLOBAL_SORT range split points — (partition, _n, _splits, _sampled),
+    ``_sampled`` being the size of the key sample the splits came from.
 
     Sampling is a deterministic key-hash cut at a count-free uniform
     fraction f = samples_per_bucket·rec_size/target (a partition with n
@@ -125,6 +134,18 @@ def fused_profile_splits(src: DataFrame, partition_col: str, key_col: str,
     ≈ samples_per_bucket keys per bucket for ANY n); retried tasks
     re-derive the same sample (no rand() — the SPARK-38388 hazard class)
     and null keys drop out of the collect_list.
+
+    The sample is bounded per partition by a second-level hash cut, taken
+    when the input is large enough for a partition's sample to reach
+    MAX_SAMPLES_PER_PARTITION (an input past ~1000 target-size files): the
+    aggregation groups by (partition, one of SAMPLE_SUBGROUPS hash
+    sub-groups, on hash bits the first cut does not use), and a sub-group
+    whose sorted sample exceeds its 1/SAMPLE_SUBGROUPS share of the cap
+    keeps every j-th key (an evenly spaced thinning that preserves the
+    quantiles).  A second aggregation, over partitions × sub-groups rows,
+    merges the sub-groups, so no row holds more than ~the cap; below the
+    cap the merged sample is exactly the first cut's.  Smaller inputs skip
+    that second aggregation and its exchange.
 
     Split-point SELECTION is distributed too (r7): a projection on the
     aggregated row sorts the sample and reduces it to the k-1 quantile
@@ -142,19 +163,41 @@ def fused_profile_splits(src: DataFrame, partition_col: str, key_col: str,
                / max(1, target_file_size_bytes))
     thresh = max(1, int(frac * (1 << 20)))
     rpnf = max(1, target_file_size_bytes // rec_size)
-    return (src.groupBy(partition_col)
-            .agg(F.count(F.lit(1)).alias("_n"),
-                 F.sort_array(F.collect_list(F.when(
-                     F.pmod(F.xxhash64(F.col(key_col)),
-                            F.lit(1 << 20)) < F.lit(thresh),
-                     F.col(key_col)))).alias("_ks"))
-            .withColumn("_k", F.expr(f"(_n + {rpnf - 1}) div {rpnf}"))
-            .select(partition_col, "_n", F.expr(
-                "CASE WHEN _k > 1 AND size(_ks) > 0 THEN "
-                "transform(sequence(1, int(_k) - 1), i -> "
-                "element_at(_ks, int(least(size(_ks) - 1, "
-                "(size(_ks) * i) div _k)) + 1)) "
-                "ELSE array() END").alias("_splits")))
+    key = sql_ident(key_col)
+    k = f"((_n + {rpnf - 1}) div {rpnf})"     # planned bucket count
+    sampled = (f"CASE WHEN pmod(xxhash64({key}), {1 << 20}) < {thresh} "
+               f"THEN {key} END")
+    # the optimizer's size estimate (what Spark's own broadcast choice
+    # reads), over the stored record size and with an 8x margin for the
+    # in-memory vs on-disk gap: when even the whole input's sample stays
+    # under the cap, no partition can reach it and one aggregation does
+    size = int(str(src._jdf.queryExecution().optimizedPlan().stats()
+                   .sizeInBytes()))
+    if 8 * size // max(1, rec_size) * frac <= MAX_SAMPLES_PER_PARTITION:
+        grouped = src.groupBy(partition_col).agg(
+            F.expr("count(1) AS _n"),
+            F.expr(f"sort_array(collect_list({sampled})) AS _ks"))
+    else:
+        share = MAX_SAMPLES_PER_PARTITION // SAMPLE_SUBGROUPS
+        grouped = (
+            src.groupBy(partition_col, F.expr(
+                f"pmod(shiftright(xxhash64({key}), 20), {SAMPLE_SUBGROUPS})"
+                " AS _sub"))
+            .agg(F.expr("count(1) AS _n"),
+                 F.expr(f"sort_array(collect_list({sampled})) AS _ks"))
+            .groupBy(partition_col)
+            .agg(F.expr("sum(_n) AS _n"), F.expr(
+                "sort_array(flatten(collect_list(filter(_ks, (x, i) -> "
+                f"i % greatest(1, (size(_ks) + {share - 1}) div {share}) "
+                "= 0)))) AS _ks")))
+    return (grouped
+            .selectExpr(sql_ident(partition_col), "_n",
+                        f"CASE WHEN {k} > 1 AND size(_ks) > 0 THEN "
+                        f"transform(sequence(1, int({k}) - 1), i -> "
+                        "element_at(_ks, int(least(size(_ks) - 1, "
+                        f"(size(_ks) * i) div {k})) + 1)) "
+                        "ELSE array() END AS _splits",
+                        "size(_ks) AS _sampled"))
 
 
 def range_split_points(plan: list[InsertBucket],
@@ -215,6 +258,13 @@ def assign_insert_buckets_range(spark: SparkSession, inserts: DataFrame,
     return out
 
 
+def bucket_map_sql(plan: list[InsertBucket]) -> str:
+    """A one-bucket-per-partition plan as a SQL ``map(partition, file
+    group)`` literal."""
+    return "map(" + ", ".join(f"{sql_str(b.partition)}, {sql_str(b.file_group)}"
+                              for b in plan) + ")"
+
+
 def assign_insert_buckets(spark: SparkSession, inserts: DataFrame,
                           plan: list[InsertBucket],
                           partition_col: str, key_col: str,
@@ -237,10 +287,9 @@ def assign_insert_buckets(spark: SparkSession, inserts: DataFrame,
         # target bucket per partition — assignment is a pure map lookup, no
         # join, no hash column (the range join below costs a broadcast +
         # per-row range probe; a literal map is a codegen'd lookup)
-        fg_of = F.create_map(*[x for b in plan
-                               for x in (F.lit(b.partition), F.lit(b.file_group))])
-        return (inserts.withColumn(fg_col, fg_of[F.col(partition_col)])
-                .filter(F.col(fg_col).isNotNull()))  # match inner-join drops
+        return (inserts.withColumn(fg_col, F.expr(
+                    f"{bucket_map_sql(plan)}[{sql_ident(partition_col)}]"))
+                .filter(f"{sql_ident(fg_col)} IS NOT NULL"))  # inner-join drops
     plan_df = spark.createDataFrame(
         [(b.partition, b.file_group, b.seq_start, b.seq_end, totals[b.partition])
          for b in plan],

@@ -41,14 +41,13 @@ from .config import (BULK_INSERT, COPY_ON_WRITE, DELETE, DELETE_MARKER,
                      TableConfig, WriteConfig)
 from .fsview import FileSlice, FileSystemView, WriteStat, may_hold_keys
 from .indexing import FG_COL, load_key_index, tag_locations
-from .keygen import partition_path_col
+from .keygen import partition_path_col, sql_ident
 from .metaclient import TableMetaClient
 from .plans.buckets import (assign_insert_buckets, avg_record_size,
-                            new_fg_id, plan_insert_buckets)
+                            bucket_map_sql, new_fg_id, plan_insert_buckets)
 from .writer import (API_DELETE, FG, MERGE_KEY, NEW_FLAG,
-                     drop_deleted, merge_latest, ordered_meta_projection,
-                     precombine_dedup_in_bucket,
-                     precombine_dedup, with_commit_meta, with_key_columns,
+                     drop_deleted, live_sql, merge_latest, prepare_batch,
+                     precombine_dedup_in_bucket, with_key_columns,
                      write_instant_files)
 
 from .scan import bootstrap_skeleton, scan_parquet
@@ -88,6 +87,9 @@ class HudiTable:
         # replacecommit at its old SCHEDULED time, which can sort before the
         # cache's validation point while replacing file groups the cache
         # still maps keys to (stale routing there silently loses rows).
+        # The pinned frame holds each (key, partition, fg) once: it is
+        # deduplicated when pinned or extended, so tagging against it skips
+        # a per-batch dedup shuffle (indexing.tag_locations index_unique).
         self._key_index: Optional[DataFrame] = None
         self._key_index_parts: set = set()
         self._key_index_valid_token = None
@@ -248,18 +250,24 @@ class HudiTable:
                 self._invalidate_key_index()  # out-of-band commit → stale
         need = set(partitions or [])
         if self._key_index is None:
+            # materialized by this batch's tagging join, which scans all of
+            # it: an eager count() here would run the scan and the dedup
+            # exchange as jobs of their own.  The scan's file list is fixed
+            # at the token's view, and a cleaner never deletes latest slices.
             df = load_key_index(self.spark, self.meta, view, INDEX_SIMPLE,
-                                sorted(need), None, tc=self.tc).persist()
-            df.count()  # materialize now so every later job hits the cache
+                                sorted(need), None,
+                                tc=self.tc).dropDuplicates().persist()
             self._key_index = df
             self._key_index_parts = set(need)
             self._key_index_valid_token = tok
         else:
             missing = sorted(need - self._key_index_parts)
             if missing:
+                # new partitions only: disjoint from the pinned rows
                 add = load_key_index(self.spark, self.meta, view,
-                                     INDEX_SIMPLE, missing, None, tc=self.tc)
-                old, merged = self._key_index, None
+                                     INDEX_SIMPLE, missing, None,
+                                     tc=self.tc).dropDuplicates()
+                old = self._key_index
                 merged = old.unionByName(add).persist()
                 merged.count()
                 old.unpersist()
@@ -430,12 +438,14 @@ class HudiTable:
     # ------------------------------------------------------------------
     def _prepare(self, df: DataFrame, instant_time: str, combine: bool) -> DataFrame:
         from .indexing import is_global
-        out = with_key_columns(df, self.tc)
-        if combine:
-            out = precombine_dedup(out, self.tc,
-                                   global_index=is_global(self.cfg.index_type))
-        out = with_commit_meta(out, instant_time)
-        return ordered_meta_projection(out, [f.name for f in df.schema.fields])
+        return prepare_batch(df, self.tc, instant_time, combine,
+                             global_index=is_global(self.cfg.index_type))
+
+    def _keyed_profile(self, df: DataFrame, combined: bool) -> Optional[DataFrame]:
+        """``profile_df`` of ``_write_inserts`` for a batch ``df``: the raw
+        keyed batch when ``prepared`` was preCombined, else None — an
+        uncombined ``prepared`` is a plain projection, as cheap to count."""
+        return with_key_columns(df, self.tc) if combined else None
 
     def _commit_schema(self, prepared: DataFrame,
                        active: Optional[list] = None) -> StructType:
@@ -453,11 +463,12 @@ class HudiTable:
         new files to target; GLOBAL_SORT default → key-sorted files whose
         min/max ranges make the BLOOM-style index prune hard."""
         instant = self._start(tl.COMMIT)
-        prepared = self._prepare(df, instant.time, self.cfg.combine_before_insert)
+        combine = self.cfg.combine_before_insert
+        prepared = self._prepare(df, instant.time, combine)
         stats, fg_map, schema = self._write_inserts(
             prepared, instant.time, pack_small_files=False,
             sort_mode=sort_mode or self.cfg.bulk_insert_sort_mode,
-            profile_df=with_key_columns(df, self.tc))
+            profile_df=self._keyed_profile(df, combine))
         self._complete(instant, BULK_INSERT, stats, schema,
                        extra=commit_extras)
         self._post_commit()
@@ -469,12 +480,13 @@ class HudiTable:
         packing = UpsertPartitioner small-file handling).  No key-based
         routing: duplicate keys are *not* merged (reference semantics)."""
         instant = self._start(tl.COMMIT)
-        prepared = self._prepare(df, instant.time, self.cfg.combine_before_insert)
+        combine = self.cfg.combine_before_insert
+        prepared = self._prepare(df, instant.time, combine)
         stats, fg_map, schema = self._write_inserts(
             prepared, instant.time,
             pack_small_files=(self.tc.table_type == COPY_ON_WRITE),
             sort_mode=SORT_PARTITION,
-            profile_df=with_key_columns(df, self.tc))
+            profile_df=self._keyed_profile(df, combine))
         self._complete(instant, INSERT, stats, schema, extra=commit_extras)
         self._post_commit()
         return instant.time
@@ -582,12 +594,14 @@ class HudiTable:
                                         fg_map, self.cfg,
                                         sort_cols=sort_cols)
         if seed_index:
-            from .indexing import CUR_PART_COL
             self._invalidate_key_index()
-            idx = assigned.select(
-                F.col(META_RECORD_KEY),
-                F.col(META_PARTITION_PATH).alias(CUR_PART_COL),
-                F.col(FG).alias(FG_COL)).persist()
+            idx = assigned.selectExpr(*map(sql_ident, MERGE_KEY),
+                                      f"{FG} AS {FG_COL}")
+            if not combine_in_write or packed:
+                # the fused in-bucket preCombine already left one row per
+                # (key, partition, fg); otherwise dedup like _load_index
+                idx = idx.dropDuplicates()
+            idx = idx.persist()
             idx.count()
             assigned.unpersist()
             self._key_index = idx
@@ -681,10 +695,6 @@ class HudiTable:
         active = self.timeline.instants()
         # validate evolution on the raw batch BEFORE any union coerces types
         self._commit_schema(prepared, active)
-        # workload profiles run on the RAW keyed batch, not the deduped one:
-        # identical partition set, conservative (≥) counts and key ranges —
-        # so the preCombine shuffle never materializes just to be counted
-        profile_src = with_key_columns(df, self.tc)
         try:
             # ONE active-timeline listing per batch: the cache-validity
             # token, the pending-compaction set, and the file-system view
@@ -729,7 +739,9 @@ class HudiTable:
                     prepared, instant.time,
                     pack_small_files=(self.tc.table_type == COPY_ON_WRITE),
                     sort_mode=SORT_PARTITION, action_view=view,
-                    profile_df=profile_src, combine_in_write=fuse,
+                    profile_df=self._keyed_profile(
+                        df, self.cfg.combine_before_upsert and not fuse),
+                    combine_in_write=fuse,
                     seed_key_index=True, frozen_fgs=frozen_fgs)
                 # the index _write_inserts seeded from this very commit's
                 # write frame holds exactly the pre-write table plus our
@@ -738,8 +750,8 @@ class HudiTable:
                               == ("pending", instant.time))
             else:
                 stats, schema, wrote_inserts = self._write_batch(
-                    view, slices, instant.time, prepared, profile_src,
-                    is_delete, tok0, active, frozen_fgs, pending_compaction)
+                    view, slices, instant.time, prepared, is_delete, tok0,
+                    active, frozen_fgs, pending_compaction)
                 # an update-only commit rewrites/appends WITHIN existing
                 # file groups — every cached location stays correct, so the
                 # cache survives its own commit
@@ -819,8 +831,7 @@ class HudiTable:
         return pending
 
     def _write_batch(self, view: FileSystemView, slices: list,
-                     instant_time: str, prepared: DataFrame,
-                     profile_src: DataFrame, is_delete: bool,
+                     instant_time: str, prepared: DataFrame, is_delete: bool,
                      token: Optional[frozenset], active: list,
                      frozen_fgs: set, pending_compaction: dict[str, str]):
         """Tag, route and write a batch into a non-empty table.  Returns
@@ -836,16 +847,17 @@ class HudiTable:
         from .indexing import is_global
         cap = INDEX_BROADCAST_MAX_ROWS
         prof, n_batch = None, None
+        # every lane reads prepared more than once (profile or size probe,
+        # the tagging join's broadcast probe and stream side, the write)
+        prepared.persist()
         if (self.tc.table_type == COPY_ON_WRITE
                 and not is_global(self.cfg.index_type)
                 and self._new_version_wins()
                 and self.cfg.combine_before_upsert
                 and not any(f.external for sl in slices
                             for f in sl.base_files)):
-            prof, n_batch = self._probe_fast_lane(view, prepared,
-                                                  profile_src, token)
+            prof, n_batch = self._probe_fast_lane(view, prepared, token)
             if n_batch <= cap:
-                prepared.persist()
                 return self._upsert_cow_fast(
                     view, instant_time, prepared, prof, is_delete,
                     frozen_fgs=frozen_fgs, token=token, active=active)
@@ -872,7 +884,7 @@ class HudiTable:
             # + key range for BLOOM-style pruning; reused from the fast-lane
             # probe when that already ran it
             if prof is None:
-                prof = self._batch_profile(profile_src)
+                prof = self._batch_profile(prepared)
             key_range = ((min(r[2] for r in prof), max(r[3] for r in prof))
                          if prof else None)
             index_df = self._load_index(view, [r[0] for r in prof],
@@ -883,16 +895,14 @@ class HudiTable:
             # large; limit(cap+1) stops after cap+1 rows instead of
             # scanning it
             n_batch = prepared.limit(cap + 1).count()
-        # the tagging join consumes prepared twice (broadcast probe + stream
-        # side) and the write again via tagged — cache it
-        prepared.persist()
         upp = self.cfg.global_index_update_partition_path
         if n_batch <= cap:
             # broadcast path pre-dedups the pruned index side per file
             # group — the join can't multiply rows per (input row, fg)
             tagged = tag_locations(prepared, index_df, self.cfg.index_type,
                                    broadcast_incoming=True,
-                                   update_partition_path=upp)
+                                   update_partition_path=upp,
+                                   index_unique=self._index_cache_on)
         else:
             # shuffle path: the index may map one key to the same file
             # group several times (MOR base+log, duplicate keys in a
@@ -928,10 +938,12 @@ class HudiTable:
             tagged.unpersist()
 
     def _probe_fast_lane(self, view: FileSystemView, prepared: DataFrame,
-                         profile_src: DataFrame, token: Optional[frozenset]):
+                         token: Optional[frozenset]):
         """The COW fast lane's pre-write action, chosen per batch from the
         previous batch's spread.  Returns ``(profile rows or None, batch
-        rows)``; the row count is capped at cap+1 by the warm probe.
+        rows)``; the row count is capped at cap+1 by the warm probe.  Both
+        actions run on the persisted ``prepared``, which this lane requires
+        to be preCombined, so rows == keys.
 
         - ``warm_tag``: with fewer batch KEYS than HALF the file groups (the
           point-fix/CDC/GDPR shape) and a pinned index valid at this
@@ -942,9 +954,9 @@ class HudiTable:
           the lane's _load_index call extends the pinned index to every
           view partition incrementally.
         - ``profile`` otherwise, and on the first batch (no history): one
-          workload-profile action over the raw keyed batch; tagging fuses
-          into the write job and the rewrite set is the manifest-stats
-          superset, which is cheaper when every group is touched anyway."""
+          workload-profile action over the batch; tagging fuses into the
+          write job and the rewrite set is the manifest-stats superset,
+          which is cheaper when every group is touched anyway."""
         cap = INDEX_BROADCAST_MAX_ROWS
         n_last = getattr(self, "_last_batch_keys", None)
         warm = (n_last is not None and self._index_cache_on
@@ -953,9 +965,7 @@ class HudiTable:
                 and n_last < 0.5 * max(1, view.group_count()))
         self._last_probe_mode = "warm_tag" if warm else "profile"
         if warm:
-            prepared.persist()
             n_probe = prepared.limit(cap + 1).count()
-            # prepared is preCombined in this lane → rows == keys.
             # Recorded unconditionally: over the cap it is a lower bound
             # (cap+1) that correctly flips big-batch workloads back toward
             # profile routing.
@@ -963,32 +973,45 @@ class HudiTable:
             if n_probe > cap:
                 self._last_probe_mode = "general"
             return None, n_probe
-        prof = self._batch_profile(profile_src)
-        # spread signal in KEY units (the profile scans the raw
-        # multi-version batch; per-partition distinct sums are exact for
-        # non-global keys, approx per partition) — raw row count stays the
-        # broadcast-size gate
-        self._last_batch_keys = sum(r[4] for r in prof)
-        return prof, sum(r[1] for r in prof)
+        prof = self._batch_profile(prepared)
+        self._last_batch_keys = n_batch = sum(r[1] for r in prof)
+        return prof, n_batch
 
     @staticmethod
     def _batch_profile(src: DataFrame) -> list:
-        """Per-partition workload profile of the raw keyed batch, one Spark
-        action: (partition, rows, min key, max key, approx distinct keys)."""
+        """Per-partition workload profile of the keyed batch, one Spark
+        action: (partition, rows, min key, max key)."""
+        rk = sql_ident(META_RECORD_KEY)
         return src.groupBy(META_PARTITION_PATH).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(META_RECORD_KEY).alias("mn"),
-            F.max(META_RECORD_KEY).alias("mx"),
-            F.approx_count_distinct(META_RECORD_KEY).alias("nk")).collect()
+            *[F.expr(e) for e in ("count(1) AS n", f"min({rk}) AS mn",
+                                  f"max({rk}) AS mx")]).collect()
 
     @staticmethod
     def _split_tagged(tagged: DataFrame, is_delete: bool):
         """(updates routed to their file group in ``_fg``, inserts).  A
         delete has no inserts: deletes of absent keys are no-ops."""
-        updates = (tagged.filter(F.col(FG_COL).isNotNull())
-                   .withColumn(FG, F.col(FG_COL)).drop(FG_COL))
-        inserts = tagged.filter(F.col(FG_COL).isNull()).drop(FG_COL)
+        cols = [sql_ident(c) for c in tagged.columns if c != FG_COL]
+        updates = tagged.filter(f"{FG_COL} IS NOT NULL").selectExpr(
+            *cols, f"{FG_COL} AS {FG}")
+        inserts = tagged.filter(f"{FG_COL} IS NULL").selectExpr(*cols)
         return updates, inserts.limit(0) if is_delete else inserts
+
+    @staticmethod
+    def _route(df: DataFrame, fg_sql: str) -> DataFrame:
+        """The batch side of an anti-join rewrite, in one filter and one
+        projection: rows whose file group ``fg_sql`` (a SQL expression
+        over ``df``) is known and that are not deletes, carrying it in
+        ``_fg`` and ``_hoodie_file_name``, without the tag and API-delete
+        columns."""
+        cols = df.columns
+        fn = f"{fg_sql} AS {META_FILE_NAME}"
+        out = [fn if c == META_FILE_NAME else sql_ident(c) for c in cols
+               if c not in (FG_COL, API_DELETE, FG)]
+        out.append(f"{fg_sql} AS {FG}")
+        if META_FILE_NAME not in cols:
+            out.append(fn)
+        return df.filter(f"{fg_sql} IS NOT NULL AND {live_sql(cols)}") \
+                 .selectExpr(*out)
 
     @staticmethod
     def _reject_frozen(hit: set) -> None:
@@ -1031,9 +1054,8 @@ class HudiTable:
         small ``fresh`` side is clustered by file group.  The write-
         parallelism guard re-spreads tiny rewrite sets so encoding stays
         parallel early in table life; at scale groups approach target size
-        and the table side streams untouched.  Exactly one exchange."""
-        if API_DELETE in fresh.columns:
-            fresh = fresh.drop(API_DELETE)
+        and the table side streams untouched.  Exactly one exchange.
+        ``fresh`` comes shaped for the write (``_route``)."""
         parts = []
         if rewrite_fgs:
             old = self._read_fg_files(view, rewrite_fgs, active=active)
@@ -1075,13 +1097,12 @@ class HudiTable:
                                                   if rewrite_fgs else par)
                          or n_rewrite_files >= 3 * max(1, len(rewrite_fgs))))
         if not respread:
-            fresh = fresh.repartition(n_buckets, F.col(FG))
+            fresh = fresh.repartition(n_buckets, FG)
         merged = fresh
         for p in parts:
             merged = p.unionByName(merged, allowMissingColumns=True)
         if respread:
-            merged = merged.repartition(n_buckets, F.col(FG))
-        merged = merged.withColumn(META_FILE_NAME, F.col(FG))
+            merged = merged.repartition(n_buckets, FG)
         schema = self._commit_schema(merged, active)
         stats = write_instant_files(merged, self.meta, instant_time, fg_map,
                                     self.cfg,
@@ -1117,7 +1138,8 @@ class HudiTable:
             index_df = self._load_index(view, sorted(view.partitions()),
                                         None, token=token)
             tagged = tag_locations(prepared, index_df, self.cfg.index_type,
-                                   broadcast_incoming=True).persist()
+                                   broadcast_incoming=True,
+                                   index_unique=self._index_cache_on).persist()
             tag_prof = tagged.groupBy(
                 META_PARTITION_PATH, FG_COL).count().collect()
             fg_map = {r[1]: r[0] for r in tag_prof if r[1] is not None}
@@ -1139,7 +1161,8 @@ class HudiTable:
             # frozen-group probe, the multi-bucket range-join assignment)
             # persist it.
             tagged = tag_locations(prepared, index_df, self.cfg.index_type,
-                                   broadcast_incoming=True)
+                                   broadcast_incoming=True,
+                                   index_unique=self._index_cache_on)
         rewrite_fgs = set(fg_map)
         try:
             if frozen_fgs & rewrite_fgs:
@@ -1163,7 +1186,7 @@ class HudiTable:
                 # every row already carries its tagged group — no bucket
                 # planning (a delete, or an update-only batch known exactly
                 # in the warm shape)
-                fresh = drop_deleted(self._split_tagged(tagged, True)[0])
+                fresh = self._route(tagged, FG_COL)
             else:
                 rec_size = avg_record_size(self.meta, self.timeline,
                                            self.cfg.record_size_estimate,
@@ -1179,15 +1202,9 @@ class HudiTable:
                     # if the key exists, else the partition's planned bucket
                     # (mirrors assign_insert_buckets' map-lookup fast case;
                     # the null filter mirrors its inner-join drops)
-                    fg_of = F.create_map(*[x for b in plan
-                                           for x in (F.lit(b.partition),
-                                                     F.lit(b.file_group))])
-                    fresh = drop_deleted(
-                        tagged.withColumn(
-                            FG, F.coalesce(F.col(FG_COL),
-                                           fg_of[F.col(META_PARTITION_PATH)]))
-                        .drop(FG_COL)
-                        .filter(F.col(FG).isNotNull()))
+                    fresh = self._route(
+                        tagged, f"coalesce({FG_COL}, {bucket_map_sql(plan)}"
+                                f"[{sql_ident(META_PARTITION_PATH)}])")
                 else:
                     if not tagged_pinned:
                         tagged = tagged.persist()
@@ -1196,14 +1213,16 @@ class HudiTable:
                     assigned = assign_insert_buckets(
                         self.spark, inserts, plan,
                         META_PARTITION_PATH, META_RECORD_KEY, FG)
-                    fresh = drop_deleted(
-                        updates.unionByName(assigned, allowMissingColumns=True))
+                    fresh = self._route(
+                        updates.unionByName(assigned, allowMissingColumns=True),
+                        FG)
             # no dropDuplicates: the fast lane requires combine_before_upsert,
             # so prepared is already unique per MERGE_KEY — skipping the
             # dedup drops one exchange+aggregate pair from the broadcast
             # build (the hash build collapses duplicates anyway)
             stats, schema = self._anti_join_rewrite(
-                view, instant_time, fresh, prepared.select(*MERGE_KEY),
+                view, instant_time, fresh,
+                prepared.selectExpr(*map(sql_ident, MERGE_KEY)),
                 rewrite_fgs, fg_map, active=active)
             wrote_inserts = any(s.file_group not in rewrite_fgs for s in stats)
             return stats, schema, wrote_inserts
@@ -1296,8 +1315,9 @@ class HudiTable:
             # broadcast hash build collapses any residue, so skip the
             # dedup's exchange+aggregate pair
             return self._anti_join_rewrite(
-                view, instant_time, drop_deleted(new_raw),
-                new_raw.select(*MERGE_KEY), rewrite_fgs, fg_map)
+                view, instant_time, self._route(new_raw, FG),
+                new_raw.selectExpr(*map(sql_ident, MERGE_KEY)),
+                rewrite_fgs, fg_map)
 
         new_rows = new_raw.withColumn(NEW_FLAG, F.lit(True))
         if rewrite_fgs:
@@ -1626,19 +1646,14 @@ class HudiTable:
     def filter_exists(self, df: DataFrame) -> DataFrame:
         """Keep only records NOT already in the table
         (HoodieReadClient/SparkRDDWriteClient.java:131-141 → left_anti)."""
-        from .indexing import CUR_PART_COL, is_global
+        from .indexing import is_global
         keyed = with_key_columns(df, self.tc)
         view = self.view()
         index_df = load_key_index(self.spark, self.meta, view,
                                   self.cfg.index_type, tc=self.tc)
-        if is_global(self.cfg.index_type):
-            idx = index_df.select(META_RECORD_KEY).distinct()
-            on = [META_RECORD_KEY]
-        else:
-            idx = index_df.select(
-                META_RECORD_KEY,
-                F.col(CUR_PART_COL).alias(META_PARTITION_PATH)).distinct()
-            on = [META_RECORD_KEY, META_PARTITION_PATH]
+        on = ([META_RECORD_KEY] if is_global(self.cfg.index_type)
+              else MERGE_KEY)
+        idx = index_df.select(*on).distinct()
         return keyed.join(idx, on=on, how="left_anti") \
                     .drop(META_RECORD_KEY, META_PARTITION_PATH)
 
@@ -1809,7 +1824,7 @@ class HudiTable:
         for p in parts[1:]:
             df = df.unionByName(p, allowMissingColumns=True)
         if raw:
-            return df.withColumn(FG, F.col(META_FILE_NAME))
+            return df.withColumn(FG, F.expr(sql_ident(META_FILE_NAME)))
         return df if read_optimized else drop_deleted(df)
 
     def _scan_bases(self, slices: list[FileSlice],

@@ -33,7 +33,8 @@ from .config import (DELETE_MARKER, META_COLUMNS, META_COMMIT_SEQNO,
                      META_RECORD_KEY, PAYLOAD_DEFAULT,
                      PAYLOAD_OVERWRITE_NON_DEFAULTS, TableConfig, WriteConfig)
 from .fsview import WriteStat
-from .keygen import add_key_columns
+from .keygen import (partition_path_sql, record_key_sql, sql_ident,
+                     sql_str)
 from .metaclient import TableMetaClient
 
 FG = "_fg"                       # transient bucket column, becomes the dir name
@@ -64,27 +65,21 @@ def local_write_options(path: str, hadoop_conf) -> dict:
             "mapreduce.fileoutputcommitter.marksuccessfuljobs": "false"}
 
 
+def _key_sql(tc: TableConfig) -> dict[str, str]:
+    return {META_RECORD_KEY: record_key_sql(tc.recordkey_fields),
+            META_PARTITION_PATH: partition_path_sql(tc.partition_expr)}
+
+
 def with_key_columns(df: DataFrame, tc: TableConfig) -> DataFrame:
-    return add_key_columns(df, tc.recordkey_fields, tc.partition_expr,
-                           META_RECORD_KEY, META_PARTITION_PATH)
-
-
-def with_commit_meta(df: DataFrame, instant_time: str) -> DataFrame:
-    """_hoodie_commit_time/_hoodie_commit_seqno for rows written at this
-    instant.  seqno = instant + monotonic id (cheap, unique, no shuffle)."""
-    return (df
-            .withColumn(META_COMMIT_TIME, F.lit(instant_time))
-            .withColumn(META_COMMIT_SEQNO,
-                        F.concat_ws("_", F.lit(instant_time),
-                                    F.monotonically_increasing_id().cast("string"))))
-
-
-def ordered_meta_projection(df: DataFrame, data_fields: Sequence[str]) -> DataFrame:
-    """Meta columns first, then data columns (HoodieRecord.java:37-45 layout)."""
-    cols = [c for c in META_COLUMNS if c in df.columns]
-    cols += [f for f in data_fields if f in df.columns and f not in cols]
-    extras = [c for c in df.columns if c not in cols and c != FG]
-    return df.select(*cols, *extras, *( [FG] if FG in df.columns else [] ))
+    """``df`` plus the record key and partition path, as one projection
+    (``withColumn`` semantics: an input that already carries a key column
+    has it replaced in place, otherwise the keys are appended)."""
+    keys = _key_sql(tc)
+    cols = df.columns
+    return df.selectExpr(*[f"{keys.get(c, sql_ident(c))} AS {sql_ident(c)}"
+                           for c in cols],
+                         *[f"{e} AS {sql_ident(c)}" for c, e in keys.items()
+                           if c not in cols])
 
 
 MERGE_KEY = [META_RECORD_KEY, META_PARTITION_PATH]
@@ -95,6 +90,8 @@ MERGE_KEY = [META_RECORD_KEY, META_PARTITION_PATH]
 # rewrites the incoming partition to the record's current one *before* any
 # merge, so (key, partition) windows are correct for both modes.
 
+_WIN = "_hoodie_win"
+
 
 def _tie_columns(df: DataFrame, tc: TableConfig) -> list[str]:
     """preCombine tie-break columns, shared by ``precombine_dedup`` and
@@ -104,6 +101,22 @@ def _tie_columns(df: DataFrame, tc: TableConfig) -> list[str]:
                   if not f.name.startswith("_hoodie")
                   and f.name != tc.precombine_field
                   and f.dataType.typeName() != "map")
+
+
+def _precombine(keyed: DataFrame, tc: TableConfig, keys: Sequence[str],
+                tie_cols: Sequence[str]) -> tuple[DataFrame, dict[str, str]]:
+    """``precombine_dedup``'s aggregate: the deduplicated frame and, per
+    column of ``keyed``, the SQL expression that reads it there (so callers
+    fuse the unpacking into their own projection)."""
+    cols = keyed.columns
+    if tc.precombine_field not in cols:
+        return keyed.dropDuplicates(keys), {c: sql_ident(c) for c in cols}
+    payload = ", ".join(sql_ident(c) for c in cols if c not in keys)
+    order = ", ".join(sql_ident(c) for c in [tc.precombine_field, *tie_cols])
+    win = keyed.groupBy(*keys).agg(F.expr(
+        f"max_by(struct({payload}), struct({order})) AS {_WIN}"))
+    return win, {c: sql_ident(c) if c in keys else f"{_WIN}.{sql_ident(c)}"
+                 for c in cols}
 
 
 def precombine_dedup(df: DataFrame, tc: TableConfig,
@@ -124,15 +137,35 @@ def precombine_dedup(df: DataFrame, tc: TableConfig,
     DESC NULLS LAST when taking the max.
     """
     keys = [META_RECORD_KEY] if global_index else MERGE_KEY
-    if tc.precombine_field and tc.precombine_field in df.columns:
-        tie_cols = _tie_columns(df, tc)
-        payload_cols = [c for c in df.columns if c not in keys]
-        ord_struct = F.struct(tc.precombine_field, *tie_cols)
-        return (df.groupBy(*keys)
-                  .agg(F.max_by(F.struct(*payload_cols), ord_struct).alias("_hoodie_win"))
-                  .select(*keys, "_hoodie_win.*")
-                  .select(*df.columns))
-    return df.dropDuplicates(keys)
+    out, ref = _precombine(df, tc, keys, _tie_columns(df, tc))
+    return out.selectExpr(*[f"{ref[c]} AS {sql_ident(c)}" for c in df.columns])
+
+
+def prepare_batch(df: DataFrame, tc: TableConfig, instant_time: str,
+                  combine: bool, global_index: bool = False) -> DataFrame:
+    """The write-ready batch: meta columns first (HoodieRecord.java:37-45
+    layout), then the data columns in input order.  Record key and
+    partition path come from the keygen; ``_hoodie_commit_time`` and
+    ``_hoodie_commit_seqno`` (instant + monotonic id: cheap, unique, no
+    shuffle) are stamped for this instant; an input
+    ``_hoodie_file_name`` rides along.  ``combine`` runs ``precombine_dedup``
+    between a keyed projection and the meta-first one; without it the batch
+    is a single projection.  Every step is one transformation over SQL
+    expression strings, so building the plan costs a few py4j calls."""
+    cols = df.columns
+    ref = {c: sql_ident(c) for c in cols}
+    ref.update(_key_sql(tc))
+    src = df
+    if combine:
+        src = with_key_columns(df, tc)
+        keys = [META_RECORD_KEY] if global_index else MERGE_KEY
+        src, ref = _precombine(src, tc, keys, _tie_columns(df, tc))
+    ref[META_COMMIT_TIME] = sql_str(instant_time)
+    ref[META_COMMIT_SEQNO] = (f"concat_ws('_', {sql_str(instant_time)}, "
+                              "CAST(monotonically_increasing_id() AS STRING))")
+    order = [c for c in META_COLUMNS if c in ref]
+    order += [c for c in cols if c not in META_COLUMNS]
+    return src.selectExpr(*[f"{ref[c]} AS {sql_ident(c)}" for c in order])
 
 
 def precombine_dedup_in_bucket(df: DataFrame, tc: TableConfig,
@@ -258,13 +291,21 @@ def merge_latest(df: DataFrame, tc: TableConfig, flag_col: str = NEW_FLAG,
     return out
 
 
+def live_sql(columns: Sequence[str]) -> str:
+    """SQL predicate over a frame with ``columns``: the row is not a delete
+    (OverwriteWithLatestAvroPayload.java:81-84 delete marker + API
+    deletes)."""
+    return " AND ".join([f"NOT coalesce({sql_ident(c)}, false)"
+                         for c in (DELETE_MARKER, API_DELETE)
+                         if c in columns] or ["true"])
+
+
 def drop_deleted(df: DataFrame) -> DataFrame:
-    """Filter records whose winning version is a delete
-    (OverwriteWithLatestAvroPayload.java:81-84 delete marker + API deletes)."""
-    for c in (DELETE_MARKER, API_DELETE):
-        if c in df.columns:
-            df = df.filter(~F.coalesce(F.col(c), F.lit(False)))
-    return df
+    """Filter records whose winning version is a delete, in one filter."""
+    cols = df.columns
+    if DELETE_MARKER not in cols and API_DELETE not in cols:
+        return df
+    return df.filter(live_sql(cols))
 
 
 # ---------------------------------------------------------------------------
@@ -371,7 +412,8 @@ def write_instant_files(
     if pre_partitioned:
         out = df
         if sort_cols:
-            out = out.sortWithinPartitions(*sort_cols)
+            out = out.sortWithinPartitions(
+                *[F.expr(sql_ident(c)) for c in sort_cols])
     else:
         # cluster by file group into at most #cores tasks: a task may carry
         # several small file groups (dynamic partitioning still emits one
@@ -381,10 +423,11 @@ def write_instant_files(
         par = df.sparkSession.sparkContext.defaultParallelism
         n_buckets = max(1, min(len(fg_to_partition),
                                cfg.write_parallelism or par))
-        out = df.repartition(n_buckets, F.col(FG))
+        out = df.repartition(n_buckets, FG)
         # FG-first sort satisfies the dynamic-partition writer's required
         # ordering, so FileFormatWriter skips its own per-task sort
-        out = out.sortWithinPartitions(FG, *(sort_cols or []))
+        out = out.sortWithinPartitions(
+            *[F.expr(sql_ident(c)) for c in [FG, *(sort_cols or [])]])
     out_dir = meta.instant_data_dir(instant_time)
     # base files honor the table's base format (HoodieFileFormat.java)
     fmt = getattr(meta.config, "base_format", "parquet")

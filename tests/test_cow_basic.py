@@ -428,6 +428,37 @@ def test_distributed_split_selection_matches_driver(spark):
         assert len(splits) == k - 1
 
 
+def test_fused_profile_sample_capped_per_partition(spark):
+    """A partition whose hash-cut sample is larger than
+    MAX_SAMPLES_PER_PARTITION is thinned by the second-level hash cut: the
+    sample its splits come from holds at most the cap (and at least half
+    of it), and the k-1 split points stay sorted.  A small partition in
+    the same aggregation keeps its whole sample."""
+    from incubator_hudi_spark.plans.buckets import (
+        MAX_SAMPLES_PER_PARTITION, fused_profile_splits)
+
+    cap = MAX_SAMPLES_PER_PARTITION
+    n_big, n_small = cap + cap // 2, 500
+    rec_size, target = 64, 6400      # f = 1 (every key sampled), 100 rows/bucket
+    df = (spark.range(n_big)
+          .selectExpr("'big' AS part", "format_string('k%07d', id) AS key")
+          .unionByName(spark.range(n_small).selectExpr(
+              "'small' AS part", "format_string('s%05d', id) AS key")))
+    got = {r["part"]: r for r in fused_profile_splits(
+        df, "part", "key", rec_size, target).collect()}
+
+    big = got["big"]
+    assert big["_n"] == n_big
+    assert cap // 2 <= big["_sampled"] <= cap, big["_sampled"]
+    splits = list(big["_splits"])
+    assert len(splits) == -(-n_big // 100) - 1
+    assert splits == sorted(set(splits))
+
+    small = got["small"]
+    assert small["_n"] == small["_sampled"] == n_small
+    assert list(small["_splits"]) == [f"s{i:05d}" for i in (100, 200, 300, 400)]
+
+
 def test_local_writes_skip_crc_sidecars(spark, tmp_table_path, lineitem):
     """r7: engine writes to local paths must not mint Hadoop .crc sidecars
     or _SUCCESS markers (they double small-file churn; parquet pages carry

@@ -146,7 +146,7 @@ def test_jobs_per_commit_mor_update_only(spark, tmp_table_path, lineitem,
         lineitem.filter("l_orderkey % 5 = 1").withColumn("l_quantity",
                                                          F.lit(q))))
               for q in (1.0, 2.0, 3.0)]
-    assert counts == [11, 11, 11]
+    assert counts == [9, 9, 9]
 
 
 def test_jobs_per_commit_mor_bootstrap_group(spark, tmp_path, lineitem,
@@ -166,4 +166,4 @@ def test_jobs_per_commit_mor_bootstrap_group(spark, tmp_path, lineitem,
     ext = [sl for sl in t.view().latest_slices()
            if any(f.external for f in sl.base_files)]
     assert ext, "test premise: bootstrap groups remain"
-    assert counts == [19, 17, 14]
+    assert counts == [15, 14, 11]

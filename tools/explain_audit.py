@@ -12,6 +12,9 @@ Checked invariants:
   4. MOR snapshot merge: exactly ONE shuffle for the latest-wins window;
   5. index tagging: the batch's key set is broadcast (never the table-sized
      key scan);
+  5b. tagging against a pinned index: no Exchange between the cached index
+     scan and the broadcast of the located keys (the index is deduplicated
+     once when pinned, not per batch);
   6. ANN brute force: the query set is broadcast (scan stays pipelined).
 
 Run: python tools/explain_audit.py [sf_dir]   (default sf0.001)
@@ -230,6 +233,42 @@ def main():
          scan_pruned_before_any_exchange(tagged_df)),
         (f"at most one batch-sized exchange (found {n_exchanges(tagged_df)})",
          n_exchanges(tagged_df) <= 1),
+    ])
+
+    # 5b — tagging against the pinned key index (INMEMORY/SIMPLE keep it
+    # persisted across batches, deduplicated when pinned): the located keys
+    # stream from the cached index scan through the pruning semi-join
+    # straight into their broadcast — no per-batch dedup shuffle
+    def pinned_scan_broadcast_without_exchange(df) -> bool:
+        paths = []
+
+        def walk(node, under_broadcast, saw_exchange):
+            name = node.nodeName()
+            if "InMemoryTableScan" in name \
+                    and FG_COL in node.simpleString(1000):
+                paths.append(under_broadcast and not saw_exchange)
+                return
+            if "BroadcastExchange" in name:
+                under_broadcast, saw_exchange = True, False
+            elif "Exchange" in name and "Reused" not in name:
+                saw_exchange = True
+            ch = node.children()
+            for i in range(ch.size()):
+                walk(ch.apply(i), under_broadcast, saw_exchange)
+        walk(df._jdf.queryExecution().executedPlan(), False, False)
+        return bool(paths) and all(paths)
+
+    pinned = t._load_index(view, sorted(view.partitions()), None)
+    tagged_pinned = tag_locations(prepared, pinned, t.cfg.index_type,
+                                  broadcast_incoming=True, index_unique=True)
+    p = explain(tagged_pinned)
+    check("index tagging against a pinned index: no per-batch index shuffle",
+          p, [
+        ("the key index is pinned (INMEMORY/SIMPLE cache)",
+         t._key_index is not None and pinned is t._key_index),
+        ("no Exchange between the cached index scan and the broadcast of "
+         "the located keys",
+         pinned_scan_broadcast_without_exchange(tagged_pinned)),
     ])
 
     # 2c — bloom-pruned point lookup: second-stage pruning on a shuffled
