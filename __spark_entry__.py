@@ -3484,7 +3484,9 @@ def aws_dms_cdc(spark, sf_dir):
 # nor round 7 (named as round 8's front by the round 7 verdict), then the
 # rows whose code paths round 8 rewrites — key generation and the write
 # plan (_prepare, preCombine, tagging, routing and the anti-join rewrite)
-# and the GLOBAL_SORT sample cap in fused_profile_splits — then pii_scrub
+# and the GLOBAL_SORT sample cap in fused_profile_splits — then the rows
+# whose COW upserts the exact-tag shape now writes (global indexes, a
+# METADATA_ONLY bootstrap table, the warm in-memory index), then pii_scrub
 # (also unsampled in rounds 6-7), then rows last sampled in round 6, in
 # registration order.  Queries absent from this list keep their relative
 # registration order after the priority block; the round 6 rows past slot
@@ -3500,6 +3502,9 @@ _PRIORITY = [
     "timestamp_keygen_daily", "timestamp_keygen_epoch",
     "payload_partial_update", "prepped_write_variants",
     "global_index_partition_move", "bulk_insert_roundtrip",
+    # REWRITTEN: the exact-tag COW shape (tag → profile → anti-join)
+    "bootstrap_metadata_only", "global_bloom_upsert",
+    "global_index_partition_stickiness", "inmemory_index_lifecycle",
     # unsampled in r6 and r7
     "pii_scrub",
     # last sampled in r6
@@ -3510,14 +3515,12 @@ _PRIORITY = [
     "streaming_incremental_batch", "rollback", "savepoint_restore",
     "clustering_cleaning_archival", "async_clustering_ingest",
     "async_compaction_ingest", "schema_evolution", "bootstrap_full_record",
-    "bootstrap_metadata_only", "pyds_native_bootstrap",
-    "global_bloom_upsert", "inmemory_index_lifecycle",
-    "partition_sort_layout", "bulk_insert_none_mode",
+    "pyds_native_bootstrap", "partition_sort_layout", "bulk_insert_none_mode",
     "occ_conflict_detection", "multi_table_ingest",
     "metadata_table_listing", "show_partitions_commits",
     "ann_brute_force_topk", "ann_lsh_topk", "minhash_lsh_pairs",
     "simhash_pairs", "payload_default_event_time_guard",
-    "global_index_partition_stickiness", "bloom_index_upsert",
+    "bloom_index_upsert",
     "insert_duplicate_semantics", "mor_delete", "keygen_nonpartitioned",
     "schema_widening", "stratified_sample", "vocab_top100",
     "windowed_agg_10min", "mor_skip_merge", "gopher_repetition_rules",

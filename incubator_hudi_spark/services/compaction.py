@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from .. import timeline as tl
 from ..config import COMPACT, META_FILE_NAME, MERGE_ON_READ
-from ..writer import API_DELETE, FG, drop_deleted, latest_wins, write_instant_files
+from ..writer import API_DELETE, FG, drop_deleted, write_instant_files
 
 
 #: plan strategies — hudi-client/hudi-client-common/.../compact/strategy/

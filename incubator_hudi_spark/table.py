@@ -220,34 +220,25 @@ class HudiTable:
     def _load_index(self, view: FileSystemView,
                     partitions: Optional[list],
                     key_range: Optional[tuple],
-                    only_fgs: Optional[set] = None,
-                    token: Optional[frozenset] = None) -> DataFrame:
+                    token: Optional[frozenset],
+                    only_fgs: Optional[set] = None) -> DataFrame:
         """Key→location index for tagging.  INMEMORY and SIMPLE keep the
         scan result persisted across batches (valid while no commit has
         changed any key→file-group mapping; update-only upserts extend
         validity), loading only partitions not yet covered — repeated
         upserts into hot partitions skip the table-sized key-column scan
-        entirely."""
+        entirely.
+
+        ``token`` (``_data_instants_token``) comes from the same timeline
+        snapshot as ``view``, and the caller has already checked the pinned
+        index against it; a fresh pin is stamped with it.  A token taken
+        AFTER the view would be loss-shaped: a pin built from a pre-commit
+        view, stamped with a post-commit token, is trusted forever."""
         it = self.cfg.index_type
         if not self._index_cache_on:
             return load_key_index(self.spark, self.meta, view, it,
                                   partitions, key_range, tc=self.tc,
                                   only_fgs=only_fgs)
-        # `token` must be captured BEFORE the caller built `view` (the same
-        # read-ordering rule as pending-compaction-before-view below): a
-        # commit completing between token capture and view build makes the
-        # token MISS an instant the view saw — the next batch then safely
-        # over-invalidates.  Computing the token here, AFTER the view, has
-        # the loss-shaped failure: a rebuild from the pre-commit view would
-        # be stamped with a post-commit token and trusted forever.
-        tok = token if token is not None else self._data_instants_token()
-        if self._key_index is not None:
-            if self._token_still_valid(self._key_index_valid_token, tok):
-                # archival may have shrunk the active set without touching
-                # mappings — re-stamp so the next batch compares equal
-                self._key_index_valid_token = tok
-            else:
-                self._invalidate_key_index()  # out-of-band commit → stale
         need = set(partitions or [])
         if self._key_index is None:
             # materialized by this batch's tagging join, which scans all of
@@ -259,7 +250,7 @@ class HudiTable:
                                 tc=self.tc).dropDuplicates().persist()
             self._key_index = df
             self._key_index_parts = set(need)
-            self._key_index_valid_token = tok
+            self._key_index_valid_token = token
         else:
             missing = sorted(need - self._key_index_parts)
             if missing:
@@ -457,13 +448,16 @@ class HudiTable:
     # WRITE OPERATORS
     # ==================================================================
     def bulk_insert(self, df: DataFrame, sort_mode: Optional[str] = None,
-                    commit_extras: Optional[dict] = None) -> str:
+                    commit_extras: Optional[dict] = None,
+                    _combine: Optional[bool] = None) -> str:
         """First-load path (SparkRDDWriteClient.java:223-244,
         SparkBulkInsertHelper.java + sort modes §2.4).  No index lookup; sizes
         new files to target; GLOBAL_SORT default → key-sorted files whose
-        min/max ranges make the BLOOM-style index prune hard."""
+        min/max ranges make the BLOOM-style index prune hard.  ``_combine``
+        overrides ``combine_before_insert`` (the prepped variant)."""
         instant = self._start(tl.COMMIT)
-        combine = self.cfg.combine_before_insert
+        combine = (self.cfg.combine_before_insert if _combine is None
+                   else _combine)
         prepared = self._prepare(df, instant.time, combine)
         stats, fg_map, schema = self._write_inserts(
             prepared, instant.time, pack_small_files=False,
@@ -475,12 +469,16 @@ class HudiTable:
         return instant.time
 
     def insert(self, df: DataFrame,
-               commit_extras: Optional[dict] = None) -> str:
+               commit_extras: Optional[dict] = None,
+               _combine: Optional[bool] = None) -> str:
         """Insert with small-file bin packing (SparkRDDWriteClient.java:172-178;
         packing = UpsertPartitioner small-file handling).  No key-based
-        routing: duplicate keys are *not* merged (reference semantics)."""
+        routing: duplicate keys are *not* merged (reference semantics).
+        ``_combine`` overrides ``combine_before_insert`` (the prepped
+        variant)."""
         instant = self._start(tl.COMMIT)
-        combine = self.cfg.combine_before_insert
+        combine = (self.cfg.combine_before_insert if _combine is None
+                   else _combine)
         prepared = self._prepare(df, instant.time, combine)
         stats, fg_map, schema = self._write_inserts(
             prepared, instant.time,
@@ -622,45 +620,27 @@ class HudiTable:
                        commit_extras: Optional[dict] = None) -> str:
         """upsertPreppedRecords (SparkRDDWriteClient.java:162-167): caller
         already deduplicated — skip the preCombine window."""
-        saved = self.cfg
-        self.cfg = self.cfg.with_(combine_before_upsert=False)
-        try:
-            return self._upsert_impl(df, UPSERT, commit_extras=commit_extras)
-        finally:
-            self.cfg = saved
+        return self._upsert_impl(df, UPSERT, commit_extras=commit_extras,
+                                 combine=False)
 
     def bulk_insert_prepped(self, df: DataFrame,
                             commit_extras: Optional[dict] = None) -> str:
         """bulkInsertPreppedRecords (SparkRDDWriteClient.java:238-244)."""
-        saved = self.cfg
-        self.cfg = self.cfg.with_(combine_before_insert=False)
-        try:
-            return self.bulk_insert(df, commit_extras=commit_extras)
-        finally:
-            self.cfg = saved
+        return self.bulk_insert(df, commit_extras=commit_extras,
+                                _combine=False)
 
     def insert_prepped(self, df: DataFrame,
                        commit_extras: Optional[dict] = None) -> str:
         """insertPreppedRecords (SparkRDDWriteClient.java:182-188): caller
         already combined — skip the optional pre-insert dedup."""
-        saved = self.cfg
-        self.cfg = self.cfg.with_(combine_before_insert=False)
-        try:
-            return self.insert(df, commit_extras=commit_extras)
-        finally:
-            self.cfg = saved
+        return self.insert(df, commit_extras=commit_extras, _combine=False)
 
     def delete_prepped(self, keys_df: DataFrame,
                        commit_extras: Optional[dict] = None) -> str:
         """deletePreppedRecords: keys already unique — skip the dedup stage."""
-        saved = self.cfg
-        self.cfg = self.cfg.with_(combine_before_upsert=False)
-        try:
-            return self._upsert_impl(
-                keys_df.withColumn(API_DELETE, F.lit(True)), DELETE,
-                commit_extras=commit_extras)
-        finally:
-            self.cfg = saved
+        return self._upsert_impl(keys_df.withColumn(API_DELETE, F.lit(True)),
+                                 DELETE, commit_extras=commit_extras,
+                                 combine=False)
 
     def upsert(self, df: DataFrame,
                commit_extras: Optional[dict] = None) -> str:
@@ -679,17 +659,20 @@ class HudiTable:
                                  DELETE, commit_extras=commit_extras)
 
     def _upsert_impl(self, df: DataFrame, operation: str,
-                     commit_extras: Optional[dict] = None) -> str:
+                     commit_extras: Optional[dict] = None,
+                     combine: Optional[bool] = None) -> str:
         """Upsert and delete as one chain: view → tag → route → write →
         commit (BaseSparkCommitActionExecutor.java:112-145).  A batch into
         an empty table is all inserts; every other batch goes through
-        _write_batch."""
+        _write_batch.  ``combine`` overrides ``combine_before_upsert`` (the
+        prepped variants) without touching the shared ``cfg``."""
+        if combine is None:
+            combine = self.cfg.combine_before_upsert
         is_delete = operation == DELETE
         action = (tl.DELTA_COMMIT if self.tc.table_type == MERGE_ON_READ
                   else tl.COMMIT)
         instant = self._start(action)
-        prepared = self._prepare(df, instant.time,
-                                 combine=self.cfg.combine_before_upsert)
+        prepared = self._prepare(df, instant.time, combine=combine)
         # THE batch's single active-timeline listing (shared by the schema
         # check, the validity token, the pending sets, and the view below)
         active = self.timeline.instants()
@@ -731,16 +714,14 @@ class HudiTable:
                 # non-global keys the preCombine dedup also folds into the
                 # write's own file-group exchange (one shuffle total).
                 from .indexing import is_global
-                fuse = (self.cfg.combine_before_upsert
-                        and not is_global(self.cfg.index_type))
+                fuse = combine and not is_global(self.cfg.index_type)
                 if fuse:
                     prepared = self._prepare(df, instant.time, combine=False)
                 stats, _, schema = self._write_inserts(
                     prepared, instant.time,
                     pack_small_files=(self.tc.table_type == COPY_ON_WRITE),
                     sort_mode=SORT_PARTITION, action_view=view,
-                    profile_df=self._keyed_profile(
-                        df, self.cfg.combine_before_upsert and not fuse),
+                    profile_df=self._keyed_profile(df, combine and not fuse),
                     combine_in_write=fuse,
                     seed_key_index=True, frozen_fgs=frozen_fgs)
                 # the index _write_inserts seeded from this very commit's
@@ -750,8 +731,8 @@ class HudiTable:
                               == ("pending", instant.time))
             else:
                 stats, schema, wrote_inserts = self._write_batch(
-                    view, slices, instant.time, prepared, is_delete, tok0,
-                    active, frozen_fgs, pending_compaction)
+                    view, slices, instant.time, prepared, is_delete, combine,
+                    tok0, active, frozen_fgs, pending_compaction)
                 # an update-only commit rewrites/appends WITHIN existing
                 # file groups — every cached location stays correct, so the
                 # cache survives its own commit
@@ -832,18 +813,27 @@ class HudiTable:
 
     def _write_batch(self, view: FileSystemView, slices: list,
                      instant_time: str, prepared: DataFrame, is_delete: bool,
-                     token: Optional[frozenset], active: list,
+                     combine: bool, token: Optional[frozenset], active: list,
                      frozen_fgs: set, pending_compaction: dict[str, str]):
         """Tag, route and write a batch into a non-empty table.  Returns
-        ``(stats, schema, wrote_inserts)``.
+        ``(stats, schema, wrote_inserts)``.  COW takes one of three shapes
+        of the tag → profile → route → merge chain
+        (BaseSparkCommitActionExecutor.java:112-145):
 
-        The COW fast lane (one pre-write action, anti-join rewrite) takes
-        every batch it can broadcast; bootstrap groups, old-vs-new payloads
-        and global indexes need the general lane.  Otherwise the batch is
-        tagged against the key index and handed to the MOR delta append or
-        the COW merge.  Nothing here is a setting: the lane follows from
-        the table, the payload, the batch size against
-        ``INDEX_BROADCAST_MAX_ROWS``, and the previous batch's spread."""
+        - **fused profile** (_upsert_cow_fast): broadcastable, preCombined,
+          non-global, new-version-wins, no bootstrap groups, and the probe
+          did not pick the warm pinned index; tagging fuses into the write.
+        - **exact tag**: every other broadcastable, preCombined batch under
+          a new-version-wins payload (warm pinned index, global indexes,
+          bootstrap groups); one tag-profile action gives the exact
+          rewrite set for the anti-join rewrite.
+        - **window merge** (_upsert_cow): the rest — over-cap batches,
+          old-vs-new payloads, uncombined batches.
+
+        MOR batches are tagged here and append deltas (_upsert_mor_fast).
+        Nothing here is a setting: the shape follows from the table, the
+        payload, the batch size against ``INDEX_BROADCAST_MAX_ROWS``, and
+        the previous batch's spread."""
         from .indexing import is_global
         cap = INDEX_BROADCAST_MAX_ROWS
         prof, n_batch = None, None
@@ -853,16 +843,16 @@ class HudiTable:
         if (self.tc.table_type == COPY_ON_WRITE
                 and not is_global(self.cfg.index_type)
                 and self._new_version_wins()
-                and self.cfg.combine_before_upsert
+                and combine
                 and not any(f.external for sl in slices
                             for f in sl.base_files)):
             prof, n_batch = self._probe_fast_lane(view, prepared, token)
-            if n_batch <= cap:
+            if prof is not None and n_batch <= cap:
                 return self._upsert_cow_fast(
                     view, instant_time, prepared, prof, is_delete,
                     frozen_fgs=frozen_fgs, token=token, active=active)
-            # batch too large to broadcast — fall through to the general
-            # lane (the window merge handles table-sized batches)
+            # the warm pinned index takes the exact tag below; a batch too
+            # large to broadcast takes the window merge
         if (self._index_cache_on and self._key_index is not None
                 and self._key_index_valid_token == token
                 and set(view.partitions()) <= self._key_index_parts):
@@ -878,7 +868,7 @@ class HudiTable:
             # workload profile (whose only use here is picking which
             # partitions to load) is pure overhead
             index_df = self._load_index(
-                view, sorted(view.partitions()), None, token=token)
+                view, sorted(view.partitions()), None, token)
         else:
             # workload profile (BaseSparkCommitActionExecutor.java:122-127)
             # + key range for BLOOM-style pruning; reused from the fast-lane
@@ -888,7 +878,7 @@ class HudiTable:
             key_range = ((min(r[2] for r in prof), max(r[3] for r in prof))
                          if prof else None)
             index_df = self._load_index(view, [r[0] for r in prof],
-                                        key_range, token=token)
+                                        key_range, token)
             n_batch = sum(r[1] for r in prof)
         if n_batch is None:
             # broadcast-size guard: a cold first batch can be arbitrarily
@@ -918,24 +908,42 @@ class HudiTable:
         if self.tc.table_type == MERGE_ON_READ:
             return self._upsert_mor_fast(
                 view, slices, instant_time, tagged, pending_compaction,
-                is_delete, frozen_fgs)
+                is_delete, frozen_fgs, active)
         tagged = tagged.persist()
         try:
-            # per-file-group update counts + per-partition insert counts
-            fg_prof = tagged.groupBy(META_PARTITION_PATH,
-                                     FG_COL).count().collect()
-            update_fgs = {r[1]: r[0] for r in fg_prof if r[1] is not None}
-            self._reject_frozen(frozen_fgs & set(update_fgs))
-            insert_profile = {} if is_delete else \
-                {r[0]: r[2] for r in fg_prof if r[1] is None}
+            update_fgs, insert_counts = self._tag_profile(tagged, frozen_fgs,
+                                                          is_delete)
+            if self._new_version_wins() and combine and n_batch <= cap:
+                # the key set comes from the TAGGED batch: a global index
+                # moves a row to its stored partition (or splits a partition
+                # move into a delete there plus an insert), so the incoming
+                # keys would miss the stored row that must die
+                return self._route_rewrite(
+                    view, instant_time, tagged,
+                    tagged.selectExpr(*map(sql_ident, MERGE_KEY)),
+                    update_fgs, insert_counts, is_delete, active)
             updates, inserts = self._split_tagged(tagged, is_delete)
             stats, schema = self._upsert_cow(
                 view, instant_time, updates, inserts, update_fgs,
-                insert_profile, n_new_rows=sum(r[2] for r in fg_prof),
-                frozen_fgs=frozen_fgs)
-            return stats, schema, any(v > 0 for v in insert_profile.values())
+                insert_counts, frozen_fgs, active)
+            return stats, schema, bool(insert_counts)
         finally:
             tagged.unpersist()
+
+    def _tag_profile(self, tagged: DataFrame, frozen_fgs: set,
+                     is_delete: bool):
+        """The workload profile of a tagged batch (WorkloadProfile.java:
+        33-50), one action over the persisted ``tagged``:
+        ``({updated file group: partition}, {partition: insert rows})``.
+        The updated groups are exact, so an update into a group a pending
+        clustering plan froze is rejected here.  A delete has no inserts:
+        deletes of absent keys are no-ops."""
+        rows = tagged.groupBy(META_PARTITION_PATH, FG_COL).count().collect()
+        update_fgs = {r[1]: r[0] for r in rows if r[1] is not None}
+        self._reject_frozen(frozen_fgs & set(update_fgs))
+        insert_counts = {} if is_delete else \
+            {r[0]: r[2] for r in rows if r[1] is None}
+        return update_fgs, insert_counts
 
     def _probe_fast_lane(self, view: FileSystemView, prepared: DataFrame,
                          token: Optional[frozenset]):
@@ -947,12 +955,12 @@ class HudiTable:
 
         - ``warm_tag``: with fewer batch KEYS than HALF the file groups (the
           point-fix/CDC/GDPR shape) and a pinned index valid at this
-          batch's token, a bounded limit(cap+1) size probe; the
-          tag-profile action over the PINNED index inside _upsert_cow_fast
-          then gives the EXACT rewrite set (measured 17 vs 210 groups, ~40%
-          faster wall at sf0.1; BASELINE.md).  No coverage precondition:
-          the lane's _load_index call extends the pinned index to every
-          view partition incrementally.
+          batch's token, a bounded limit(cap+1) size probe; _write_batch's
+          exact tag over the PINNED index then gives the EXACT rewrite set
+          (measured 17 vs 210 groups, ~40% faster wall at sf0.1;
+          BASELINE.md).  No coverage precondition: _write_batch's
+          _load_index call extends the pinned index to every view
+          partition incrementally.
         - ``profile`` otherwise, and on the first batch (no history): one
           workload-profile action over the batch; tagging fuses into the
           write job and the rewrite set is the manifest-stats superset,
@@ -1046,8 +1054,7 @@ class HudiTable:
 
     def _anti_join_rewrite(self, view: FileSystemView, instant_time: str,
                            fresh: DataFrame, batch_keys: DataFrame,
-                           rewrite_fgs: set, fg_map: dict,
-                           active: Optional[list] = None):
+                           rewrite_fgs: set, fg_map: dict, active: list):
         """Shared COW broadcast anti-join rewrite kernel: stored rows of the
         rewrite set pass through IN THEIR SCAN PARTITIONS minus the batch's
         keys (broadcast LEFT ANTI — the table side never shuffles); only the
@@ -1112,123 +1119,110 @@ class HudiTable:
         return stats, schema
 
     def _upsert_cow_fast(self, view: FileSystemView, instant_time: str,
-                         prepared: DataFrame, prof: Optional[list],
+                         prepared: DataFrame, prof: list,
                          is_delete: bool, frozen_fgs: set,
-                         token: Optional[frozenset] = None,
-                         active: Optional[list] = None):
-        """COW fast-update lane, the steady-state writer shape at 100 TB:
+                         token: Optional[frozenset], active: list):
+        """COW fused-profile lane, the steady-state writer shape at 100 TB:
         scan only the touched slice set, broadcast the batch key set for the
         anti-join, zero full-table shuffles, one file per touched group.
         Returns ``(stats, schema, wrote_inserts)``.
 
-        - ``prof`` given: the batch profile prunes the rewrite set to a
-          superset of the touched groups (_stats_rewrite_set); exact
-          routing happens through the index join, fused into the write job.
-        - ``prof is None`` (warm pinned index): one tag-profile action over
-          the PINNED index (no table scan; ``prepared`` is persisted by the
-          caller) yields the EXACT touched-group set and insert counts.
-
-        Inserts open new hash-bucketed file groups planned from the
-        per-partition counts (an upper bound in the prof shape —
-        over-planned buckets stay empty); no small-file packing here
-        (clustering restores layout), so the plan has no phantom rewrites.
-        """
-        tagged_pinned = prof is None
-        if prof is None:
-            index_df = self._load_index(view, sorted(view.partitions()),
-                                        None, token=token)
-            tagged = tag_locations(prepared, index_df, self.cfg.index_type,
-                                   broadcast_incoming=True,
-                                   index_unique=self._index_cache_on).persist()
-            tag_prof = tagged.groupBy(
-                META_PARTITION_PATH, FG_COL).count().collect()
-            fg_map = {r[1]: r[0] for r in tag_prof if r[1] is not None}
-            insert_counts = {r[0]: r[2] for r in tag_prof if r[1] is None}
-        else:
-            fg_map, bloom_fgs = self._stats_rewrite_set(view, prof, prepared)
-            insert_counts = {r[0]: r[1] for r in prof}
-            mns = [r[2] for r in prof if r[2] is not None]
-            mxs = [r[3] for r in prof if r[3] is not None]
-            key_range = (min(mns), max(mxs)) if mns else None
-            index_df = self._load_index(view, sorted(insert_counts),
-                                        key_range, only_fgs=bloom_fgs,
-                                        token=token)
-            # tagged stays UNPERSISTED in this shape: the routing below
-            # consumes it exactly once (a single coalesce projection), so
-            # the whole tag pipeline — broadcast the batch, semi-prune the
-            # index scan, broadcast the locations back — fuses into the one
-            # write job.  Only the paths with a second consumer (the
-            # frozen-group probe, the multi-bucket range-join assignment)
-            # persist it.
-            tagged = tag_locations(prepared, index_df, self.cfg.index_type,
-                                   broadcast_incoming=True,
-                                   index_unique=self._index_cache_on)
-        rewrite_fgs = set(fg_map)
+        The batch profile prunes the rewrite set to a superset of the
+        touched groups (_stats_rewrite_set); exact routing happens through
+        the index join, fused into the write job.  The per-partition batch
+        counts bound the inserts from above."""
+        fg_map, bloom_fgs = self._stats_rewrite_set(view, prof, prepared)
+        insert_counts = {r[0]: r[1] for r in prof}
+        mns = [r[2] for r in prof if r[2] is not None]
+        mxs = [r[3] for r in prof if r[3] is not None]
+        key_range = (min(mns), max(mxs)) if mns else None
+        index_df = self._load_index(view, sorted(insert_counts), key_range,
+                                    token, only_fgs=bloom_fgs)
+        # tagged stays UNPERSISTED in this shape: the routing consumes it
+        # exactly once (a single coalesce projection), so the whole tag
+        # pipeline — broadcast the batch, semi-prune the index scan,
+        # broadcast the locations back — fuses into the one write job.
+        # Only the paths with a second consumer (the frozen-group probe,
+        # the multi-bucket range-join assignment) persist it.
+        tagged = tag_locations(prepared, index_df, self.cfg.index_type,
+                               broadcast_incoming=True,
+                               index_unique=self._index_cache_on)
         try:
-            if frozen_fgs & rewrite_fgs:
-                if prof is None:
-                    # rewrite_fgs is EXACT — a batch key provably lives in
-                    # a frozen group
-                    self._reject_frozen(frozen_fgs & rewrite_fgs)
+            if frozen_fgs & set(fg_map):
                 # the stats-pruned rewrite superset may overlap a pending
                 # clustering plan spuriously — probe the exact tagged
                 # locations; once the probe proves no batch key lives in a
                 # frozen group, the frozen groups are dropped from the
                 # rewrite set (no-op pass-through rewrites would version
                 # them and waste IO)
-                tagged = tagged.persist()
-                tagged_pinned = True
+                tagged.persist()
                 self._check_frozen(tagged, FG_COL, frozen_fgs)
-                rewrite_fgs -= frozen_fgs
-                for fg in frozen_fgs:
-                    fg_map.pop(fg, None)
-            if is_delete or not insert_counts:
-                # every row already carries its tagged group — no bucket
-                # planning (a delete, or an update-only batch known exactly
-                # in the warm shape)
-                fresh = self._route(tagged, FG_COL)
-            else:
-                rec_size = avg_record_size(self.meta, self.timeline,
-                                           self.cfg.record_size_estimate,
-                                           active=active)
-                plan = plan_insert_buckets(
-                    insert_counts, view, self.cfg, rec_size,
-                    pack_small_files=False)
-                fg_map.update({b.file_group: b.partition for b in plan})
-                parts = [b.partition for b in plan]
-                if parts and len(parts) == len(set(parts)):
-                    # steady-state shape (one insert bucket per partition):
-                    # update-vs-insert routing is ONE projection — tagged fg
-                    # if the key exists, else the partition's planned bucket
-                    # (mirrors assign_insert_buckets' map-lookup fast case;
-                    # the null filter mirrors its inner-join drops)
-                    fresh = self._route(
-                        tagged, f"coalesce({FG_COL}, {bucket_map_sql(plan)}"
-                                f"[{sql_ident(META_PARTITION_PATH)}])")
-                else:
-                    if not tagged_pinned:
-                        tagged = tagged.persist()
-                        tagged_pinned = True
-                    updates, inserts = self._split_tagged(tagged, False)
-                    assigned = assign_insert_buckets(
-                        self.spark, inserts, plan,
-                        META_PARTITION_PATH, META_RECORD_KEY, FG)
-                    fresh = self._route(
-                        updates.unionByName(assigned, allowMissingColumns=True),
-                        FG)
-            # no dropDuplicates: the fast lane requires combine_before_upsert,
-            # so prepared is already unique per MERGE_KEY — skipping the
-            # dedup drops one exchange+aggregate pair from the broadcast
-            # build (the hash build collapses duplicates anyway)
-            stats, schema = self._anti_join_rewrite(
-                view, instant_time, fresh,
+                fg_map = {fg: p for fg, p in fg_map.items()
+                          if fg not in frozen_fgs}
+            # no dropDuplicates: this lane requires a preCombined batch, so
+            # prepared is already unique per MERGE_KEY — skipping the dedup
+            # drops one exchange+aggregate pair from the broadcast build
+            # (the hash build collapses duplicates anyway)
+            return self._route_rewrite(
+                view, instant_time, tagged,
                 prepared.selectExpr(*map(sql_ident, MERGE_KEY)),
-                rewrite_fgs, fg_map, active=active)
-            wrote_inserts = any(s.file_group not in rewrite_fgs for s in stats)
-            return stats, schema, wrote_inserts
+                fg_map, insert_counts, is_delete, active)
         finally:
-            if tagged_pinned:
+            if tagged.is_cached:
                 tagged.unpersist()
+
+    def _route_rewrite(self, view: FileSystemView, instant_time: str,
+                       tagged: DataFrame, batch_keys: DataFrame,
+                       fg_map: dict[str, str], insert_counts: dict[str, int],
+                       is_delete: bool, active: list):
+        """Route a tagged batch and write it through the anti-join rewrite
+        (the fused-profile and exact-tag shapes).  ``fg_map`` is the
+        rewrite set ({file group: partition}), ``insert_counts`` sizes the
+        insert buckets per partition (over-planned buckets stay empty) and
+        ``batch_keys`` holds the keys whose stored versions die.  Returns
+        ``(stats, schema, wrote_inserts)``.
+
+        Inserts open new hash-bucketed file groups; no small-file packing
+        here (clustering restores layout), so the plan has no phantom
+        rewrites.  A ``tagged`` this persists for a second read is left
+        cached for the caller to release."""
+        rewrite_fgs = set(fg_map)
+        if is_delete or not insert_counts:
+            # every row already carries its tagged group — no bucket
+            # planning (a delete, or an update-only batch known exactly)
+            fresh = self._route(tagged, FG_COL)
+        else:
+            rec_size = avg_record_size(self.meta, self.timeline,
+                                       self.cfg.record_size_estimate,
+                                       active=active)
+            plan = plan_insert_buckets(insert_counts, view, self.cfg,
+                                       rec_size, pack_small_files=False)
+            fg_map = {**fg_map, **{b.file_group: b.partition for b in plan}}
+            parts = [b.partition for b in plan]
+            if parts and len(parts) == len(set(parts)):
+                # steady-state shape (one insert bucket per partition):
+                # update-vs-insert routing is ONE projection — tagged fg
+                # if the key exists, else the partition's planned bucket
+                # (mirrors assign_insert_buckets' map-lookup fast case;
+                # the null filter mirrors its inner-join drops)
+                fresh = self._route(
+                    tagged, f"coalesce({FG_COL}, {bucket_map_sql(plan)}"
+                            f"[{sql_ident(META_PARTITION_PATH)}])")
+            else:
+                if not tagged.is_cached:
+                    tagged.persist()
+                updates, inserts = self._split_tagged(tagged, False)
+                assigned = assign_insert_buckets(
+                    self.spark, inserts, plan,
+                    META_PARTITION_PATH, META_RECORD_KEY, FG)
+                fresh = self._route(
+                    updates.unionByName(assigned, allowMissingColumns=True),
+                    FG)
+        stats, schema = self._anti_join_rewrite(
+            view, instant_time, fresh, batch_keys, rewrite_fgs, fg_map,
+            active=active)
+        return stats, schema, any(s.file_group not in rewrite_fgs
+                                  for s in stats)
 
     def _stats_rewrite_set(self, view: FileSystemView, prof: list,
                            prepared: DataFrame):
@@ -1267,61 +1261,29 @@ class HudiTable:
     def _upsert_cow(self, view: FileSystemView, instant_time: str,
                     updates: DataFrame, inserts: DataFrame,
                     update_fgs: dict[str, str], insert_profile: dict[str, int],
-                    frozen_fgs: set, n_new_rows: Optional[int] = None):
-        """COW merge: rewrite exactly the affected file groups.  Returns
-        ``(stats, schema)``.
-
-        Two physical strategies, same semantics:
-
-        - **broadcast anti-join** (the batch broadcasts — ``n_new_rows`` ≤
-          ``INDEX_BROADCAST_MAX_ROWS`` —, OVERWRITE_LATEST payload, batch
-          preCombined): stored rows whose key appears in the batch are
-          dropped by a broadcast LEFT ANTI join; everything else passes
-          through *in its scan partition* — the table-sized side is never
-          shuffled and never sorted.  Only the batch itself (already tiny)
-          is clustered by file group before the write.
-        - **window merge** (larger or unsized batches, or a payload that
-          compares old against new): old ∪ new → per-file-group
-          latest-wins window → write, one shuffle keyed by file group.
-        """
+                    frozen_fgs: set, active: list):
+        """COW window merge: rewrite exactly the affected file groups, old ∪
+        new → per-file-group latest-wins window → write, one shuffle keyed
+        by file group.  The shape for batches too large to broadcast,
+        payloads that compare old against new, and uncombined batches;
+        inserts pack small file groups.  Returns ``(stats, schema)``."""
         rec_size = avg_record_size(self.meta, self.timeline,
-                                   self.cfg.record_size_estimate)
+                                   self.cfg.record_size_estimate,
+                                   active=active)
         plan = plan_insert_buckets(insert_profile, view, self.cfg, rec_size,
                                    pack_small_files=True,
                                    exclude_fgs=frozen_fgs)
         assigned = assign_insert_buckets(self.spark, inserts, plan,
                                          META_PARTITION_PATH, META_RECORD_KEY, FG)
-        new_raw = updates.unionByName(assigned, allowMissingColumns=True)
+        new_rows = updates.unionByName(assigned, allowMissingColumns=True) \
+                          .withColumn(NEW_FLAG, F.lit(True))
 
         fg_map = {b.file_group: b.partition for b in plan}
         fg_map.update(update_fgs)
         rewrite_fgs = set(update_fgs) | {b.file_group for b in plan if not b.is_new_fg}
 
-        # new-commit-always-wins payload → the winner per touched key is known
-        # without comparing against stored rows (merge_order_columns puts the
-        # precombine guard first only for PAYLOAD_DEFAULT; the partial-update
-        # payload must read stored values to fill null fields)
-        if (rewrite_fgs and self._new_version_wins()
-                and self.cfg.combine_before_upsert             # 1 row/key
-                and n_new_rows is not None
-                and n_new_rows <= INDEX_BROADCAST_MAX_ROWS):
-            # every stored version of a batch key dies (incl. duplicate-key
-            # twins from insert/bulk_insert) — the preCombined batch row is
-            # the slice's single new version; the anti-join kernel also drops
-            # tombstoned-at-rest rows on rewrite (matching the window path's
-            # global drop_deleted)
-            # fast requires combine_before_upsert → new_raw (deduped updates ∪
-            # their insert complement) is already unique per MERGE_KEY; the
-            # broadcast hash build collapses any residue, so skip the
-            # dedup's exchange+aggregate pair
-            return self._anti_join_rewrite(
-                view, instant_time, self._route(new_raw, FG),
-                new_raw.selectExpr(*map(sql_ident, MERGE_KEY)),
-                rewrite_fgs, fg_map)
-
-        new_rows = new_raw.withColumn(NEW_FLAG, F.lit(True))
         if rewrite_fgs:
-            old = self._read_fg_files(view, rewrite_fgs) \
+            old = self._read_fg_files(view, rewrite_fgs, active=active) \
                       .withColumn(NEW_FLAG, F.lit(False))
             merged = old.unionByName(new_rows, allowMissingColumns=True)
         else:
@@ -1336,7 +1298,7 @@ class HudiTable:
         merged = merge_latest(merged, self.tc, bucket_col=FG)
         merged = drop_deleted(merged).drop(API_DELETE)
         merged = merged.withColumn(META_FILE_NAME, F.col(FG))
-        schema = self._commit_schema(merged)
+        schema = self._commit_schema(merged, active)
         stats = write_instant_files(merged, self.meta, instant_time, fg_map,
                                     self.cfg, sort_cols=[META_RECORD_KEY],
                                     pre_partitioned=True,
@@ -1344,12 +1306,14 @@ class HudiTable:
         return stats, schema
 
     def _mor_write_new_fgs(self, inserts: DataFrame,
-                           insert_profile: dict[str, int], instant_time: str):
+                           insert_profile: dict[str, int], instant_time: str,
+                           active: list):
         """MOR insert rows → brand-new base file groups (never packed into
         existing groups — logs may only attach to bases the engine owns the
         full key-set of).  Returns ``(stats, schema)``."""
         rec_size = avg_record_size(self.meta, self.timeline,
-                                   self.cfg.record_size_estimate)
+                                   self.cfg.record_size_estimate,
+                                   active=active)
         plan = plan_insert_buckets(insert_profile, None, self.cfg, rec_size,
                                    pack_small_files=False)
         assigned = assign_insert_buckets(self.spark, inserts, plan,
@@ -1357,7 +1321,7 @@ class HudiTable:
                                          META_RECORD_KEY, FG)
         assigned = assigned.drop(API_DELETE) \
                            .withColumn(META_FILE_NAME, F.col(FG))
-        schema = self._commit_schema(assigned)
+        schema = self._commit_schema(assigned, active)
         fg_map = {b.file_group: b.partition for b in plan}
         stats = write_instant_files(assigned, self.meta, instant_time,
                                     fg_map, self.cfg,
@@ -1367,7 +1331,7 @@ class HudiTable:
     def _upsert_mor_fast(self, view: FileSystemView, slices: list,
                          instant_time: str, tagged: DataFrame,
                          pending_compaction: dict[str, str],
-                         is_delete: bool, frozen_fgs: set):
+                         is_delete: bool, frozen_fgs: set, active: list):
         """MOR upsert: updates/deletes append delta rows to their file
         group's latest slice (HoodieAppendHandle.java:71,336-390 — parquet
         can't append, so the batch writes a few shared delta files that
@@ -1412,19 +1376,16 @@ class HudiTable:
             insert_profile = None           # unknown until counted
             write_deltas = True
             if ext_fgs:
-                fg_prof = tagged.groupBy(META_PARTITION_PATH,
-                                         FG_COL).count().collect()
-                update_fgs = {r[1] for r in fg_prof if r[1] is not None}
-                self._reject_frozen(frozen_fgs & update_fgs)
-                insert_profile = {} if is_delete else \
-                    {r[0]: r[2] for r in fg_prof if r[1] is None}
-                ext_updates = {r[1]: r[0] for r in fg_prof if r[1] in ext_fgs}
+                update_fgs, insert_profile = self._tag_profile(
+                    tagged, frozen_fgs, is_delete)
+                ext_updates = {fg: p for fg, p in update_fgs.items()
+                               if fg in ext_fgs}
                 if ext_updates:
                     stats, schema = self._upsert_cow(
                         view, instant_time,
                         updates.filter(F.col(FG).isin(*ext_updates)),
-                        inserts.limit(0), ext_updates, {},
-                        frozen_fgs=frozen_fgs)
+                        inserts.limit(0), ext_updates, {}, frozen_fgs,
+                        active)
                     updates = updates.filter(~F.col(FG).isin(*ext_updates))
                 write_deltas = len(update_fgs) > len(ext_updates)
             else:
@@ -1439,7 +1400,7 @@ class HudiTable:
                 for fg, ctime in pending_compaction.items():
                     base_of[fg] = max(base_of.get(fg) or "", ctime)
                 upd = updates.withColumn(META_FILE_NAME, F.col(FG))
-                schema = self._commit_schema(upd)
+                schema = self._commit_schema(upd, active)
                 from .writer import write_grouped_log_files
                 delta = write_grouped_log_files(
                     upd, self.meta, instant_time,
@@ -1467,10 +1428,10 @@ class HudiTable:
                                       .count().collect()}
                 if insert_profile:
                     s, schema = self._mor_write_new_fgs(
-                        inserts, insert_profile, instant_time)
+                        inserts, insert_profile, instant_time, active)
                     stats += s
             if schema is None:
-                schema = self.stored_schema()
+                schema = self.stored_schema(active)
             return stats, schema, bool(insert_profile)
         finally:
             tagged.unpersist()

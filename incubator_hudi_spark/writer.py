@@ -213,13 +213,6 @@ def merge_order_columns(tc: TableConfig, df: DataFrame) -> list[Column]:
     return cols
 
 
-def latest_wins(df: DataFrame, tc: TableConfig) -> DataFrame:
-    """Keep the winning version per HoodieKey (global collapse)."""
-    w = Window.partitionBy(*MERGE_KEY).orderBy(*merge_order_columns(tc, df))
-    return (df.withColumn("_hoodie_rn", F.row_number().over(w))
-              .filter(F.col("_hoodie_rn") == 1).drop("_hoodie_rn"))
-
-
 NEW_FLAG = "_hoodie_is_new_version"
 
 

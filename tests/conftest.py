@@ -64,3 +64,23 @@ def spark_jobs(spark):
             sc.setLocalProperty("spark.job.description", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
     return count
+
+
+@pytest.fixture()
+def timeline_listings(monkeypatch):
+    """``timeline_listings(fn)`` calls ``fn`` and returns how many
+    active-timeline listings (``Timeline.instants`` calls) it made."""
+    from incubator_hudi_spark.timeline import Timeline
+    listed = [0]
+    instants = Timeline.instants
+
+    def counting(self):
+        listed[0] += 1
+        return instants(self)
+    monkeypatch.setattr(Timeline, "instants", counting)
+
+    def count(fn):
+        before = listed[0]
+        fn()
+        return listed[0] - before
+    return count

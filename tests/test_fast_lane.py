@@ -1,17 +1,21 @@
-"""COW fast-update lane invariants (table._upsert_cow_fast).
+"""COW upsert shapes (table._write_batch): the fused profile lane
+(_upsert_cow_fast), the exact tag over the key index, and the window merge.
 
-The lane replaces the per-batch index-join profile with driver-side
-key-range pruning of manifest stats; these tests pin the properties that
-make that safe:
+The fused profile lane replaces the per-batch index-join profile with
+driver-side key-range pruning of manifest stats; the exact tag (warm pinned
+index, global indexes, bootstrap groups) names the exact rewrite set from
+one tag-profile action; both write through the broadcast anti-join
+rewrite.  These tests pin the properties that make that safe:
   - the rewrite set is a SUPERSET of the file groups holding batch keys
     (never loses a stored row);
   - file groups proven disjoint from the batch's key range are NOT
     rewritten (the pruning actually prunes);
   - mixed update+insert batches route updates to their existing groups and
-    open new hash-bucketed groups for inserts;
+    open new hash-bucketed groups for inserts, under a non-global and a
+    global index alike;
   - a delete that empties a file group still writes an explicit empty base
     (the group must not resurrect its previous version);
-  - the lane's results are identical to the general window-merge lane.
+  - the lanes' results are identical to the window merge's.
 """
 
 import os
@@ -89,8 +93,16 @@ def test_range_pruning_skips_disjoint_groups(spark, tmp_table_path, lineitem):
     assert t.read().filter("l_quantity = 9999.0").count() == 1
 
 
-def test_mixed_update_insert_batch(spark, tmp_table_path, lineitem):
+@pytest.mark.parametrize("index_type", [None, INDEX_GLOBAL_SIMPLE],
+                         ids=["default", "GLOBAL_SIMPLE"])
+def test_mixed_update_insert_batch(spark, tmp_table_path, lineitem,
+                                   index_type):
+    """The fused profile lane (default index) and the exact tag (global
+    index) route a mixed batch alike: updates land in their groups, every
+    insert opens a new group, no row is lost."""
     t = make_table(spark, tmp_table_path)
+    if index_type is not None:
+        t.cfg = t.cfg.with_(index_type=index_type)
     base = lineitem.filter("l_orderkey % 2 = 0")
     t.upsert(base)
     fgs_before = {sl.file_group for sl in t.view().latest_slices()}
@@ -99,26 +111,31 @@ def test_mixed_update_insert_batch(spark, tmp_table_path, lineitem):
     inserts = lineitem.filter("l_orderkey % 2 = 1")
     c = t.upsert(updates.unionByName(inserts))
     snap = t.read()
-    # inserts present, updates applied, no row lost
+    # inserts present, updates applied, no row lost; a record is the
+    # (key, month) pair, or the key alone under a global index
     from pyspark.sql.window import Window
-    w = Window.partitionBy("l_orderkey", "l_linenumber",
-                           F.date_format("l_shipdate", "yyyy-MM")) \
-              .orderBy(F.desc("l_shipdate"))
+    ident = [F.col("l_orderkey"), F.col("l_linenumber")]
+    if index_type is None:
+        ident.append(F.date_format("l_shipdate", "yyyy-MM"))
+    w = Window.partitionBy(*ident).orderBy(F.desc("l_shipdate"))
     exp = (base.unionByName(updates).unionByName(inserts)
            .withColumn("rn", F.row_number().over(w)).filter("rn=1"))
-    # update rows win inside their (key, month); count parity is enough here
+    # update rows win inside their record; count parity is enough here
     assert snap.count() == exp.count()
-    assert snap.filter("l_quantity > 1000").count() >= 200
-    # inserts opened NEW file groups (fast lane never packs existing ones)
+    assert (snap.filter("l_quantity > 1000").count()
+            == updates.select(*ident).distinct().count())
+    # inserts opened NEW file groups (the anti-join rewrite never packs
+    # existing ones)
     new_fgs = _rewritten_fgs(t, c) - fgs_before
     assert new_fgs, "insert rows must open new file groups"
-    ins_cnt = snap.join(inserts.select("l_orderkey").distinct(),
-                        "l_orderkey", "left_semi").count()
+    ins = snap.join(inserts.select("l_orderkey").distinct(),
+                    "l_orderkey", "left_semi")
+    assert ins.filter(F.col("_hoodie_file_name").isin(*fgs_before)).count() == 0
     # the batch carries duplicate (key, month) twins — compare post-dedup
     exp_ins = (inserts
                .withColumn("rn", F.row_number().over(w)).filter("rn=1")
                .count())
-    assert ins_cnt == exp_ins
+    assert ins.count() == exp_ins
 
 
 def test_delete_emptying_group_writes_empty_base(spark, tmp_table_path, lineitem):
@@ -343,25 +360,35 @@ def test_jobs_per_commit_cow_warm_tag_lane(spark, tmp_table_path, lineitem,
 
 
 def test_jobs_per_commit_cow_window_merge(spark, tmp_table_path, lineitem,
-                                          spark_jobs, monkeypatch):
+                                          spark_jobs, timeline_listings,
+                                          monkeypatch):
+    """Also pins the active-timeline listings per commit: the batch lists
+    once and every step of its lane reuses that snapshot."""
     from incubator_hudi_spark.config import INDEX_SIMPLE
     monkeypatch.setattr(table_mod, "INDEX_BROADCAST_MAX_ROWS", 100)
     t = _cow_table(spark, tmp_table_path, lineitem, index_type=INDEX_SIMPLE)
-    counts = [spark_jobs(lambda q=q: t.upsert(
-        _updates(lineitem, "l_orderkey % 5 = 1", q))) for q in (1.0, 2.0, 3.0)]
+    listings = []
+
+    def commit(q):
+        listings.append(timeline_listings(lambda: t.upsert(
+            _updates(lineitem, "l_orderkey % 5 = 1", q))))
+    counts = [spark_jobs(lambda q=q: commit(q)) for q in (1.0, 2.0, 3.0)]
     assert counts == [14, 12, 12]
+    # the batch's one listing and the post-commit services' one
+    assert listings == [2, 2, 2], listings
 
 
 @pytest.mark.parametrize("index_type",
                          [INDEX_GLOBAL_SIMPLE, INDEX_GLOBAL_BLOOM])
 def test_jobs_per_commit_cow_global_index(spark, tmp_table_path, lineitem,
                                           spark_jobs, index_type):
-    """Global indexes skip the fast lane: the general lane tags against the
-    whole-table key index and rewrites through the broadcast anti-join."""
+    """Global indexes skip the fused profile lane: the exact tag runs
+    against the whole-table key index and rewrites through the broadcast
+    anti-join."""
     t = _cow_table(spark, tmp_table_path, lineitem, index_type=index_type)
     counts = [spark_jobs(lambda q=q: t.upsert(
         _updates(lineitem, "l_orderkey % 5 = 1", q))) for q in (1.0, 2.0, 3.0)]
-    assert counts == [15, 15, 15]
+    assert counts == [13, 13, 13]
 
 
 def test_plan_build_round_trips_cow_fast_lane(spark, tmp_table_path, lineitem,

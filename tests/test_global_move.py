@@ -7,11 +7,20 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+import incubator_hudi_spark.table as table_mod
 from incubator_hudi_spark import MERGE_ON_READ, HudiTable, WriteConfig
 
 
-@pytest.mark.parametrize("table_type", ["COPY_ON_WRITE", MERGE_ON_READ])
-def test_update_partition_path_moves_record(spark, tmp_path, table_type):
+# COW runs both of its tag-first shapes: under the default broadcast cap
+# the exact-tag anti-join rewrite, with the cap at 0 the window merge
+@pytest.mark.parametrize("table_type,cap", [
+    pytest.param("COPY_ON_WRITE", None, id="COPY_ON_WRITE"),
+    pytest.param("COPY_ON_WRITE", 0, id="COPY_ON_WRITE-window_merge"),
+    pytest.param(MERGE_ON_READ, None, id="MERGE_ON_READ")])
+def test_update_partition_path_moves_record(spark, tmp_path, monkeypatch,
+                                            table_type, cap):
+    if cap is not None:
+        monkeypatch.setattr(table_mod, "INDEX_BROADCAST_MAX_ROWS", cap)
     df = spark.createDataFrame(
         [(1, "2020-01-05", 10.0), (2, "2020-03-01", 20.0),
          (3, "2021-06-01", 30.0)],

@@ -139,14 +139,21 @@ def test_cleaning_refcounts_shared_delta_files(spark, tmp_table_path,
 # ---- Spark jobs per commit, one case per MOR lane ----------------------
 
 def test_jobs_per_commit_mor_update_only(spark, tmp_table_path, lineitem,
-                                         spark_jobs):
+                                         spark_jobs, timeline_listings):
+    """Also pins the active-timeline listings per commit: the batch lists
+    once and every step of its lane reuses that snapshot."""
     t = _mor(spark, tmp_table_path, lineitem)
     t.upsert(lineitem)
-    counts = [spark_jobs(lambda q=q: t.upsert(
-        lineitem.filter("l_orderkey % 5 = 1").withColumn("l_quantity",
-                                                         F.lit(q))))
-              for q in (1.0, 2.0, 3.0)]
+    listings = []
+
+    def commit(q):
+        listings.append(timeline_listings(lambda: t.upsert(
+            lineitem.filter("l_orderkey % 5 = 1").withColumn("l_quantity",
+                                                             F.lit(q)))))
+    counts = [spark_jobs(lambda q=q: commit(q)) for q in (1.0, 2.0, 3.0)]
     assert counts == [9, 9, 9]
+    # the batch's one listing and the post-commit services' one
+    assert listings == [2, 2, 2], listings
 
 
 def test_jobs_per_commit_mor_bootstrap_group(spark, tmp_path, lineitem,

@@ -258,7 +258,8 @@ def main():
         walk(df._jdf.queryExecution().executedPlan(), False, False)
         return bool(paths) and all(paths)
 
-    pinned = t._load_index(view, sorted(view.partitions()), None)
+    pinned = t._load_index(view, sorted(view.partitions()), None,
+                          t._data_instants_token())
     tagged_pinned = tag_locations(prepared, pinned, t.cfg.index_type,
                                   broadcast_incoming=True, index_unique=True)
     p = explain(tagged_pinned)
