@@ -3505,24 +3505,30 @@ _PRIORITY = [
     # REWRITTEN: the exact-tag COW shape (tag → profile → anti-join)
     "bootstrap_metadata_only", "global_bloom_upsert",
     "global_index_partition_stickiness", "inmemory_index_lifecycle",
+    # REWRITTEN: every commit (overwrite, ALTER, services) runs through
+    # the one commit skeleton, HudiTable._commit
+    "insert_overwrite_and_drop_partition", "insert_duplicate_semantics",
+    "schema_evolution", "schema_widening",
+    "mor_compaction", "clustering_cleaning_archival", "rollback",
+    "savepoint_restore",
+    "async_compaction_ingest", "async_clustering_ingest",
+    "bootstrap_full_record",
     # unsampled in r6 and r7
     "pii_scrub",
     # last sampled in r6
     "incremental_glob", "incremental_glob_braces", "mor_snapshot",
     "pyds_native_mor_snapshot", "mor_read_optimized", "mor_incremental",
-    "mor_compaction", "insert_overwrite_and_drop_partition", "merge_into",
+    "merge_into",
     "sql_dml", "update_delete_where", "streaming_sink_events",
-    "streaming_incremental_batch", "rollback", "savepoint_restore",
-    "clustering_cleaning_archival", "async_clustering_ingest",
-    "async_compaction_ingest", "schema_evolution", "bootstrap_full_record",
+    "streaming_incremental_batch",
     "pyds_native_bootstrap", "partition_sort_layout", "bulk_insert_none_mode",
     "occ_conflict_detection", "multi_table_ingest",
     "metadata_table_listing", "show_partitions_commits",
     "ann_brute_force_topk", "ann_lsh_topk", "minhash_lsh_pairs",
     "simhash_pairs", "payload_default_event_time_guard",
     "bloom_index_upsert",
-    "insert_duplicate_semantics", "mor_delete", "keygen_nonpartitioned",
-    "schema_widening", "stratified_sample", "vocab_top100",
+    "mor_delete", "keygen_nonpartitioned",
+    "stratified_sample", "vocab_top100",
     "windowed_agg_10min", "mor_skip_merge", "gopher_repetition_rules",
     "tfidf_top_terms", "repetition_bigram", "aws_dms_cdc",
 ]

@@ -99,19 +99,16 @@ def run_clean(table) -> dict:
     if not to_delete:
         return {"deleted": 0}
 
-    instant = table._start(tl.CLEAN)
-    deleted = []
-    for rel in to_delete:
-        p = table.meta.abs_path(rel)
-        if os.path.exists(p):
-            os.remove(p)
-        deleted.append(rel)
     retained_setting = (str(table.cfg.clean_retain_commits)
                         if table.cfg.clean_policy == CLEAN_KEEP_LATEST_COMMITS
                         else str(table.cfg.clean_retain_file_versions))
-    table.timeline.transition_to_completed(
-        instant, {"instant": instant.time, "deleted_paths": deleted,
-                  "earliest_retained": earliest_retained,
-                  "policy": table.cfg.clean_policy,
-                  "retained": retained_setting})
-    return {"deleted": len(deleted), "instant": instant.time}
+    with table._commit(tl.CLEAN, post_commit=False) as op:
+        for rel in to_delete:
+            p = table.meta.abs_path(rel)
+            if os.path.exists(p):
+                os.remove(p)
+        op.metadata = {"instant": op.instant.time, "deleted_paths": to_delete,
+                       "earliest_retained": earliest_retained,
+                       "policy": table.cfg.clean_policy,
+                       "retained": retained_setting}
+    return {"deleted": len(to_delete), "instant": op.instant.time}

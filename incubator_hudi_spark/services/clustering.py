@@ -208,7 +208,17 @@ def run_clustering(table, sort_columns: Optional[Sequence[str]] = None,
            for i in table.timeline.completed([tl.REPLACE_COMMIT])):
         return instant_time
     req = tl.Instant(instant_time, tl.REPLACE_COMMIT, tl.REQUESTED)
-    instant = table.timeline.transition_to_inflight(req, plan_md)
+    with table._commit(tl.REPLACE_COMMIT, CLUSTER, requested=req,
+                       plan=plan_md, post_commit=False) as op:
+        _execute_plan(table, op, plan_md, sort_columns, layout)
+    return instant_time
+
+
+def _execute_plan(table, op, plan_md: dict,
+                  sort_columns: Optional[Sequence[str]], layout: str) -> None:
+    """Rewrite a clustering plan's file groups under the inflight ``op``
+    (HudiTable._commit), filling in its stats, schema and replaced groups."""
+    instant_time = op.instant.time
     # a crashed attempt may have left partial files in this instant's data
     # dir — uncommitted, so unreachable by any reader, but write_instant_files
     # appends and collect_write_stats lists the WHOLE dir: committing now
@@ -224,19 +234,18 @@ def run_clustering(table, sort_columns: Optional[Sequence[str]] = None,
     # to these groups were rejected while the plan was pending, so the only
     # legal change since scheduling is none (COW) or nothing (MOR logs are
     # updates too) — a vanished group (rollback) just drops out of the plan
-    plan_fgs = {op["file_group"] for op in plan_md["operations"]}
-    view = table.view()
-    slices = [sl for sl in view.latest_slices() if sl.file_group in plan_fgs]
+    plan_fgs = {o["file_group"] for o in plan_md["operations"]}
+    slices = [sl for sl in op.view.latest_slices()
+              if sl.file_group in plan_fgs]
     groups: dict[str, list] = {}
     for sl in slices:
         groups.setdefault(sl.partition, []).append(sl)
+    op.schema = table._read_schema(active=op.active)
+    op.replaced = [(sl.partition, sl.file_group) for sl in slices]
     if not groups:
-        # nothing left to rewrite — complete as an empty replacecommit
-        table._complete(instant, CLUSTER, [], table._read_schema(),
-                        replaced=[])
-        return instant.time
-    replaced = [(sl.partition, sl.file_group) for sl in slices]
-    df = table._read_slices(slices, read_optimized=False, raw=True, view=view)
+        return      # nothing left to rewrite: an empty replacecommit
+    df = table._read_slices(slices, read_optimized=False, raw=True,
+                            view=op.view, active=op.active)
     df = drop_deleted(df).drop(API_DELETE)
 
     # SparkSortAndSizeExecutionStrategy.java:68-87: rewrite each partition
@@ -279,9 +288,7 @@ def run_clustering(table, sort_columns: Optional[Sequence[str]] = None,
                         / 100).cast("int")])
             .drop("_nt"))
     df = df.withColumn(META_FILE_NAME, F.col(FG))
-    schema = table._read_schema()
-    stats = write_instant_files(
-        df.select(*[c for c in df.columns if c in schema.names or c == FG]),
-        table.meta, instant.time, fg_map, table.cfg, sort_cols=sort_cols)
-    table._complete(instant, CLUSTER, stats, schema, replaced=replaced)
-    return instant.time
+    op.stats = write_instant_files(
+        df.select(*[c for c in df.columns
+                    if c in op.schema.names or c == FG]),
+        table.meta, instant_time, fg_map, table.cfg, sort_cols=sort_cols)

@@ -157,30 +157,30 @@ def run_compaction(table, instant_time: Optional[str] = None) -> Optional[str]:
             instant_time = pend[0].time
     req = tl.Instant(instant_time, tl.COMPACTION, tl.REQUESTED)
     plan = table.timeline.read_metadata(req)
-    inflight = table.timeline.transition_to_inflight(req, plan)
-
-    fgs = {op["file_group"]: op["partition"] for op in plan["operations"]}
-    view = table.view()
-    slices = [sl for sl in view.latest_slices() if sl.file_group in fgs]
-    # _read_slices(raw=True) already merged base∪logs with the latest-wins
-    # window and kept the delete markers; resolve them here.
-    # cluster_by_fg keeps the output clustered by file group so the write
-    # needs no repartition of its own (pre_partitioned): untouched base rows
-    # flow scan→filter→write with zero exchange (the reference compactor is
-    # likewise one streaming merge task per file group), and only the
-    # log-touched rows ride the small merge shuffle.
-    merged = table._read_slices(slices, read_optimized=False, raw=True,
-                                cluster_by_fg=True, view=view)
-    merged = drop_deleted(merged).drop(API_DELETE)
-    merged = merged.withColumn(META_FILE_NAME, F.col(FG))
-    schema = table._read_schema()
-    stats = write_instant_files(
-        merged.select(*[c for c in merged.columns if c in schema.names or c == FG]),
-        table.meta, instant_time, fgs, table.cfg,
-        sort_cols=[FG, "_hoodie_record_key"], pre_partitioned=True,
-        ensure_fgs=set(fgs))
-    table._complete(inflight, COMPACT, stats, schema,
-                    completed_action=tl.COMMIT)
+    fgs = {o["file_group"]: o["partition"] for o in plan["operations"]}
+    with table._commit(tl.COMPACTION, COMPACT, requested=req, plan=plan,
+                       completed_action=tl.COMMIT, post_commit=False) as op:
+        slices = [sl for sl in op.view.latest_slices()
+                  if sl.file_group in fgs]
+        # _read_slices(raw=True) already merged base∪logs with the
+        # latest-wins window and kept the delete markers; resolve them here.
+        # cluster_by_fg keeps the output clustered by file group so the
+        # write needs no repartition of its own (pre_partitioned): untouched
+        # base rows flow scan→filter→write with zero exchange (the reference
+        # compactor is likewise one streaming merge task per file group),
+        # and only the log-touched rows ride the small merge shuffle.
+        merged = table._read_slices(slices, read_optimized=False, raw=True,
+                                    cluster_by_fg=True, view=op.view,
+                                    active=op.active)
+        merged = drop_deleted(merged).drop(API_DELETE)
+        merged = merged.withColumn(META_FILE_NAME, F.col(FG))
+        op.schema = table._read_schema(active=op.active)
+        op.stats = write_instant_files(
+            merged.select(*[c for c in merged.columns
+                            if c in op.schema.names or c == FG]),
+            table.meta, instant_time, fgs, table.cfg,
+            sort_cols=[FG, "_hoodie_record_key"], pre_partitioned=True,
+            ensure_fgs=set(fgs))
     return instant_time
 
 

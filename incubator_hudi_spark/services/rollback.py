@@ -51,21 +51,20 @@ def rollback_instant(table, instant_time: str) -> str:
                     f"instant {instant_time} is pinned by savepoint {sp.time} "
                     f"(at {at}); delete the savepoint before rolling back")
 
-    rb = table._start(tl.ROLLBACK)
-    # any metadata-table checkpoint covering the target is now wrong
     from ..metadata_table import invalidate_from
-    invalidate_from(table.meta, instant_time)
-    deleted = _delete_instant_dir(table, instant_time)
-    if target is not None:
-        timeline.delete_instant(target)
-    for st in (tl.REQUESTED, tl.INFLIGHT):
-        timeline.delete_instant(tl.Instant(instant_time, tl.COMMIT, st))
-        timeline.delete_instant(tl.Instant(instant_time, tl.DELTA_COMMIT, st))
-        timeline.delete_instant(tl.Instant(instant_time, tl.REPLACE_COMMIT, st))
-    table.timeline.transition_to_completed(
-        rb, {"instant": rb.time, "rolled_back_instant": instant_time,
-             "deleted_paths": deleted})
-    return rb.time
+    with table._commit(tl.ROLLBACK, post_commit=False) as op:
+        # any metadata-table checkpoint covering the target is now wrong
+        invalidate_from(table.meta, instant_time)
+        deleted = _delete_instant_dir(table, instant_time)
+        if target is not None:
+            timeline.delete_instant(target)
+        for st in (tl.REQUESTED, tl.INFLIGHT):
+            for action in tl.DATA_ACTIONS:
+                timeline.delete_instant(tl.Instant(instant_time, action, st))
+        op.metadata = {"instant": op.instant.time,
+                       "rolled_back_instant": instant_time,
+                       "deleted_paths": deleted}
+    return op.instant.time
 
 
 def rollback_pending(table) -> list[str]:

@@ -16,10 +16,9 @@ def create_savepoint(table, at_instant: str | None = None) -> str:
     if last is None:
         raise ValueError("nothing to savepoint")
     at = at_instant or last.time
-    sp = table._start(tl.SAVEPOINT)
-    table.timeline.transition_to_completed(
-        sp, {"instant": sp.time, "savepoint_at": at})
-    return sp.time
+    with table._commit(tl.SAVEPOINT, post_commit=False) as op:
+        op.metadata = {"instant": op.instant.time, "savepoint_at": at}
+    return op.instant.time
 
 
 def delete_savepoint(table, savepoint_time: str) -> None:
@@ -51,8 +50,7 @@ def restore_to_savepoint(table, savepoint_time: str) -> str:
     targets = [i for i in table.timeline.completed_data_instants() if i.time > at]
     for ins in reversed(targets):
         rollback_instant(table, ins.time)
-    rs = table._start(tl.RESTORE)
-    table.timeline.transition_to_completed(
-        rs, {"instant": rs.time, "restored_to": at,
-             "rolled_back": [i.time for i in targets]})
-    return rs.time
+    with table._commit(tl.RESTORE, post_commit=False) as op:
+        op.metadata = {"instant": op.instant.time, "restored_to": at,
+                       "rolled_back": [i.time for i in targets]}
+    return op.instant.time

@@ -344,6 +344,4 @@ def enable_auto_sync(table, name: Optional[str] = None, **sync_kwargs) -> None:
     HiveSyncTool when hoodie.datasource.hive_sync.enable=true)."""
     def _cb(instant_time, md):
         sync_ddl(table, name, **sync_kwargs)
-    if not hasattr(table, "_commit_callbacks"):
-        table._commit_callbacks = []
     table._commit_callbacks.append(_cb)

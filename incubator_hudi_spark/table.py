@@ -20,6 +20,8 @@ from __future__ import annotations
 
 import json
 import os
+from contextlib import contextmanager, nullcontext
+from functools import cached_property
 from typing import Iterable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,6 +70,37 @@ BLOOM_PRUNE_MAX_BATCH_KEYS = 5_000
 INDEX_BROADCAST_MAX_ROWS = 1_000_000
 
 
+class _CommitOp:
+    """One commit in flight (HudiTable._commit).  ``active`` is the
+    operation's one active-timeline snapshot, listed on first use;
+    ``view`` and the key-index validity ``token`` derive from it, so token
+    and view describe the same state by construction.  The body hands the
+    skeleton what it completes with: ``stats``, ``schema``, ``replaced``,
+    ``keep_index`` (the commit left every cached key location correct;
+    None: the key index is not this commit's business) and, for the
+    non-data actions, their own completed ``metadata``."""
+
+    def __init__(self, table: "HudiTable", instant: tl.Instant):
+        self.table, self.instant = table, instant
+        self.stats: list[WriteStat] = []
+        self.schema: Optional[StructType] = None
+        self.replaced: Optional[list] = None
+        self.keep_index: Optional[bool] = None
+        self.metadata: Optional[dict] = None
+
+    @cached_property
+    def active(self) -> list:
+        return self.table.timeline.instants()
+
+    @cached_property
+    def view(self) -> FileSystemView:
+        return self.table.view(active_instants=self.active)
+
+    @cached_property
+    def token(self) -> frozenset:
+        return self.table._data_instants_token(self.active)
+
+
 class HudiTable:
     def __init__(self, spark: SparkSession, base_path: str,
                  write_config: Optional[WriteConfig] = None):
@@ -93,6 +126,16 @@ class HudiTable:
         self._key_index: Optional[DataFrame] = None
         self._key_index_parts: set = set()
         self._key_index_valid_token = None
+        # rollback-on-start bookkeeping (_start): the data instant started
+        # here and not completed yet; recovery running / done on this instance
+        self._last_started: Optional[str] = None
+        self._recovering = False
+        self._recovered_on_start = False
+        # cb(instant_time, metadata) after each completed data commit
+        # (HoodieWriteCommitCallback; catalog auto-sync registers one)
+        self._commit_callbacks: list = []
+        self._last_batch_keys: Optional[int] = None    # _probe_fast_lane
+        self._mor_log_persist: Optional[DataFrame] = None    # _merge_logs
         # NOTE: commit bookkeeping (streaming batch-id stamps, ingest
         # checkpoints) is threaded through the write ops as an explicit
         # ``commit_extras`` argument into _complete() — never a mutable
@@ -279,11 +322,10 @@ class HudiTable:
     # in the last commit's metadata; evolution = compatible adds)
     # ------------------------------------------------------------------
     def stored_schema(self, active: Optional[list] = None) -> Optional[StructType]:
-        if active is not None:
-            comp = tl.completed_from(active, tl.DATA_ACTIONS)
-            last = comp[-1] if comp else None
-        else:
-            last = self.timeline.last_completed(tl.DATA_ACTIONS)
+        if active is None:
+            active = self.timeline.instants()
+        comp = tl.completed_from(active, tl.DATA_ACTIONS)
+        last = comp[-1] if comp else None
         if last is None:
             # degenerate corner: every data instant archived (deep restore
             # after heavy archival) — the schema still rides in the newest
@@ -355,8 +397,58 @@ class HudiTable:
         return StructType(fields)
 
     # ------------------------------------------------------------------
-    # commit protocol helpers
+    # the commit skeleton (BaseCommitActionExecutor → the write client's
+    # commit/postWrite, SparkRDDWriteClient.java:263-281)
     # ------------------------------------------------------------------
+    @contextmanager
+    def _commit(self, action: str, operation: Optional[str] = None, *,
+                requested: Optional[tl.Instant] = None,
+                plan: Optional[dict] = None,
+                extra: Optional[dict] = None,
+                completed_action: Optional[str] = None,
+                post_commit: bool = True):
+        """Claim the instant (``_start``), or move a service's ``requested``
+        plan to inflight; yield the ``_CommitOp`` the body fills in; then
+        ``_complete`` (non-data actions, ``operation`` None, write
+        ``op.metadata`` as-is), restamp the key index when the body set
+        ``op.keep_index``, and run ``_post_commit`` unless ``post_commit``
+        is off (ALTERs, and the services, which run inside ``_post_commit``
+        or on daemon threads).  A ``ClusteringUpdateConflict`` is raised
+        before anything is written, so the claimed instant is dropped;
+        every other failure leaves it for rollback-on-start."""
+        if requested is None:
+            instant = self._start(action)
+        else:
+            instant = self.timeline.transition_to_inflight(requested, plan)
+        op = _CommitOp(self, instant)
+        try:
+            yield op
+        except _ClusteringConflict:
+            if requested is None:
+                for st in (tl.REQUESTED, tl.INFLIGHT):
+                    self.timeline.delete_instant(
+                        tl.Instant(instant.time, action, st))
+                if self._last_started == instant.time:
+                    self._last_started = None
+            raise
+        if operation is None:
+            self.timeline.transition_to_completed(instant, op.metadata)
+        else:
+            self._complete(instant, operation, op.stats, op.schema,
+                           replaced=op.replaced, extra=extra,
+                           completed_action=completed_action)
+        if op.keep_index is not None and self._index_cache_on:
+            # the cache is stamped with the PRE-write token plus our own
+            # instant, never a fresh listing: a daemon commit that completed
+            # DURING the write stays missing from the token, so the next
+            # batch invalidates instead of trusting a cache that never saw it
+            if op.keep_index:
+                self._key_index_valid_token = op.token | {instant.time}
+            else:
+                self._invalidate_key_index()
+        if post_commit:
+            self._post_commit()
+
     def _start(self, action: str) -> tl.Instant:
         # eager rollback of failed writes at write start (the reference's
         # rollback-on-start) — single-writer mode only: with OCC another
@@ -367,29 +459,28 @@ class HudiTable:
             # any instant exists (UpgradeDowngrade at write-client init)
             from .services.upgrade import check_write_version
             check_write_version(self)
-        # once per table instance, like the reference (rollback-on-start
-        # happens at WRITE-CLIENT init, not per commit — a live writer's own
-        # COMPLETED batches can't be crash debris, and under single-writer
-        # mode nobody else writes); saves a timeline listing + metadata
-        # reads on every steady-state batch.  A data write that STARTED but
-        # never completed on this instance (exception after _start) IS
-        # debris, so _last_started re-arms recovery for the next write.
-        if action in tl.DATA_ACTIONS \
-                and getattr(self, "_last_started", None) is not None:
-            self._recovered_on_start = False
-        if action in tl.DATA_ACTIONS and self._pre_commit_hook is None \
-                and not getattr(self, "_recovering", False) \
-                and not getattr(self, "_recovered_on_start", False):
-            self._recovering = True
-            try:
-                self._recover_dangling()
-                self._recovered_on_start = True
-            finally:
-                self._recovering = False
+            # once per table instance, like the reference (rollback-on-start
+            # happens at WRITE-CLIENT init, not per commit — a live writer's
+            # own COMPLETED batches can't be crash debris, and under
+            # single-writer mode nobody else writes); saves a timeline
+            # listing + metadata reads on every steady-state batch.  A data
+            # write that STARTED but never completed on this instance
+            # (exception after _start) IS debris, so _last_started re-arms
+            # recovery for the next write.
+            if self._last_started is not None:
+                self._recovered_on_start = False
+            if self._pre_commit_hook is None and not self._recovering \
+                    and not self._recovered_on_start:
+                self._recovering = True
+                try:
+                    self._recover_dangling()
+                    self._recovered_on_start = True
+                finally:
+                    self._recovering = False
         # atomic cross-process claim: two writers minting the same
         # millisecond can never share an instant (timeline.claim_instant)
         ins = self.timeline.claim_instant(action)
-        if action in tl.DATA_ACTIONS and not getattr(self, "_recovering", False):
+        if action in tl.DATA_ACTIONS and not self._recovering:
             self._last_started = ins.time
         return self.timeline.transition_to_inflight(ins)
 
@@ -409,18 +500,17 @@ class HudiTable:
             "total_bytes_written": sum(s.size for s in stats),
             "extra": dict(extra or {}),
         }
+        guard = nullcontext()
         if self._pre_commit_hook is not None:
             touched = {(s.partition, s.file_group) for s in stats}
             touched |= {tuple(x) for x in (replaced or [])}
-            with self._pre_commit_hook(instant.time, touched):
-                done = self.timeline.transition_to_completed(instant, md,
-                                                             completed_action)
-        else:
+            guard = self._pre_commit_hook(instant.time, touched)
+        with guard:
             done = self.timeline.transition_to_completed(instant, md,
                                                          completed_action)
-        if getattr(self, "_last_started", None) == instant.time:
+        if self._last_started == instant.time:
             self._last_started = None    # batch completed — not debris
-        for cb in getattr(self, "_commit_callbacks", []):
+        for cb in self._commit_callbacks:
             cb(done.time, md)  # HoodieWriteCommitCallback equivalent
         return done
 
@@ -455,18 +545,9 @@ class HudiTable:
         new files to target; GLOBAL_SORT default → key-sorted files whose
         min/max ranges make the BLOOM-style index prune hard.  ``_combine``
         overrides ``combine_before_insert`` (the prepped variant)."""
-        instant = self._start(tl.COMMIT)
-        combine = (self.cfg.combine_before_insert if _combine is None
-                   else _combine)
-        prepared = self._prepare(df, instant.time, combine)
-        stats, fg_map, schema = self._write_inserts(
-            prepared, instant.time, pack_small_files=False,
-            sort_mode=sort_mode or self.cfg.bulk_insert_sort_mode,
-            profile_df=self._keyed_profile(df, combine))
-        self._complete(instant, BULK_INSERT, stats, schema,
-                       extra=commit_extras)
-        self._post_commit()
-        return instant.time
+        return self._insert(
+            df, BULK_INSERT, commit_extras, _combine, pack_small_files=False,
+            sort_mode=sort_mode or self.cfg.bulk_insert_sort_mode)
 
     def insert(self, df: DataFrame,
                commit_extras: Optional[dict] = None,
@@ -476,39 +557,42 @@ class HudiTable:
         routing: duplicate keys are *not* merged (reference semantics).
         ``_combine`` overrides ``combine_before_insert`` (the prepped
         variant)."""
-        instant = self._start(tl.COMMIT)
-        combine = (self.cfg.combine_before_insert if _combine is None
-                   else _combine)
-        prepared = self._prepare(df, instant.time, combine)
-        stats, fg_map, schema = self._write_inserts(
-            prepared, instant.time,
+        return self._insert(
+            df, INSERT, commit_extras, _combine,
             pack_small_files=(self.tc.table_type == COPY_ON_WRITE),
-            sort_mode=SORT_PARTITION,
-            profile_df=self._keyed_profile(df, combine))
-        self._complete(instant, INSERT, stats, schema, extra=commit_extras)
-        self._post_commit()
-        return instant.time
+            sort_mode=SORT_PARTITION)
 
-    def _write_inserts(self, prepared: DataFrame, instant_time: str,
+    def _insert(self, df: DataFrame, operation: str,
+                commit_extras: Optional[dict], combine: Optional[bool],
+                **write_kw) -> str:
+        if combine is None:
+            combine = self.cfg.combine_before_insert
+        with self._commit(tl.COMMIT, operation, extra=commit_extras) as op:
+            op.stats, op.schema = self._write_inserts(
+                op, self._prepare(df, op.instant.time, combine),
+                profile_df=self._keyed_profile(df, combine), **write_kw)
+        return op.instant.time
+
+    def _write_inserts(self, op: _CommitOp, prepared: DataFrame,
                        pack_small_files: bool, sort_mode: str,
-                       action_view: Optional[FileSystemView] = None,
                        profile_df: Optional[DataFrame] = None,
                        combine_in_write: bool = False,
-                       seed_key_index: bool = False,
-                       frozen_fgs: Optional[set] = None):
+                       seed_key_index: bool = False):
         """Shared insert path: profile → bucket plan → assign → write.
-        Packed small file groups are rewritten (old ∪ new) — COW semantics.
+        Returns ``(stats, schema)``.
+        Packed small file groups are rewritten (old ∪ new) — COW semantics;
+        groups frozen by a pending clustering plan are never packed.
         ``profile_df``: cheaper pre-combine frame to count (same partitions,
         counts ≥ the written rows — bucket sizing is statistical anyway).
         ``combine_in_write``: caller skipped preCombine; fold it into the
         write shuffle (one exchange total — see precombine_dedup_in_bucket).
         Requires non-global keys; disabled when small-file packing unions
         stored rows (those must not dedup against the batch)."""
-        view = action_view if action_view is not None else self.view()
         # validate evolution on the raw batch BEFORE any union coerces types
-        self._commit_schema(prepared)
+        self._commit_schema(prepared, op.active)
         rec_size = avg_record_size(self.meta, self.timeline,
-                                   self.cfg.record_size_estimate)
+                                   self.cfg.record_size_estimate,
+                                   active=op.active)
         # GLOBAL_SORT all-new-bucket loads (bulk_insert / insert_overwrite*)
         # fold the range-split key sampling AND split-point selection into
         # the profile aggregation: the driver collects O(buckets) split
@@ -526,14 +610,14 @@ class HudiTable:
         else:
             profile = {r[0]: r[1] for r in
                        src.groupBy(META_PARTITION_PATH).count().collect()}
-        if frozen_fgs is None and pack_small_files:
+        if pack_small_files:
             from .services.clustering import pending_clustering_fgs
-            frozen_fgs = set(pending_clustering_fgs(self))
-        plan = plan_insert_buckets(profile, view if pack_small_files else None,
-                                   self.cfg, rec_size,
-                                   pack_small_files=pack_small_files,
-                                   exclude_fgs=frozen_fgs
-                                   if pack_small_files else None)
+            plan = plan_insert_buckets(
+                profile, op.view, self.cfg, rec_size,
+                exclude_fgs=set(pending_clustering_fgs(self, op.active)))
+        else:
+            plan = plan_insert_buckets(profile, None, self.cfg, rec_size,
+                                       pack_small_files=False)
         # GLOBAL_SORT into all-new buckets (bulk loads): assign by key RANGE
         # (sampled split points) instead of key hash — each written file then
         # owns a disjoint key interval, so manifest min/max stats make the
@@ -567,11 +651,12 @@ class HudiTable:
             # stored rows must NOT dedup against the batch (insert keeps
             # duplicate twins) — union after the fused dedup; the union
             # breaks the clustering, so the write re-exchanges below
-            old = self._read_fg_files(view, {b.file_group for b in packed})
+            old = self._read_fg_files(op.view, {b.file_group for b in packed},
+                                      active=op.active)
             assigned = old.unionByName(assigned, allowMissingColumns=True)
 
         sort_cols = self._sort_cols(sort_mode)
-        schema = self._commit_schema(assigned)
+        schema = self._commit_schema(assigned, op.active)
         # INMEMORY index bootstrap: a write into an EMPTY table IS the whole
         # table, so the write frame's (key, partition, fg) columns are the
         # key index (the reference likewise feeds write locations back,
@@ -580,15 +665,15 @@ class HudiTable:
         # pays off when the next op is another upsert, not on bulk loads.
         seed_index = (seed_key_index
                       and self._index_cache_on
-                      and not view.latest_slices())
+                      and not op.view.latest_slices())
         if seed_index:
             assigned = assigned.persist()
         if combine_in_write and not packed:
             stats = write_instant_files(
-                assigned, self.meta, instant_time, fg_map, self.cfg,
+                assigned, self.meta, op.instant.time, fg_map, self.cfg,
                 sort_cols=[FG] + (sort_cols or []), pre_partitioned=True)
         else:
-            stats = write_instant_files(assigned, self.meta, instant_time,
+            stats = write_instant_files(assigned, self.meta, op.instant.time,
                                         fg_map, self.cfg,
                                         sort_cols=sort_cols)
         if seed_index:
@@ -606,8 +691,8 @@ class HudiTable:
             self._key_index_parts = {b.partition for b in plan}
             # commit not completed yet — the caller revalidates the sentinel
             # into a real token right after its _complete()
-            self._key_index_valid_token = ("pending", instant_time)
-        return stats, fg_map, schema
+            self._key_index_valid_token = ("pending", op.instant.time)
+        return stats, schema
 
     def _sort_cols(self, sort_mode: str) -> Optional[list[str]]:
         if sort_mode == SORT_GLOBAL:
@@ -671,39 +756,25 @@ class HudiTable:
         is_delete = operation == DELETE
         action = (tl.DELTA_COMMIT if self.tc.table_type == MERGE_ON_READ
                   else tl.COMMIT)
-        instant = self._start(action)
-        prepared = self._prepare(df, instant.time, combine=combine)
-        # THE batch's single active-timeline listing (shared by the schema
-        # check, the validity token, the pending sets, and the view below)
-        active = self.timeline.instants()
-        # validate evolution on the raw batch BEFORE any union coerces types
-        self._commit_schema(prepared, active)
-        try:
-            # ONE active-timeline listing per batch: the cache-validity
-            # token, the pending-compaction set, and the file-system view
-            # are all derived from this single snapshot, so token ≡ view
-            # state by construction — no capture-ordering argument between
-            # them, and no stability re-check.  A daemon commit landing
-            # after this listing is invisible to ALL THREE consistently;
-            # the next batch's fresh listing sees it and over-invalidates
-            # the cache (safe direction).
-            tok0 = (self._data_instants_token(active)
-                    if self._index_cache_on else None)
-            pending_compaction = self._pending_compactions(active)
-            # file groups frozen by a scheduled clustering plan:
-            # updates/deletes that touch them are rejected
-            # (SparkRejectUpdateStrategy) — checked exactly against the
-            # tagged batch in each lane
-            from .services.clustering import pending_clustering_fgs
-            frozen_fgs = set(pending_clustering_fgs(self, active))
-            view = self.view(active_instants=active)
-            slices = view.latest_slices()
+        with self._commit(action, operation, extra=commit_extras) as op:
+            prepared = self._prepare(df, op.instant.time, combine=combine)
+            # validate evolution on the raw batch BEFORE any union coerces
+            # types
+            self._commit_schema(prepared, op.active)
+            # the cache-validity token, the pending-compaction and frozen-
+            # group sets and the file-system view all derive from op's one
+            # listing, so token ≡ view state by construction.  A daemon
+            # commit landing after it is invisible to all of them
+            # consistently; the next batch's listing sees it and
+            # over-invalidates the cache (safe direction).
+            slices = op.view.latest_slices()
             if self._index_cache_on and self._key_index is not None:
-                if self._token_still_valid(self._key_index_valid_token, tok0):
+                if self._token_still_valid(self._key_index_valid_token,
+                                           op.token):
                     # archival-only shrink keeps the cache; re-stamp so the
                     # equality checks in the lanes and the own-commit
-                    # extension below all work from tok0
-                    self._key_index_valid_token = tok0
+                    # extension all work from op.token
+                    self._key_index_valid_token = op.token
                 else:
                     self._invalidate_key_index()
             if not is_delete and not slices:
@@ -716,60 +787,31 @@ class HudiTable:
                 from .indexing import is_global
                 fuse = combine and not is_global(self.cfg.index_type)
                 if fuse:
-                    prepared = self._prepare(df, instant.time, combine=False)
-                stats, _, schema = self._write_inserts(
-                    prepared, instant.time,
+                    prepared = self._prepare(df, op.instant.time,
+                                             combine=False)
+                op.stats, op.schema = self._write_inserts(
+                    op, prepared,
                     pack_small_files=(self.tc.table_type == COPY_ON_WRITE),
-                    sort_mode=SORT_PARTITION, action_view=view,
+                    sort_mode=SORT_PARTITION,
                     profile_df=self._keyed_profile(df, combine and not fuse),
-                    combine_in_write=fuse,
-                    seed_key_index=True, frozen_fgs=frozen_fgs)
+                    combine_in_write=fuse, seed_key_index=True)
                 # the index _write_inserts seeded from this very commit's
                 # write frame holds exactly the pre-write table plus our
                 # own commit
-                keep_index = (self._key_index_valid_token
-                              == ("pending", instant.time))
+                op.keep_index = (self._key_index_valid_token
+                                 == ("pending", op.instant.time))
             else:
-                stats, schema, wrote_inserts = self._write_batch(
-                    view, slices, instant.time, prepared, is_delete, combine,
-                    tok0, active, frozen_fgs, pending_compaction)
+                try:
+                    op.stats, op.schema, wrote_inserts = self._write_batch(
+                        op, slices, prepared, is_delete, combine)
+                finally:
+                    prepared.unpersist()      # _write_batch persists it
                 # an update-only commit rewrites/appends WITHIN existing
                 # file groups — every cached location stays correct, so the
                 # cache survives its own commit
-                keep_index = (not is_delete and not wrote_inserts
-                              and self._key_index is not None)
-            self._complete(instant, operation, stats, schema,
-                           extra=commit_extras)
-            self._restamp_key_index(tok0, instant.time, keep_index)
-        except _ClusteringConflict:
-            # nothing was written — drop the started instant instead of
-            # leaving crash debris for rollback-on-open
-            for st in (tl.REQUESTED, tl.INFLIGHT):
-                self.timeline.delete_instant(
-                    tl.Instant(instant.time, action, st))
-            if getattr(self, "_last_started", None) == instant.time:
-                self._last_started = None    # cleaned up here — not debris
-            raise
-        finally:
-            if prepared.is_cached:
-                prepared.unpersist()
-        self._post_commit()
-        return instant.time
-
-    def _restamp_key_index(self, token: Optional[frozenset],
-                           instant_time: str, keep: bool) -> None:
-        """Post-commit key-index bookkeeping.  ``keep``: the commit left
-        every cached location correct.  The cache is then stamped with the
-        PRE-write token plus our own instant, never a fresh listing: a
-        daemon commit that completed DURING the write stays missing from
-        the token, so the next batch invalidates instead of trusting a
-        cache that never saw it."""
-        if not self._index_cache_on:
-            return
-        if keep:
-            self._key_index_valid_token = token | {instant_time}
-        else:
-            self._invalidate_key_index()
+                op.keep_index = (not is_delete and not wrote_inserts
+                                 and self._key_index is not None)
+        return op.instant.time
 
     def _pending_compactions(self, active: list) -> dict[str, str]:
         """file group → newest pending compaction instant, from the SAME
@@ -778,8 +820,6 @@ class HudiTable:
         the view's latest slice IS its new base.  (A mixed read order loses
         writes: stale view base + empty pending → orphaned log.)"""
         pending: dict[str, str] = {}
-        if self.tc.table_type != MERGE_ON_READ:
-            return pending
         for p in tl.pending_from(active):
             if p.action != tl.COMPACTION:
                 continue
@@ -811,10 +851,8 @@ class HudiTable:
                 pending[fg] = max(pending.get(fg, ""), p.time)
         return pending
 
-    def _write_batch(self, view: FileSystemView, slices: list,
-                     instant_time: str, prepared: DataFrame, is_delete: bool,
-                     combine: bool, token: Optional[frozenset], active: list,
-                     frozen_fgs: set, pending_compaction: dict[str, str]):
+    def _write_batch(self, op: _CommitOp, slices: list, prepared: DataFrame,
+                     is_delete: bool, combine: bool):
         """Tag, route and write a batch into a non-empty table.  Returns
         ``(stats, schema, wrote_inserts)``.  COW takes one of three shapes
         of the tag → profile → route → merge chain
@@ -833,9 +871,16 @@ class HudiTable:
         MOR batches are tagged here and append deltas (_upsert_mor_fast).
         Nothing here is a setting: the shape follows from the table, the
         payload, the batch size against ``INDEX_BROADCAST_MAX_ROWS``, and
-        the previous batch's spread."""
+        the previous batch's spread.
+
+        Updates and deletes into file groups a scheduled clustering plan
+        froze are rejected (SparkRejectUpdateStrategy), checked exactly
+        against the tagged batch in each shape."""
         from .indexing import is_global
+        from .services.clustering import pending_clustering_fgs
         cap = INDEX_BROADCAST_MAX_ROWS
+        view = op.view
+        frozen_fgs = set(pending_clustering_fgs(self, op.active))
         prof, n_batch = None, None
         # every lane reads prepared more than once (profile or size probe,
         # the tagging join's broadcast probe and stream side, the write)
@@ -846,15 +891,14 @@ class HudiTable:
                 and combine
                 and not any(f.external for sl in slices
                             for f in sl.base_files)):
-            prof, n_batch = self._probe_fast_lane(view, prepared, token)
+            prof, n_batch = self._probe_fast_lane(op, prepared)
             if prof is not None and n_batch <= cap:
-                return self._upsert_cow_fast(
-                    view, instant_time, prepared, prof, is_delete,
-                    frozen_fgs=frozen_fgs, token=token, active=active)
+                return self._upsert_cow_fast(op, prepared, prof, is_delete,
+                                             frozen_fgs)
             # the warm pinned index takes the exact tag below; a batch too
             # large to broadcast takes the window merge
         if (self._index_cache_on and self._key_index is not None
-                and self._key_index_valid_token == token
+                and self._key_index_valid_token == op.token
                 and set(view.partitions()) <= self._key_index_parts):
             # a warm cached index (INMEMORY or SIMPLE) covering every
             # table partition makes the pre-tag workload profile
@@ -868,7 +912,7 @@ class HudiTable:
             # workload profile (whose only use here is picking which
             # partitions to load) is pure overhead
             index_df = self._load_index(
-                view, sorted(view.partitions()), None, token)
+                view, sorted(view.partitions()), None, op.token)
         else:
             # workload profile (BaseSparkCommitActionExecutor.java:122-127)
             # + key range for BLOOM-style pruning; reused from the fast-lane
@@ -878,7 +922,7 @@ class HudiTable:
             key_range = ((min(r[2] for r in prof), max(r[3] for r in prof))
                          if prof else None)
             index_df = self._load_index(view, [r[0] for r in prof],
-                                        key_range, token)
+                                        key_range, op.token)
             n_batch = sum(r[1] for r in prof)
         if n_batch is None:
             # broadcast-size guard: a cold first batch can be arbitrarily
@@ -906,9 +950,8 @@ class HudiTable:
                 update_partition_path=upp,
             ).dropDuplicates([uid, FG_COL]).drop(uid)
         if self.tc.table_type == MERGE_ON_READ:
-            return self._upsert_mor_fast(
-                view, slices, instant_time, tagged, pending_compaction,
-                is_delete, frozen_fgs, active)
+            return self._upsert_mor_fast(op, slices, tagged, is_delete,
+                                         frozen_fgs)
         tagged = tagged.persist()
         try:
             update_fgs, insert_counts = self._tag_profile(tagged, frozen_fgs,
@@ -919,13 +962,11 @@ class HudiTable:
                 # move into a delete there plus an insert), so the incoming
                 # keys would miss the stored row that must die
                 return self._route_rewrite(
-                    view, instant_time, tagged,
-                    tagged.selectExpr(*map(sql_ident, MERGE_KEY)),
-                    update_fgs, insert_counts, is_delete, active)
+                    op, tagged, tagged.selectExpr(*map(sql_ident, MERGE_KEY)),
+                    update_fgs, insert_counts, is_delete)
             updates, inserts = self._split_tagged(tagged, is_delete)
-            stats, schema = self._upsert_cow(
-                view, instant_time, updates, inserts, update_fgs,
-                insert_counts, frozen_fgs, active)
+            stats, schema = self._upsert_cow(op, updates, inserts, update_fgs,
+                                             insert_counts, frozen_fgs)
             return stats, schema, bool(insert_counts)
         finally:
             tagged.unpersist()
@@ -945,8 +986,7 @@ class HudiTable:
             {r[0]: r[2] for r in rows if r[1] is None}
         return update_fgs, insert_counts
 
-    def _probe_fast_lane(self, view: FileSystemView, prepared: DataFrame,
-                         token: Optional[frozenset]):
+    def _probe_fast_lane(self, op: _CommitOp, prepared: DataFrame):
         """The COW fast lane's pre-write action, chosen per batch from the
         previous batch's spread.  Returns ``(profile rows or None, batch
         rows)``; the row count is capped at cap+1 by the warm probe.  Both
@@ -966,11 +1006,11 @@ class HudiTable:
           write job and the rewrite set is the manifest-stats superset,
           which is cheaper when every group is touched anyway."""
         cap = INDEX_BROADCAST_MAX_ROWS
-        n_last = getattr(self, "_last_batch_keys", None)
+        n_last = self._last_batch_keys
         warm = (n_last is not None and self._index_cache_on
                 and self._key_index is not None
-                and self._key_index_valid_token == token
-                and n_last < 0.5 * max(1, view.group_count()))
+                and self._key_index_valid_token == op.token
+                and n_last < 0.5 * max(1, op.view.group_count()))
         self._last_probe_mode = "warm_tag" if warm else "profile"
         if warm:
             n_probe = prepared.limit(cap + 1).count()
@@ -1052,9 +1092,9 @@ class HudiTable:
                      and self.tc.precombine_field)
                     or self.tc.payload == PAYLOAD_OVERWRITE_NON_DEFAULTS)
 
-    def _anti_join_rewrite(self, view: FileSystemView, instant_time: str,
-                           fresh: DataFrame, batch_keys: DataFrame,
-                           rewrite_fgs: set, fg_map: dict, active: list):
+    def _anti_join_rewrite(self, op: _CommitOp, fresh: DataFrame,
+                           batch_keys: DataFrame, rewrite_fgs: set,
+                           fg_map: dict):
         """Shared COW broadcast anti-join rewrite kernel: stored rows of the
         rewrite set pass through IN THEIR SCAN PARTITIONS minus the batch's
         keys (broadcast LEFT ANTI — the table side never shuffles); only the
@@ -1065,11 +1105,11 @@ class HudiTable:
         ``fresh`` comes shaped for the write (``_route``)."""
         parts = []
         if rewrite_fgs:
-            old = self._read_fg_files(view, rewrite_fgs, active=active)
+            old = self._read_fg_files(op.view, rewrite_fgs, active=op.active)
             parts.append(drop_deleted(
                 old.join(F.broadcast(batch_keys), on=MERGE_KEY,
                          how="left_anti")))
-        rewrite_slices = [sl for sl in view.latest_slices()
+        rewrite_slices = [sl for sl in op.view.latest_slices()
                           if sl.file_group in rewrite_fgs]
         rewrite_bytes = sum(sl.base_size + sl.log_size
                             for sl in rewrite_slices)
@@ -1110,18 +1150,16 @@ class HudiTable:
             merged = p.unionByName(merged, allowMissingColumns=True)
         if respread:
             merged = merged.repartition(n_buckets, FG)
-        schema = self._commit_schema(merged, active)
-        stats = write_instant_files(merged, self.meta, instant_time, fg_map,
-                                    self.cfg,
+        schema = self._commit_schema(merged, op.active)
+        stats = write_instant_files(merged, self.meta, op.instant.time,
+                                    fg_map, self.cfg,
                                     sort_cols=[FG, META_RECORD_KEY],
                                     pre_partitioned=True,
                                     ensure_fgs=rewrite_fgs)
         return stats, schema
 
-    def _upsert_cow_fast(self, view: FileSystemView, instant_time: str,
-                         prepared: DataFrame, prof: list,
-                         is_delete: bool, frozen_fgs: set,
-                         token: Optional[frozenset], active: list):
+    def _upsert_cow_fast(self, op: _CommitOp, prepared: DataFrame, prof: list,
+                         is_delete: bool, frozen_fgs: set):
         """COW fused-profile lane, the steady-state writer shape at 100 TB:
         scan only the touched slice set, broadcast the batch key set for the
         anti-join, zero full-table shuffles, one file per touched group.
@@ -1131,13 +1169,13 @@ class HudiTable:
         touched groups (_stats_rewrite_set); exact routing happens through
         the index join, fused into the write job.  The per-partition batch
         counts bound the inserts from above."""
-        fg_map, bloom_fgs = self._stats_rewrite_set(view, prof, prepared)
+        fg_map, bloom_fgs = self._stats_rewrite_set(op.view, prof, prepared)
         insert_counts = {r[0]: r[1] for r in prof}
         mns = [r[2] for r in prof if r[2] is not None]
         mxs = [r[3] for r in prof if r[3] is not None]
         key_range = (min(mns), max(mxs)) if mns else None
-        index_df = self._load_index(view, sorted(insert_counts), key_range,
-                                    token, only_fgs=bloom_fgs)
+        index_df = self._load_index(op.view, sorted(insert_counts), key_range,
+                                    op.token, only_fgs=bloom_fgs)
         # tagged stays UNPERSISTED in this shape: the routing consumes it
         # exactly once (a single coalesce projection), so the whole tag
         # pipeline — broadcast the batch, semi-prune the index scan,
@@ -1164,17 +1202,15 @@ class HudiTable:
             # drops one exchange+aggregate pair from the broadcast build
             # (the hash build collapses duplicates anyway)
             return self._route_rewrite(
-                view, instant_time, tagged,
-                prepared.selectExpr(*map(sql_ident, MERGE_KEY)),
-                fg_map, insert_counts, is_delete, active)
+                op, tagged, prepared.selectExpr(*map(sql_ident, MERGE_KEY)),
+                fg_map, insert_counts, is_delete)
         finally:
             if tagged.is_cached:
                 tagged.unpersist()
 
-    def _route_rewrite(self, view: FileSystemView, instant_time: str,
-                       tagged: DataFrame, batch_keys: DataFrame,
-                       fg_map: dict[str, str], insert_counts: dict[str, int],
-                       is_delete: bool, active: list):
+    def _route_rewrite(self, op: _CommitOp, tagged: DataFrame,
+                       batch_keys: DataFrame, fg_map: dict[str, str],
+                       insert_counts: dict[str, int], is_delete: bool):
         """Route a tagged batch and write it through the anti-join rewrite
         (the fused-profile and exact-tag shapes).  ``fg_map`` is the
         rewrite set ({file group: partition}), ``insert_counts`` sizes the
@@ -1194,8 +1230,8 @@ class HudiTable:
         else:
             rec_size = avg_record_size(self.meta, self.timeline,
                                        self.cfg.record_size_estimate,
-                                       active=active)
-            plan = plan_insert_buckets(insert_counts, view, self.cfg,
+                                       active=op.active)
+            plan = plan_insert_buckets(insert_counts, op.view, self.cfg,
                                        rec_size, pack_small_files=False)
             fg_map = {**fg_map, **{b.file_group: b.partition for b in plan}}
             parts = [b.partition for b in plan]
@@ -1218,9 +1254,8 @@ class HudiTable:
                 fresh = self._route(
                     updates.unionByName(assigned, allowMissingColumns=True),
                     FG)
-        stats, schema = self._anti_join_rewrite(
-            view, instant_time, fresh, batch_keys, rewrite_fgs, fg_map,
-            active=active)
+        stats, schema = self._anti_join_rewrite(op, fresh, batch_keys,
+                                                rewrite_fgs, fg_map)
         return stats, schema, any(s.file_group not in rewrite_fgs
                                   for s in stats)
 
@@ -1258,10 +1293,9 @@ class HudiTable:
                 bloom_fgs = {sl.file_group for sl in rewrite}
         return {sl.file_group: sl.partition for sl in rewrite}, bloom_fgs
 
-    def _upsert_cow(self, view: FileSystemView, instant_time: str,
-                    updates: DataFrame, inserts: DataFrame,
-                    update_fgs: dict[str, str], insert_profile: dict[str, int],
-                    frozen_fgs: set, active: list):
+    def _upsert_cow(self, op: _CommitOp, updates: DataFrame,
+                    inserts: DataFrame, update_fgs: dict[str, str],
+                    insert_profile: dict[str, int], frozen_fgs: set):
         """COW window merge: rewrite exactly the affected file groups, old ∪
         new → per-file-group latest-wins window → write, one shuffle keyed
         by file group.  The shape for batches too large to broadcast,
@@ -1269,8 +1303,8 @@ class HudiTable:
         inserts pack small file groups.  Returns ``(stats, schema)``."""
         rec_size = avg_record_size(self.meta, self.timeline,
                                    self.cfg.record_size_estimate,
-                                   active=active)
-        plan = plan_insert_buckets(insert_profile, view, self.cfg, rec_size,
+                                   active=op.active)
+        plan = plan_insert_buckets(insert_profile, op.view, self.cfg, rec_size,
                                    pack_small_files=True,
                                    exclude_fgs=frozen_fgs)
         assigned = assign_insert_buckets(self.spark, inserts, plan,
@@ -1283,7 +1317,7 @@ class HudiTable:
         rewrite_fgs = set(update_fgs) | {b.file_group for b in plan if not b.is_new_fg}
 
         if rewrite_fgs:
-            old = self._read_fg_files(view, rewrite_fgs, active=active) \
+            old = self._read_fg_files(op.view, rewrite_fgs, active=op.active) \
                       .withColumn(NEW_FLAG, F.lit(False))
             merged = old.unionByName(new_rows, allowMissingColumns=True)
         else:
@@ -1298,22 +1332,22 @@ class HudiTable:
         merged = merge_latest(merged, self.tc, bucket_col=FG)
         merged = drop_deleted(merged).drop(API_DELETE)
         merged = merged.withColumn(META_FILE_NAME, F.col(FG))
-        schema = self._commit_schema(merged, active)
-        stats = write_instant_files(merged, self.meta, instant_time, fg_map,
-                                    self.cfg, sort_cols=[META_RECORD_KEY],
+        schema = self._commit_schema(merged, op.active)
+        stats = write_instant_files(merged, self.meta, op.instant.time,
+                                    fg_map, self.cfg,
+                                    sort_cols=[META_RECORD_KEY],
                                     pre_partitioned=True,
                                     ensure_fgs=rewrite_fgs)
         return stats, schema
 
-    def _mor_write_new_fgs(self, inserts: DataFrame,
-                           insert_profile: dict[str, int], instant_time: str,
-                           active: list):
+    def _mor_write_new_fgs(self, op: _CommitOp, inserts: DataFrame,
+                           insert_profile: dict[str, int]):
         """MOR insert rows → brand-new base file groups (never packed into
         existing groups — logs may only attach to bases the engine owns the
         full key-set of).  Returns ``(stats, schema)``."""
         rec_size = avg_record_size(self.meta, self.timeline,
                                    self.cfg.record_size_estimate,
-                                   active=active)
+                                   active=op.active)
         plan = plan_insert_buckets(insert_profile, None, self.cfg, rec_size,
                                    pack_small_files=False)
         assigned = assign_insert_buckets(self.spark, inserts, plan,
@@ -1321,17 +1355,15 @@ class HudiTable:
                                          META_RECORD_KEY, FG)
         assigned = assigned.drop(API_DELETE) \
                            .withColumn(META_FILE_NAME, F.col(FG))
-        schema = self._commit_schema(assigned, active)
+        schema = self._commit_schema(assigned, op.active)
         fg_map = {b.file_group: b.partition for b in plan}
-        stats = write_instant_files(assigned, self.meta, instant_time,
+        stats = write_instant_files(assigned, self.meta, op.instant.time,
                                     fg_map, self.cfg,
                                     sort_cols=[META_RECORD_KEY])
         return stats, schema
 
-    def _upsert_mor_fast(self, view: FileSystemView, slices: list,
-                         instant_time: str, tagged: DataFrame,
-                         pending_compaction: dict[str, str],
-                         is_delete: bool, frozen_fgs: set, active: list):
+    def _upsert_mor_fast(self, op: _CommitOp, slices: list, tagged: DataFrame,
+                         is_delete: bool, frozen_fgs: set):
         """MOR upsert: updates/deletes append delta rows to their file
         group's latest slice (HoodieAppendHandle.java:71,336-390 — parquet
         can't append, so the batch writes a few shared delta files that
@@ -1352,6 +1384,7 @@ class HudiTable:
         can't attach to a file the engine doesn't own the layout of.  While
         the table has such groups, one per-(partition, group) tag profile
         names the hit ones and sizes the inserts."""
+        pending_compaction = self._pending_compactions(op.active)
         ext_fgs = {sl.file_group for sl in slices
                    if any(f.external for f in sl.base_files)}
         tag_obs = None
@@ -1382,10 +1415,8 @@ class HudiTable:
                                if fg in ext_fgs}
                 if ext_updates:
                     stats, schema = self._upsert_cow(
-                        view, instant_time,
-                        updates.filter(F.col(FG).isin(*ext_updates)),
-                        inserts.limit(0), ext_updates, {}, frozen_fgs,
-                        active)
+                        op, updates.filter(F.col(FG).isin(*ext_updates)),
+                        inserts.limit(0), ext_updates, {}, frozen_fgs)
                     updates = updates.filter(~F.col(FG).isin(*ext_updates))
                 write_deltas = len(update_fgs) > len(ext_updates)
             else:
@@ -1400,10 +1431,10 @@ class HudiTable:
                 for fg, ctime in pending_compaction.items():
                     base_of[fg] = max(base_of.get(fg) or "", ctime)
                 upd = updates.withColumn(META_FILE_NAME, F.col(FG))
-                schema = self._commit_schema(upd, active)
+                schema = self._commit_schema(upd, op.active)
                 from .writer import write_grouped_log_files
                 delta = write_grouped_log_files(
-                    upd, self.meta, instant_time,
+                    upd, self.meta, op.instant.time,
                     {sl.file_group: sl.partition for sl in slices},
                     base_of, compression=self.cfg.parquet_compression)
                 stats += delta
@@ -1427,11 +1458,11 @@ class HudiTable:
                                       inserts.groupBy(META_PARTITION_PATH)
                                       .count().collect()}
                 if insert_profile:
-                    s, schema = self._mor_write_new_fgs(
-                        inserts, insert_profile, instant_time, active)
+                    s, schema = self._mor_write_new_fgs(op, inserts,
+                                                        insert_profile)
                     stats += s
             if schema is None:
-                schema = self.stored_schema(active)
+                schema = self.stored_schema(op.active)
             return stats, schema, bool(insert_profile)
         finally:
             tagged.unpersist()
@@ -1442,34 +1473,32 @@ class HudiTable:
         """Atomically replace only the partitions present in the input
         (SparkInsertOverwriteCommitActionExecutor — replacecommit, NOT Spark's
         mode=overwrite)."""
-        instant = self._start(tl.REPLACE_COMMIT)
-        prepared = self._prepare(df, instant.time, self.cfg.combine_before_insert)
-        view = self.view()
-        parts = [r[0] for r in prepared.select(META_PARTITION_PATH).distinct().collect()]
-        replaced = [(sl.partition, sl.file_group)
-                    for sl in view.latest_slices(parts)]
-        stats, fg_map, schema = self._write_inserts(
-            prepared, instant.time, pack_small_files=False,
-            sort_mode=self.cfg.bulk_insert_sort_mode, action_view=view)
-        self._complete(instant, INSERT_OVERWRITE, stats, schema,
-                       replaced=replaced, extra=commit_extras)
-        self._post_commit()
-        return instant.time
+        with self._commit(tl.REPLACE_COMMIT, INSERT_OVERWRITE,
+                          extra=commit_extras) as op:
+            prepared = self._prepare(df, op.instant.time,
+                                     self.cfg.combine_before_insert)
+            parts = [r[0] for r in
+                     prepared.select(META_PARTITION_PATH).distinct().collect()]
+            op.replaced = [(sl.partition, sl.file_group)
+                           for sl in op.view.latest_slices(parts)]
+            op.stats, op.schema = self._write_inserts(
+                op, prepared, pack_small_files=False,
+                sort_mode=self.cfg.bulk_insert_sort_mode)
+        return op.instant.time
 
     def insert_overwrite_table(self, df: DataFrame,
                                commit_extras: Optional[dict] = None) -> str:
         """Replace every partition (SparkInsertOverwriteTableCommitActionExecutor)."""
-        instant = self._start(tl.REPLACE_COMMIT)
-        prepared = self._prepare(df, instant.time, self.cfg.combine_before_insert)
-        view = self.view()
-        replaced = [(sl.partition, sl.file_group) for sl in view.latest_slices()]
-        stats, fg_map, schema = self._write_inserts(
-            prepared, instant.time, pack_small_files=False,
-            sort_mode=self.cfg.bulk_insert_sort_mode, action_view=view)
-        self._complete(instant, INSERT_OVERWRITE_TABLE, stats, schema,
-                       replaced=replaced, extra=commit_extras)
-        self._post_commit()
-        return instant.time
+        with self._commit(tl.REPLACE_COMMIT, INSERT_OVERWRITE_TABLE,
+                          extra=commit_extras) as op:
+            prepared = self._prepare(df, op.instant.time,
+                                     self.cfg.combine_before_insert)
+            op.replaced = [(sl.partition, sl.file_group)
+                           for sl in op.view.latest_slices()]
+            op.stats, op.schema = self._write_inserts(
+                op, prepared, pack_small_files=False,
+                sort_mode=self.cfg.bulk_insert_sort_mode)
+        return op.instant.time
 
     # ------------------------------------------------------------------
     # schema commands (§2.6 AlterHoodieTable*Command equivalents)
@@ -1485,10 +1514,10 @@ class HudiTable:
         clash = {f.name for f in new_fields} & {f.name for f in cur.fields}
         if clash:
             raise ValueError(f"columns already exist: {sorted(clash)}")
-        instant = self._start(tl.COMMIT)
-        self._complete(instant, "alter_add_columns", [],
-                       StructType(list(cur.fields) + list(new_fields)))
-        return instant.time
+        with self._commit(tl.COMMIT, "alter_add_columns",
+                          post_commit=False) as op:
+            op.schema = StructType(list(cur.fields) + list(new_fields))
+        return op.instant.time
 
     def change_column(self, name: str, new_type_ddl: str) -> str:
         """ALTER TABLE CHANGE COLUMN (AlterHoodieTableChangeColumnCommand):
@@ -1512,9 +1541,10 @@ class HudiTable:
                 f"{old_t.simpleString()} -> {new_t.simpleString()}")
         fields = [StructField(f.name, new_t if f.name == name else f.dataType,
                               f.nullable) for f in cur.fields]
-        instant = self._start(tl.COMMIT)
-        self._complete(instant, "alter_change_column", [], StructType(fields))
-        return instant.time
+        with self._commit(tl.COMMIT, "alter_change_column",
+                          post_commit=False) as op:
+            op.schema = StructType(fields)
+        return op.instant.time
 
     def rename_table(self, new_name: str) -> None:
         """AlterHoodieTableRenameCommand: table name lives in table config."""
@@ -1525,26 +1555,21 @@ class HudiTable:
         """TRUNCATE TABLE (TruncateHoodieTableCommand.scala): drop every file
         group via one replacecommit — metadata survives, the cleaner reclaims
         the files once out of retention."""
-        instant = self._start(tl.REPLACE_COMMIT)
-        replaced = [(sl.partition, sl.file_group)
-                    for sl in self.view().latest_slices()]
-        self._complete(instant, "truncate", [], self.stored_schema(),
-                       replaced=replaced)
-        self._post_commit()
-        return instant.time
+        return self._drop_file_groups("truncate", None)
 
     def delete_partitions(self, partitions: Sequence[str]) -> str:
         """Logical partition drop via replacecommit
         (SparkDeletePartitionCommitActionExecutor) — readers skip the replaced
         file groups immediately; the cleaner reclaims files later."""
-        instant = self._start(tl.REPLACE_COMMIT)
-        view = self.view()
-        replaced = [(sl.partition, sl.file_group)
-                    for sl in view.latest_slices(partitions)]
-        self._complete(instant, DELETE_PARTITION, [], self.stored_schema(),
-                       replaced=replaced)
-        self._post_commit()
-        return instant.time
+        return self._drop_file_groups(DELETE_PARTITION, partitions)
+
+    def _drop_file_groups(self, operation: str,
+                          partitions: Optional[Sequence[str]]) -> str:
+        with self._commit(tl.REPLACE_COMMIT, operation) as op:
+            op.replaced = [(sl.partition, sl.file_group)
+                           for sl in op.view.latest_slices(partitions)]
+            op.schema = self.stored_schema(op.active)
+        return op.instant.time
 
     def bootstrap(self, source_path: str, mode: str = "full_record") -> str:
         """Adopt an existing parquet dataset
@@ -1585,24 +1610,23 @@ class HudiTable:
                  .groupBy("_hoodie_src_file")
                  .agg(F.collect_set(META_PARTITION_PATH).alias("parts"),
                       F.count(F.lit(1)).alias("n")).collect())
-        instant = self._start(tl.COMMIT)
-        stats = []
-        for r in fp:
-            if len(r["parts"]) != 1:
-                raise ValueError(
-                    f"{r['_hoodie_src_file']} spans partitions {r['parts']}; "
-                    "use mode='full_record'")
-            path = r["_hoodie_src_file"]
-            stats.append(WriteStat(
-                partition=r["parts"][0], file_group=new_fg_id(),
-                path=os.path.abspath(path), size=os.path.getsize(path),
-                num_records=r["n"], base_instant=instant.time, external=True))
         meta_fields = [StructField(c, StringType()) for c in META_COLUMNS]
-        schema = self._evolve(self.stored_schema(),
-                              StructType(meta_fields + list(src.schema.fields)))
-        self._complete(instant, "bootstrap", stats, schema)
-        self._post_commit()
-        return instant.time
+        with self._commit(tl.COMMIT, "bootstrap") as op:
+            for r in fp:
+                if len(r["parts"]) != 1:
+                    raise ValueError(
+                        f"{r['_hoodie_src_file']} spans partitions "
+                        f"{r['parts']}; use mode='full_record'")
+                path = r["_hoodie_src_file"]
+                op.stats.append(WriteStat(
+                    partition=r["parts"][0], file_group=new_fg_id(),
+                    path=os.path.abspath(path), size=os.path.getsize(path),
+                    num_records=r["n"], base_instant=op.instant.time,
+                    external=True))
+            op.schema = self._evolve(
+                self.stored_schema(op.active),
+                StructType(meta_fields + list(src.schema.fields)))
+        return op.instant.time
 
     def filter_exists(self, df: DataFrame) -> DataFrame:
         """Keep only records NOT already in the table
@@ -1893,7 +1917,7 @@ class HudiTable:
         # read.  Persist — bounded by the gate above — so one scan feeds
         # every subtree; a one-slot cache unpersists the previous read's.
         logs = logs.persist()
-        prev = getattr(self, "_mor_log_persist", None)
+        prev = self._mor_log_persist
         if prev is not None and prev is not logs:
             try:
                 prev.unpersist()
